@@ -17,6 +17,11 @@ import graft.streaming.ChatLog
   * method takes the bearer token and binds the verified identity into
   * the plan exactly where the reference binds `g.email`.
   *
+  * Upload and chat open only the caller's store directory
+  * ([[ChunkStore.openUser]]) and delete touches only the caller's
+  * (user, source) directory, all read with the store's pinned schema —
+  * a route's cost follows the caller's data, not the whole store.
+  *
   * `now` is injected (epoch seconds) so token issue/expiry and chat-log
   * timestamps are deterministic under test.
   */
@@ -47,12 +52,9 @@ final class Engine(spark: SparkSession, storeDir: String, chatLogDir: String,
           "use StreamingIngest for bulk loads")
       val batch = files.toDF("path", "content").withColumn("user", lit(user))
       // the dedup key is (user, file_hash) with user fixed to the caller,
-      // so only the caller's partitions can match — scope the store side
-      // to them and the gate prunes to one tenant's directories
-      val store =
-        if (ChunkStore.isEmpty(spark, storeDir)) None
-        else Some(ChunkStore.userScoped(ChunkStore.load(spark, storeDir), user))
-      val result = IngestPipeline.ingest(spark, batch, store)
+      // so only the caller's partitions can match — open only the caller's
+      // directory as the gate's store side
+      val result = IngestPipeline.ingest(spark, batch, ChunkStore.openUser(spark, storeDir, user))
       try {
         // Materialize outcomes BEFORE the append: the dedup join re-reads
         // the store on evaluation, and an evaluation after the append
@@ -81,15 +83,15 @@ final class Engine(spark: SparkSession, storeDir: String, chatLogDir: String,
   }
 
   /** POST /chat — retrieve top-13 for the question WITHIN the caller's
-    * tenant (fixing app.py:409's cross-user leakage), assemble the
+    * tenant (fixing app.py:409's cross-user leakage; Rag.retrieve's user
+    * filter stays as a second guard over the tenant open), assemble the
     * grounded prompt, append the chat log through the streaming sink.
     * The LLM completion itself is an external boundary; the prompt is
     * the engine's product. */
   def chat(token: String, question: String): Either[Jwt.AuthError, String] =
     authed(token) { user =>
-      val p =
-        if (ChunkStore.isEmpty(spark, storeDir)) Rag.prompt(question, "")
-        else Rag.ask(ChunkStore.load(spark, storeDir), question, user)
+      val p = ChunkStore.openUser(spark, storeDir, user)
+        .fold(Rag.prompt(question, ""))(Rag.ask(_, question, user))
       ChatLog.append(spark, chatLogDir, user, question, p, now() * 1000000L)
       // flush for read-your-write facade semantics; production leaves the
       // relay draining asynchronously

@@ -106,6 +106,11 @@ object MarkovAttr {
        |FROM rec r JOIN last l ON l.scenario = r.scenario AND l.li = r.iter""".stripMargin
   }
 
+  /** Iteration bound for [[fixpointLocal]]: the bounded-integer fixpoint
+    * converges in tens of steps; a matrix that does not is rejected
+    * loudly instead of spinning the driver. */
+  val FixpointMaxIters = 10000
+
   /** Driver-local twin of [[fixpointSql]] over the COLLECTED matrix rows
     * (r17, guide §1.2): the fixpoint's whole state is 5 scenario rows ×
     * 30 bounded integer columns — scenario count is fixed by the event
@@ -129,6 +134,8 @@ object MarkovAttr {
       var iter = 0
       var changed = true
       while (changed) {
+        require(iter < FixpointMaxIters,
+          s"markov fixpoint did not converge in $FixpointMaxIters iterations")
         val np = pTags.map(step(_, p))
         changed = np != p
         if (changed) { p = np; iter += 1 }

@@ -31,7 +31,11 @@ object SurfaceQueries {
     // are the measured local defaults — r17 re-probed 8 and 16 shards:
     // both strictly worse, taskMs grows superlinearly with shard count
     // on the tiny per-batch state, so 4 stands)
-    val eff = sys.env.get("SPARK_GRAFT_STREAM_SHARDS").map(_.toInt).getOrElse(n)
+    val eff = sys.env.get("SPARK_GRAFT_STREAM_SHARDS").map { v =>
+      val shards = v.trim.toIntOption.filter(_ > 0)
+      require(shards.isDefined, s"SPARK_GRAFT_STREAM_SHARDS must be a positive integer, got '$v'")
+      shards.get
+    }.getOrElse(n)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", eff.toString)
     try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)

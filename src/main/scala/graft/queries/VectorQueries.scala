@@ -194,6 +194,9 @@ object VectorQueries {
       .persist() // read by iters+1 jobs; released by the harness clearCache
     var cents: Seq[(Long, Seq[Long])] = emb.filter(col("vec_id") < k)
       .as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1)
+    // an empty centroid literal would make array_min null and assign every
+    // row to a null cluster
+    require(cents.nonEmpty, "kmeans needs at least one initial centroid (empty embeddings input)")
     var lastAssign: DataFrame = null
     for (_ <- 1 to iters) {
       // r17 (guide §2.4 remove shuffles outright): assignment used to be

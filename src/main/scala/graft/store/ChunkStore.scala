@@ -2,8 +2,12 @@ package graft.store
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.ingest.ChunkRow
 
 /** Persistent chunk store — the engine's durable table, replacing the
   * reference's Chroma collection (/root/reference/app.py:70-79). Parquet,
@@ -23,6 +27,11 @@ import org.apache.spark.sql.functions._
   * and the recursive delete keep working unchanged. Upgrade path to
   * in-place mutation (tombstones, upserts) is a Delta/Iceberg table
   * format — out of scope per SURVEY.md §7.4 risk 6.
+  *
+  * Every read uses the fixed [[schema]], so no read runs a parquet
+  * footer-inference job. The facade's routes open one tenant's directory
+  * ([[openUser]]) and delete one (user, source) directory, so their cost
+  * follows that tenant's data, never the whole store's listing.
   */
 object ChunkStore {
 
@@ -91,25 +100,49 @@ object ChunkStore {
       m.get("text_bytes").collect { case b: Long => b }.getOrElse(0L))
   }
 
+  /** The store's read schema, pinned from [[ChunkRow]]. Partition values
+    * of `user`/`source` are read as strings (never type-inferred), and a
+    * partition level outside it (a skew store's `bucket`) is still
+    * discovered from the paths. Columns come out as the data columns, then
+    * `user, source[, bucket]`. */
+  val schema: StructType = Encoders.product[ChunkRow].schema
+
+  /** The whole store (every tenant). Lists every partition directory. */
   def load(spark: SparkSession, path: String): DataFrame = {
     recover(spark, path)
-    spark.read.option("basePath", path).parquet(path)
+    read(spark, path, new Path(path))
+  }
+
+  /** One tenant's rows, read from its `user=` directory alone — no walk or
+    * listing of other tenants' data. `None` when the tenant has no data
+    * file (new tenant, or every file deleted). */
+  def openUser(spark: SparkSession, path: String, user: String): Option[DataFrame] = {
+    recover(spark, path)
+    val dir = new Path(path, s"user=${escapePathName(user)}")
+    if (hasDataFile(spark, dir)) Some(read(spark, path, dir)) else None
+  }
+
+  private def read(spark: SparkSession, path: String, dir: Path): DataFrame =
+    spark.read.schema(schema).option("basePath", path).parquet(dir.toString)
+
+  /** True when `dir` holds a parquet file anywhere below it. Short-circuits
+    * on the first one found. */
+  private def hasDataFile(spark: SparkSession, dir: Path): Boolean = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) return false
+    val it = fs.listFiles(dir, true)
+    while (it.hasNext) {
+      if (it.next().getPath.getName.endsWith(".parquet")) return true
+    }
+    false
   }
 
   /** True when the store has no data: missing directory OR a directory
-    * with no parquet files left — the delete-everything state (only
-    * _SUCCESS markers remain) would otherwise pass the existence check
-    * and then fail schema inference inside load(). Short-circuits on the
-    * first data file found. */
+    * with no parquet files left (the delete-everything state, where only
+    * _SUCCESS markers remain). Short-circuits on the first data file. */
   def isEmpty(spark: SparkSession, path: String): Boolean = {
     recover(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path))) return true
-    val it = fs.listFiles(new Path(path), true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) return false
-    }
-    true
+    !hasDataFile(spark, new Path(path))
   }
 
   /** Crash recovery for [[compact]]'s two-rename swap: if a crash landed
@@ -130,13 +163,9 @@ object ChunkStore {
     }
   }
 
-  /** Collection count (reference startup log, app.py:79). A store whose
-    * partitions were all deleted has no data files to infer a schema from —
-    * that is simply count 0. */
+  /** Collection count (reference startup log, app.py:79). */
   def count(spark: SparkSession, path: String): Long =
-    if (isEmpty(spark, path)) 0L
-    else try load(spark, path).count()
-    catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+    if (isEmpty(spark, path)) 0L else load(spark, path).count()
 
   /** Mandatory tenancy filter for retrieval (SURVEY.md X5): partition
     * pruning makes this a directory-level skip, not a row scan. */
@@ -204,19 +233,17 @@ object ChunkStore {
     * only because its whole store is global; with per-user retrieval a
     * same-named file of another tenant must survive. Partition values are
     * Hive-escaped exactly as Spark wrote them (a literal `source=<raw>`
-    * path would miss any filename containing %, #, = …). Returns the
-    * number of deleted rows (0 = the reference's "No vectors found"). */
+    * path would miss any filename containing %, #, = …). Only that one
+    * directory is checked and counted. Returns the number of deleted rows
+    * (0 = the reference's "No vectors found"). */
   def deleteBySource(spark: SparkSession, path: String, user: String, source: String): Long = {
-    if (isEmpty(spark, path)) return 0L
-    val store = load(spark, path)
-    val target = source.toLowerCase
-    val n = store.filter(col("user") === user && col("source") === target).count()
-    if (n > 0) {
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
-      val srcDir = new Path(path, s"user=${esc(user)}/source=${esc(target)}")
-      if (fs.exists(srcDir)) fs.delete(srcDir, true)
-    }
+    recover(spark, path)
+    val srcDir = new Path(path,
+      s"user=${escapePathName(user)}/source=${escapePathName(source.toLowerCase)}")
+    if (!hasDataFile(spark, srcDir)) return 0L
+    // a map-only count of the zero-column scan: one job, no shuffle stage
+    val n = read(spark, path, srcDir).select().rdd.count()
+    if (n > 0) srcDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(srcDir, true)
     n
   }
 }

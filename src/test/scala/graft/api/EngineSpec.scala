@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 
 import graft.SparkSpec
 import graft.auth.Jwt
+import graft.rag.Rag
+import graft.store.ChunkStore
 
 /** End-to-end journey through the facade — the complete reference
   * workflow (login → upload → chat → delete) with the behaviors the
@@ -105,5 +107,41 @@ class EngineSpec extends SparkSpec {
     assert(log.count() == 3, "restart must neither duplicate nor drop turns")
     assert(log.select("question").distinct().count() == 3)
     e2.shutdown()
+  }
+
+  test("a tenant with no files gets the empty-context prompt while others hold data") {
+    val storeDir = tmpDir("engine").toString + "/chunks"
+    val chatDir = tmpDir("engine").toString + "/chat"
+    val engine = new Engine(spark, storeDir, chatDir, "s3cret", () => 1700000000L)
+    val alice = engine.login("alice@x.com")
+    val carol = engine.login("carol@z.com")
+    engine.upload(alice, Seq("/up/a.txt" -> bytes("alice's private notes " + ("pad " * 40)))).toOption.get
+    assert(ChunkStore.openUser(spark, storeDir, "carol@z.com").isEmpty)
+    val q = "what are alice's notes?"
+    assert(engine.chat(carol, q).toOption.get == Rag.prompt(q, ""))
+    val up = engine.upload(carol, Seq("/up/a.txt" -> bytes("carol's first file " + ("pad " * 40)))).toOption.get
+    assert(up.select("status").as[String].collect().toSeq == Seq("ok"))
+    val own = engine.chat(carol, q).toOption.get
+    assert(own.contains("carol's first file") && !own.contains("alice's private notes"))
+  }
+
+  test("a tenant id needing Hive path escaping round-trips upload, chat and delete") {
+    val storeDir = tmpDir("engine").toString + "/chunks"
+    val chatDir = tmpDir("engine").toString + "/chat"
+    val engine = new Engine(spark, storeDir, chatDir, "s3cret", () => 1700000000L)
+    val odd = engine.login("o%x=y/z@ex.com")
+    val plain = engine.login("plain@ex.com")
+    engine.upload(plain, Seq("/up/doc.txt" -> bytes("plain tenant text " + ("pad " * 40)))).toOption.get
+    val before = engine.count()
+    val up = engine.upload(odd, Seq(
+      "/up/doc.txt" -> bytes("the escaped tenant's warranty is ninety days " + ("pad " * 300)))).toOption.get
+    val (status, nChunks) = up.select("status", "n_chunks").as[(String, Int)].head()
+    assert(status == "ok" && nChunks > 1)
+    assert(engine.count() == before + nChunks)
+    val answer = engine.chat(odd, "what is the warranty?").toOption.get
+    assert(answer.contains("ninety days") && !answer.contains("plain tenant"))
+    assert(engine.delete(odd, "doc.txt").toOption.get == nChunks)
+    assert(engine.count() == before)
+    assert(engine.chat(odd, "anything left?").toOption.get == Rag.prompt("anything left?", ""))
   }
 }

@@ -2,6 +2,10 @@ package graft.store
 
 import java.nio.charset.StandardCharsets
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.JobCount
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+
 import graft.SparkSpec
 import graft.ingest.IngestPipeline
 
@@ -45,6 +49,9 @@ class ChunkStoreSpec extends SparkSpec {
     assert(ChunkStore.userScoped(ChunkStore.load(spark, dir), "b@y.com").count() == 1)
     // unknown filename: 0 deleted ("No vectors found")
     assert(ChunkStore.deleteBySource(spark, dir, "a@x.com", "missing.txt") == 0L)
+    // another tenant's file is out of reach: 0 deleted, the file stays
+    assert(ChunkStore.deleteBySource(spark, dir, "b@y.com", "keep.txt") == 0L)
+    assert(ChunkStore.openUser(spark, dir, "a@x.com").get.count() == b1.chunks.count())
   }
 
   test("compact rewrites many small appends into one file per partition, same rows") {
@@ -105,6 +112,13 @@ class ChunkStoreSpec extends SparkSpec {
     assert(!ChunkStore.isEmpty(spark, dir))
     assert(ChunkStore.count(spark, dir) == total)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".precompact")))
+    // the tenant open and the delete restore it too
+    def crash() = assert(fs.rename(new Path(dir), new Path(dir + ".precompact")))
+    crash()
+    assert(ChunkStore.openUser(spark, dir, "a@x.com").map(_.count()).contains(total))
+    crash()
+    assert(ChunkStore.deleteBySource(spark, dir, "a@x.com", "a.txt") == total)
+    assert(!fs.exists(new Path(dir + ".precompact")))
   }
 
   test("skew-bucketed store: same rows, pruning intact, delete and compact still work") {
@@ -152,6 +166,11 @@ class ChunkStoreSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("fork the directory schema"))
 
+    // the tenant open keeps the bucket level beside the pinned schema
+    val own = ChunkStore.openUser(spark, dir, "whale@x.com").get
+    assert(own.columns.takeRight(3).toSeq == Seq("user", "source", "bucket"))
+    assert(own.count() == 2 * big.chunks.count())
+
     // compact preserves the bucket level; delete drops the whole tenant file
     ChunkStore.compact(spark, dir)
     assert(fs.listStatus(whaleDir).exists(_.getPath.getName.startsWith("bucket=")))
@@ -166,5 +185,49 @@ class ChunkStoreSpec extends SparkSpec {
     ChunkStore.append(b.chunks, dir)
     assert(ChunkStore.deleteBySource(spark, dir, "a@x.com", "100%done.txt") == 1L)
     assert(ChunkStore.count(spark, dir) == 0L)
+  }
+
+  test("openUser reads one tenant with the pinned schema; a tenant with no files is None") {
+    val dir = tmpDir("store").toString + "/chunks"
+    val a = ingestOne("/up/one.txt", "a@x.com", (1 to 300).map(i => s"w$i").mkString(" "))
+    val b = ingestOne("/up/two.txt", "b@y.com", "short doc")
+    ChunkStore.append(a.chunks, dir)
+    ChunkStore.append(b.chunks, dir)
+    // other tenants hold data, this one none: no store to open
+    assert(ChunkStore.openUser(spark, dir, "new@z.com").isEmpty)
+    val own = ChunkStore.openUser(spark, dir, "a@x.com").get
+    assert(own.count() == a.chunks.count())
+    assert(own.select("user").distinct().as[String].collect().toSeq == Seq("a@x.com"))
+    // the pinned schema is exactly what footer inference would find:
+    // data columns first, then the partition columns
+    val inferred = spark.read.option("basePath", dir).parquet(dir).schema
+    def shape(st: org.apache.spark.sql.types.StructType) =
+      st.fields.map(f => f.name -> f.dataType.simpleString).toSeq
+    assert(shape(ChunkStore.load(spark, dir).schema) == shape(inferred))
+    assert(shape(own.schema) == shape(inferred))
+    assert(own.columns.takeRight(2).toSeq == Seq("user", "source"))
+  }
+
+  test("a tenant open runs no Spark job and a delete runs one (no listing or schema job)") {
+    val dir = tmpDir("store").toString + "/chunks"
+    // 20 files for the tenant: below the 32-path parallel-listing threshold
+    (1 to 20).foreach { i =>
+      ChunkStore.append(ingestOne(s"/up/f$i.txt", "a@x.com", s"document number $i").chunks, dir)
+    }
+    ChunkStore.append(ingestOne("/up/other.txt", "b@y.com", "another tenant").chunks, dir)
+    val sc = spark.sparkContext
+    val (opened, openJobs) = JobCount.of(sc)(ChunkStore.openUser(spark, dir, "a@x.com"))
+    assert(opened.isDefined)
+    assert(openJobs == 0, s"openUser ran $openJobs Spark jobs")
+    val (deleted, deleteJobs) =
+      JobCount.of(sc)(ChunkStore.deleteBySource(spark, dir, "a@x.com", "f7.txt"))
+    assert(deleted == 1L)
+    assert(deleteJobs == 1, s"deleteBySource ran $deleteJobs Spark jobs")
+    // the counter sees the job a schema-inferring open of the same
+    // directory runs — the job the pinned schema removes
+    val userDir = new Path(dir, s"user=${escapePathName("a@x.com")}").toString
+    val (_, inferJobs) =
+      JobCount.of(sc)(spark.read.option("basePath", dir).parquet(userDir))
+    assert(inferJobs >= 1, "schema inference ran no job: the counter is blind")
   }
 }
