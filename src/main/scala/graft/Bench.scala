@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 1-minute loadavg of the host (Linux), or -1 where /proc is absent.
     * Recorded before/after the run and per query so a host-contaminated
@@ -64,22 +63,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", graft.core.GraftExtensions.Name)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r17 (guide §2.2 AQE coalescing): let AQE re-plan the partitioning
-      // of plans that feed .cache() — the default (false) pins every
-      // cached iterative frame (BFS/PageRank/k-core rounds) to the full
-      // shuffle.partitions count, paying cpus tasks per tiny per-round
-      // shuffle; with it on, AQE coalesces them by size (scale-adaptive:
-      // full partitions at warehouse scale are untouched). Measured:
-      // ppr_seeded 164 -> 41 tasks, taskMs halved, oracle-identical rows.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val loadStart = loadavg()
     val extStart = externalBusyCores()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev measurement probe (guide §1): time selected declared queries with
   * per-query Spark job/stage/task counts, under optional session-conf
   * overrides, so an optimization's effect on scheduling overhead is
@@ -17,7 +15,7 @@ import org.apache.spark.sql.SparkSession
 object DebugProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val (confArgs, names) = {
       var confs = List.empty[(String, String)]
       var qs = List.empty[String]
@@ -30,22 +28,9 @@ object DebugProbe {
       }
       (confs.reverse, qs.reverse)
     }
-    var b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", graft.core.GraftExtensions.Name)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r17 (guide §2.2 AQE coalescing): let AQE re-plan the partitioning
-      // of plans that feed .cache() — the default (false) pins every
-      // cached iterative frame (BFS/PageRank/k-core rounds) to the full
-      // shuffle.partitions count, paying cpus tasks per tiny per-round
-      // shuffle; with it on, AQE coalesces them by size (scale-adaptive:
-      // full partitions at warehouse scale are untouched). Measured:
-      // ppr_seeded 164 -> 41 tasks, taskMs halved, oracle-identical rows.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    confArgs.foreach { case (k, v) => b = b.config(k, v) }
-    val spark = b.getOrCreate()
+    val spark = confArgs.foldLeft(GraftSession.builder(cpus)) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong

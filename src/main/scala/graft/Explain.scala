@@ -1,7 +1,9 @@
 package graft
 
 /** Dev utility: print the formatted physical plan of selected declared
-  * queries, for scan-pushdown / broadcast / codegen-span review.
+  * queries, for scan-pushdown / broadcast / codegen-span review. It runs
+  * under [[GraftSession]], so the plans it prints carry the same rules
+  * and strategies the graded bench plans with.
   *
   * Usage: sbt "runMain graft.Explain [sfDir] [query ...]"
   */
@@ -9,12 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names; fn <- SparkEntry.queries.get(n)) {
       println(s"\n========== $n ==========")

@@ -86,21 +86,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_BASE", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", graft.core.GraftExtensions.Name)
-      .config("spark.sql.shuffle.partitions", "32")
-      // r17 (guide §2.2 AQE coalescing): let AQE re-plan the partitioning
-      // of plans that feed .cache() — the default (false) pins every
-      // cached iterative frame (BFS/PageRank/k-core rounds) to the full
-      // shuffle.partitions count, paying cpus tasks per tiny per-round
-      // shuffle; with it on, AQE coalesces them by size (scale-adaptive:
-      // full partitions at warehouse scale are untouched). Measured:
-      // ppr_seeded 164 -> 41 tasks, taskMs halved, oracle-identical rows.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val up = upsampleDir(base, factor)
     if (!new java.io.File(up, "documents.parquet").exists()) {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,22 +10,8 @@ object Verify {
       case Array(s, o)    => (s, o, Option.empty[Set[String]])
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", graft.core.GraftExtensions.Name)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r17 (guide §2.2 AQE coalescing): let AQE re-plan the partitioning
-      // of plans that feed .cache() — the default (false) pins every
-      // cached iterative frame (BFS/PageRank/k-core rounds) to the full
-      // shuffle.partitions count, paying cpus tasks per tiny per-round
-      // shuffle; with it on, AQE coalesces them by size (scale-adaptive:
-      // full partitions at warehouse scale are untouched). Measured:
-      // ppr_seeded 164 -> 41 tasks, taskMs halved, oracle-identical rows.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -1011,15 +1011,7 @@ object RelationalQueries {
   private[graft] def adamicAdarCore(e: DataFrame, hubCap: Int): DataFrame = {
     val hubs = e.groupBy(col("p")).agg(count(lit(1)).as("pd"))
       .filter(col("pd") > hubCap).select(col("p"))
-    // r17: EXPLICIT partition count on the self-join key. AQE sizes the
-    // post-shuffle stage by its INPUT bytes (~5 MB of int pairs ⇒ a few
-    // tasks), but this stage's work is the Σ deg² pair EXPANSION on the
-    // output side — AQE's one blind spot (guide §3 exploding joins;
-    // measured: 5 tasks × 1.1 s on 32 cores). An explicit repartition is
-    // exempt from AQE coalescing and both self-join sides inherit it, so
-    // the join adds no extra exchange.
     val kept = e.join(broadcast(hubs), Seq("p"), "left_anti")
-      .repartition(e.sparkSession.sparkContext.defaultParallelism, col("p"))
     // per-part hub discount: an e9 integer per DISTINCT degree value
     val pw = kept.groupBy(col("p")).agg(count(lit(1)).as("pd"))
       .filter(col("pd") >= 2)
@@ -1088,11 +1080,7 @@ object RelationalQueries {
   def linkPredictCore(e: DataFrame, hubCap: Int): DataFrame = {
     val hubs = e.groupBy(col("p")).agg(count(lit(1)).as("pd"))
       .filter(col("pd") > hubCap).select(col("p"))
-    // r17: explicit partition count on the exploding self-join key —
-    // the adamicAdarCore rationale (AQE sizes by input bytes, the work
-    // is the Σ deg² output side)
     val kept = e.join(broadcast(hubs), Seq("p"), "left_anti")
-      .repartition(e.sparkSession.sparkContext.defaultParallelism, col("p"))
     val deg = kept.groupBy(col("s")).agg(count(lit(1)).as("d"))
     val pairs = kept.as("a").join(kept.as("b"),
         col("a.p") === col("b.p") && col("a.s") < col("b.s"))

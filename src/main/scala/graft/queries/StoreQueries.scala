@@ -853,18 +853,7 @@ object StoreQueries {
     * that. At 100 TB the full recompute is the nightly job this
     * operator retires: every maintenance step above is bounded by the
     * DELTA, never the accumulated table. */
-  def ivmJoinView(spark: SparkSession, dir: String): DataFrame =
-    ivmJoinViewImpl(spark, dir, _ => ())
-
-  /** [[ivmJoinView]] with a per-leg tick callback — profiling seam. */
-  def ivmJoinViewProfiled(spark: SparkSession, dir: String,
-      tick: String => Unit): Long = {
-    val out = ivmJoinViewImpl(spark, dir, tick).count()
-    tick("final-read"); out
-  }
-
-  private def ivmJoinViewImpl(spark: SparkSession, dir: String,
-      tick: String => Unit): DataFrame = {
+  def ivmJoinView(spark: SparkSession, dir: String): DataFrame = {
     val factPath = scratch("ivmfact", dir)
     val dimPath = scratch("ivmdim", dir)
     val viewPath = scratch("ivmview", dir)
@@ -885,12 +874,10 @@ object StoreQueries {
     //    thereafter retires
     graft.store.Versioned.append(
       factSlice(col("day") < splitDay), factPath): Unit // F v1
-    tick("fact-v1-append")
     val checkpointed = graft.store.Versioned.currentVersion(factPath)
     graft.store.Versioned.append(
       ev.groupBy(col("user_id")).agg(min(col("event_type")).as("segment")),
       dimPath): Unit // D v1
-    tick("dim-v1-append")
     val dimDf = graft.store.Versioned.read(spark, dimPath)
     val v0 = graft.store.Versioned.read(spark, factPath)
       .groupBy(col("user_id"))
@@ -898,12 +885,10 @@ object StoreQueries {
       .join(dimDf, "user_id")
       .select(col("user_id"), col("n_purch"), col("rev_e2"), col("segment"))
     graft.store.Versioned.append(v0, viewPath): Unit
-    tick("view-materialize")
     // 2) fact batch 2 appends; the consumer reads ONLY the delta and
     //    monoid-adds into the view's resident rows for the delta's keys
     graft.store.Versioned.append(
       factSlice(col("day") >= splitDay), factPath): Unit // F v2
-    tick("fact-v2-append")
     val dF = graft.store.Versioned.changes(spark, factPath, checkpointed)
     val dAgg = dF.groupBy(col("user_id"))
       .agg(count(lit(1)).as("dn"), sum(col("v")).as("dv"))
@@ -924,7 +909,6 @@ object StoreQueries {
         coalesce(col("segment"), col("d_segment")).as("segment"))
     graft.store.Versioned.merge(spark, viewPath, upserts, Seq("user_id"),
       wholeRewriteBelowBytes = graft.store.Versioned.WholeRewriteBytes): Unit
-    tick("fact-delta-merge")
     // 3) dim-side delta: a segment reclassification merges into D. The
     //    view's reflection of it FOLDS into leg 4's maintenance merge
     //    below (one view rewrite serves both deltas — VERDICT r14 #4:
@@ -940,7 +924,6 @@ object StoreQueries {
     // is exactly the high-frequency small-delta op MoR exists for)
     graft.store.Versioned.updateWhereMor(spark, dimPath,
       col("user_id") % 7 === 0, Map("segment" -> lit("vip"))): Unit
-    tick("dim-merge")
     // 4) RETRACTION (VERDICT r13 #2): refunds land as a merge-on-read
     //    DELETE on the fact table; the consumer reads the ROW-LEVEL
     //    change feed — delete rows carry the pre-image — and the
@@ -950,9 +933,7 @@ object StoreQueries {
     val cp2 = graft.store.Versioned.currentVersion(factPath)
     graft.store.Versioned.deleteWhereMor(spark, factPath,
       col("event_id") % 11 === 0): Unit
-    tick("mor-delete")
     graft.store.Versioned.compact(spark, factPath): Unit // feed-silent
-    tick("compact")
     val cf = graft.store.Versioned.changeFeed(spark, factPath, cp2)
     val sign = when(col("_change_type") === "delete", -1L).otherwise(1L)
     // materialized once: the feed read (manifest walk + DV decode) backs
@@ -988,7 +969,6 @@ object StoreQueries {
     graft.store.Versioned.mergeWithDeletes(spark, viewPath, retracted,
       Seq("user_id"), deleteWhen = col("n_purch") === 0L,
       wholeRewriteBelowBytes = graft.store.Versioned.WholeRewriteBytes): Unit
-    tick("retraction-merge")
     graft.store.Versioned.read(spark, viewPath).orderBy(col("user_id"))
   }
 

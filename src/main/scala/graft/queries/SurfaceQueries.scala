@@ -24,47 +24,13 @@ object SurfaceQueries {
     * key cardinality/throughput, not to the batch shuffle default; the
     * fixture replays here carry tiny per-batch state, so a handful of
     * shards is the honest configuration (and the restore puts the batch
-    * default back before the rollup runs). */
+    * default back before the rollup runs). r17 re-probed 8 and 16
+    * shards: both strictly worse than 4 on the fixture replays. */
   private def withShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    // dev/ops override for shard-count experiments (scale-adaptive
-    // deployments size state shards per stream; the per-call constants
-    // are the measured local defaults — r17 re-probed 8 and 16 shards:
-    // both strictly worse, taskMs grows superlinearly with shard count
-    // on the tiny per-batch state, so 4 stands)
-    val eff = sys.env.get("SPARK_GRAFT_STREAM_SHARDS").map { v =>
-      val shards = v.trim.toIntOption.filter(_ > 0)
-      require(shards.isDefined, s"SPARK_GRAFT_STREAM_SHARDS must be a positive integer, got '$v'")
-      shards.get
-    }.getOrElse(n)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", eff.toString)
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
     try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
-
-  /** [[withShufflePartitions]] plus whole-stage codegen OFF for the
-    * duration — for the STATE-HEAVY micro-batch replays only (the
-    * stream-stream joins, the watermarked aggregation/dedup, the timer
-    * and upsert sinks). Structured Streaming replans every micro-batch
-    * and the state operators' eviction filters embed the CURRENT
-    * WATERMARK as a literal, so each batch's generated code is textually
-    * new: every batch Janino-recompiles every codegen stage while the
-    * other shards wait on the compile KeyLock (thread-dump-attributed,
-    * r17; ~300-800 ms per stage per batch). At replay batch sizes
-    * interpretation is strictly cheaper (measured: join_outer taskMs
-    * 9.0→7.0 s, late_audit 4.1→3.2 s, upsert 1.9→1.2 s); at production
-    * batch sizes codegen amortizes and wins — set
-    * SPARK_GRAFT_STREAM_CODEGEN=1 to restore it. The stateless relays
-    * (relay_rollup, static_enrich, dim_refresh, the V2/txn sinks) showed
-    * no effect and keep the default. */
-  private def withStatefulReplayConfs[T](spark: SparkSession, n: Int)(f: => T): T =
-    withShufflePartitions(spark, n) {
-      if (sys.env.get("SPARK_GRAFT_STREAM_CODEGEN").contains("1")) f
-      else {
-        val prev = spark.conf.get("spark.sql.codegen.wholeStage")
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        try f finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
-      }
-    }
 
   /** Staged streaming INPUT dirs, memoized per (session, fixture,
     * query): the landed source files are a deterministic pure function
@@ -303,7 +269,7 @@ object SurfaceQueries {
               .withColumn("ts", col("ts") + expr("interval 2 days"))), 100)
     }.resolve("landing")
     val out = s"$tmp/uniq"
-    withStatefulReplayConfs(spark, 4) {
+    withShufflePartitions(spark, 4) {
       val q = spark.readStream.schema(spark.read.parquet(landing.toString).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing.toString)
@@ -386,7 +352,7 @@ object SurfaceQueries {
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("purchase_id"))
     val out = s"$tmp/joined"
-    withStatefulReplayConfs(spark, 4) {
+    withShufflePartitions(spark, 4) {
       val q = p.join(s,
           col("p_user") === col("s_user") && col("s_ts") <= col("p_ts") &&
             col("s_ts") >= col("p_ts") - expr("INTERVAL 24 HOURS"), "left_outer")
@@ -466,7 +432,7 @@ object SurfaceQueries {
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("purchase_id"))
     val out = s"$tmp/joined"
-    withStatefulReplayConfs(spark, 4) {
+    withShufflePartitions(spark, 4) {
       val q = p.join(s,
           col("p_user") === col("s_user") && col("s_ts") <= col("p_ts") &&
             col("s_ts") >= col("p_ts") - expr("INTERVAL 24 HOURS"), "full_outer")
@@ -522,7 +488,7 @@ object SurfaceQueries {
       stage("odd.parquet", ev.filter(col("event_id") % 2 === 1), 200)
     }.resolve("landing")
     val table = java.nio.file.Files.createDirectory(tmp.resolve("state")).toString
-    withStatefulReplayConfs(spark, 4) {
+    withShufflePartitions(spark, 4) {
       val q = Streams.upsertStream(
         spark.readStream.schema(spark.read.parquet(landing.toString).schema)
           .option("maxFilesPerTrigger", 1).parquet(landing.toString),
@@ -701,7 +667,7 @@ object SurfaceQueries {
       stage("tail.parquet", ev.filter(day < lit("2024-01-05")), 100)
     }.resolve("landing")
     val table = tmp.resolve("windows").toString
-    withStatefulReplayConfs(spark, 4) {
+    withShufflePartitions(spark, 4) {
       val q = spark.readStream
         .schema(spark.read.parquet(landing.toString).schema)
         .option("maxFilesPerTrigger", 1)
@@ -805,7 +771,7 @@ object SurfaceQueries {
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStatefulReplayConfs(spark, 4) {
+    try withShufflePartitions(spark, 4) {
       val q = graft.streaming.Streams.inactivityAlerts(
           spark.readStream.schema(spark.read.parquet(landing.toString).schema)
             .option("maxFilesPerTrigger", 1)

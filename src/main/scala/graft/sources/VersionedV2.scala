@@ -1102,8 +1102,9 @@ private[sources] class VersionedReaderFactory extends PartitionReaderFactory {
     * uniformity). */
   override def supportColumnarReads(partition: InputPartition): Boolean = {
     val p = partition.asInstanceOf[VersionedFilePartition]
-    // -Dgraft.v2.columnar=off forces the row reader — the A/B lever the
-    // scan-path benchmark uses (and an escape hatch); default is ON
+    // -Dgraft.v2.columnar=off forces the row reader — the seam
+    // VersionedV2Spec uses to compare the columnar reader against the row
+    // reader (and an escape hatch); default is ON
     sys.props.get("graft.v2.columnar").forall(_ != "off") &&
     !p.emitEmptyRows && p.required.fields.forall(f =>
       f.name == VersionedV2.FileMetaCol || (f.dataType match {

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.functions.TinyTransformer
 import graft.queries.ScaleQueries
 
@@ -25,12 +23,7 @@ object TrainCheckpoint {
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
     val outDir = Paths.get("src/main/resources/graft/checkpoints")
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     dirs.foreach { dir =>
       val (corpus, slice) = ScaleQueries.ttCorpus(spark, dir)

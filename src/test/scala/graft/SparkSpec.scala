@@ -6,16 +6,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession + repo-local temp dirs for suites. */
+/** Shared local SparkSession (the engine's [[GraftSession]] policy) +
+  * repo-local temp dirs for suites. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", graft.core.GraftExtensions.Name)
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.builder(4).appName("graft-test").getOrCreate()
 
   def tmpDir(prefix: String): Path = {
     val base = Paths.get("target", "tmp")
