@@ -162,7 +162,7 @@ object ScaleBench {
         n
       },
       "nsw_build_search" -> { d =>
-        val g = Nsw.build(Tables.embeddings(spark, d))
+        val g = Nsw.build(Tables.embeddings(spark, d), maxLevel = 0)
         Nsw.search(g, queryVec(d), k = 13).count()
       },
       "bm25_postings" -> { d =>

@@ -1612,20 +1612,18 @@ object RelationalQueries {
     * ([[graft.plans.TopKPerGroup]] — the (c)-tier Catalyst extension:
     * logical pattern → SparkStrategy → custom SparkPlan): the query is
     * written as the ordinary row_number window + `rn <= 3` filter, the
-    * strategy (registered here via `experimental.extraStrategies`, or
-    * session-wide via GraftExtensions) plans it as one bounded heap per
-    * group — O(n log k) and no sort spill instead of WindowExec's full
-    * per-group sort. The query REQUIRES the custom exec in its own
+    * strategy (session-wide via GraftExtensions, which every
+    * GraftSession carries) plans it as one bounded heap per group —
+    * O(n log k) and no sort spill instead of WindowExec's full per-group
+    * sort. The query REQUIRES the custom exec in its own
     * physical plan and executes through it before returning, so the
     * oracle row genuinely exercises the operator (a strategy that
     * mis-ranks, drops a group, or mis-handles the exchange breaks the
     * hash match against the plain window replay). */
   def topkHeapExec(spark: SparkSession, dir: String): DataFrame = {
-    if (!spark.experimental.extraStrategies
-        .exists(_.isInstanceOf[graft.plans.TopKPerGroup.Strategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKPerGroup.Strategy(spark)
-    spark.conf.set(graft.plans.TopKPerGroup.EnabledKey, "true")
+    val key = graft.plans.TopKPerGroup.EnabledKey
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
     try {
       val df = Tables.orders(spark, dir)
         .filter(col("o_custkey") < 500)
@@ -1643,7 +1641,7 @@ object RelationalQueries {
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.toSeq.asJava, df.schema)
         .orderBy(col("o_custkey"), col("rn"))
-    } finally spark.conf.set(graft.plans.TopKPerGroup.EnabledKey, "false")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -54,41 +54,61 @@ object ScaleQueries {
             sampleCap = Int.MaxValue, allowUnboundedSample = true)
       })
 
-  /** Sharded NSW graph (Nsw) per (session, fixture dir), cached: both
-    * nsw_topk and nsw_precision beam-search the SAME persisted graph,
-    * as a serving deployment would. */
-  private val nswMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private def nswGraph(spark: SparkSession, dir: String): DataFrame =
-    nswMemo.getOrElseUpdate(
-      (org.apache.spark.sql.graftbridge.ColumnBridge.sessionUuid(spark), dir),
-      graft.scale.Nsw.build(Tables.embeddings(spark, dir), numShards = 4).cache())
+  /** Sharded graph (Nsw) per (session, fixture dir, maxLevel), cached:
+    * the nsw_* queries search the flat graph (`Flat`, maxLevel 0), the
+    * hnsw_* queries the layered one (`Layered`) — one builder for both,
+    * and every query of a family searches the SAME graph, as a serving
+    * deployment would. */
+  private val graphMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, String, Int), DataFrame]
+  private def graph(spark: SparkSession, dir: String, maxLevel: Int): DataFrame =
+    graphMemo.getOrElseUpdate(
+      (org.apache.spark.sql.graftbridge.ColumnBridge.sessionUuid(spark), dir, maxLevel),
+      graft.scale.Nsw.build(Tables.embeddings(spark, dir), maxLevel = maxLevel,
+        numShards = 4).cache())
+  private val Flat = 0
+  private val Layered = graft.scale.Nsw.DefaultMaxLevel
+
+  /** Embedding of vec_id 0, the single-query probe of the graph queries. */
+  private def vec0(spark: SparkSession, dir: String): Array[Float] =
+    Tables.embeddings(spark, dir).filter(col("vec_id") === 0).select(col("embedding"))
+      .head().getSeq[Float](0).toArray
+
+  /** Top-13 for the vec_id=0 query over `g` as (vec_id, dist_e4);
+    * `filtered` admits only label % 4 = 1 rows. */
+  private def graphTop13(spark: SparkSession, dir: String, g: DataFrame, ef: Int,
+      filtered: Boolean = false): DataFrame = {
+    val admitted =
+      if (!filtered) null
+      else Tables.embeddings(spark, dir).filter(col("label") % 4 === 1).select(col("vec_id"))
+    graft.scale.Nsw.search(g, vec0(spark, dir), k = 13, ef = ef, admitted = admitted)
+      .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
+  }
+
+  /** Batch top-5 join of the 30 query vectors vec_id < 30 as
+    * (q_id, rn, n_id, dist_e4). */
+  private def graphKnnJoin(spark: SparkSession, dir: String, maxLevel: Int,
+      ef: Int): DataFrame =
+    graft.scale.Nsw.knnJoin(graph(spark, dir, maxLevel),
+        Tables.embeddings(spark, dir).filter(col("vec_id") < 30), k = 5, ef = ef)
+      .select(col("q_id"), col("rn"), col("n_id"),
+        round(col("d") * 10000).cast("long").as("dist_e4"))
 
   /** NSW graph beam search: top-13 for the vec_id=0 query at working
     * beam width (ef=48). Rows-only headline (graph topology depends on
     * insertion geometry no SQL oracle can replay); NswSpec pins recall
     * vs exact ground truth and nsw_precision pins the identical
     * machinery exhaustively. */
-  def nswTopk(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
-    graft.scale.Nsw.search(nswGraph(spark, dir), q, k = 13, ef = 48)
-      .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
-  }
+  def nswTopk(spark: SparkSession, dir: String): DataFrame =
+    graphTop13(spark, dir, graph(spark, dir, Flat), ef = 48)
 
   /** NSW with an exhaustive beam (ef ≥ any shard size): NSW graphs are
     * connected by construction, so an unbounded beam visits every node
     * and the per-shard results merge to exact brute-force top-13 — the
     * whole build/link/prune/beam chain must reproduce it or the hash
     * breaks. Same oracle as ivf_precision. */
-  def nswPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
-    graft.scale.Nsw.search(nswGraph(spark, dir), q, k = 13, ef = Int.MaxValue)
-      .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
-  }
+  def nswPrecision(spark: SparkSession, dir: String): DataFrame =
+    graphTop13(spark, dir, graph(spark, dir, Flat), ef = Int.MaxValue)
 
   /** FILTERED graph search at the exact regime: the metadata predicate
     * (label % 4 = 1, the `ivf_filtered_precision` predicate — Chroma's
@@ -98,36 +118,14 @@ object ScaleQueries {
     * unbounded ef the result must equal brute force over the filtered
     * corpus — graph traversal THROUGH filtered-out nodes included, or
     * matching regions behind them go missing and the hash breaks. */
-  def nswFilteredPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
-    graft.scale.Nsw.search(nswGraph(spark, dir), q, k = 13, ef = Int.MaxValue,
-        admitted = emb.filter(col("label") % 4 === 1).select(col("vec_id")))
-      .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
-  }
+  def nswFilteredPrecision(spark: SparkSession, dir: String): DataFrame =
+    graphTop13(spark, dir, graph(spark, dir, Flat), ef = Int.MaxValue, filtered = true)
 
   /** [[nswFilteredPrecision]] through the HNSW hierarchy: descent stays
     * unfiltered navigation, the layer-0 beam admits only matching rows
     * — exhaustive beam ⇒ equality with filtered brute force. */
-  def hnswFilteredPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
-    graft.scale.Nsw.searchHnsw(hnswGraph(spark, dir), q, k = 13, ef = Int.MaxValue,
-        admitted = emb.filter(col("label") % 4 === 1).select(col("vec_id")))
-      .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
-  }
-
-  /** Sharded HNSW graph (hierarchical layers over the same guarded
-    * construction) per (session, dir), cached: hnsw_topk and
-    * hnsw_precision descend the SAME persisted hierarchy. */
-  private val hnswMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private def hnswGraph(spark: SparkSession, dir: String): DataFrame =
-    hnswMemo.getOrElseUpdate(
-      (org.apache.spark.sql.graftbridge.ColumnBridge.sessionUuid(spark), dir),
-      graft.scale.Nsw.buildHnsw(Tables.embeddings(spark, dir), numShards = 4).cache())
+  def hnswFilteredPrecision(spark: SparkSession, dir: String): DataFrame =
+    graphTop13(spark, dir, graph(spark, dir, Layered), ef = Int.MaxValue, filtered = true)
 
   /** HNSW beam search: top-13 for the vec_id=0 query at working beam
     * width (ef=48), entering through the layer hierarchy's top and
@@ -135,13 +133,8 @@ object ScaleQueries {
     * depends on insertion geometry no SQL oracle can replay); NswSpec
     * pins recall vs the flat graph and hnsw_precision pins the identical
     * machinery exhaustively. */
-  def hnswTopk(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
-    graft.scale.Nsw.searchHnsw(hnswGraph(spark, dir), q, k = 13, ef = 48)
-      .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
-  }
+  def hnswTopk(spark: SparkSession, dir: String): DataFrame =
+    graphTop13(spark, dir, graph(spark, dir, Layered), ef = 48)
 
   /** HNSW with an exhaustive layer-0 beam: the hierarchy only picks the
     * entry point, and layer 0 is connected by the guarded construction,
@@ -149,13 +142,8 @@ object ScaleQueries {
     * merge to exact brute-force top-13 — descent, layer assignment, and
     * the base graph must all compose correctly or the hash breaks. Same
     * oracle as nsw_precision. */
-  def hnswPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
-    graft.scale.Nsw.searchHnsw(hnswGraph(spark, dir), q, k = 13, ef = Int.MaxValue)
-      .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
-  }
+  def hnswPrecision(spark: SparkSession, dir: String): DataFrame =
+    graphTop13(spark, dir, graph(spark, dir, Layered), ef = Int.MaxValue)
 
   /** Batch k-NN join over the flat NSW shard graphs: 30 query vectors
     * fan out to every shard, each shard task rebuilds its graph once and
@@ -163,13 +151,8 @@ object ScaleQueries {
     * top-5 — the offline-eval shape of [[nswTopk]]. Rows-only headline;
     * NswSpec pins recall against the exact join and equality at an
     * unbounded beam. */
-  def nswKnnJoin(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    graft.scale.Nsw.knnJoin(nswGraph(spark, dir),
-        emb.filter(col("vec_id") < 30), k = 5, ef = 48)
-      .select(col("q_id"), col("rn"), col("n_id"),
-        round(col("d") * 10000).cast("long").as("dist_e4"))
-  }
+  def nswKnnJoin(spark: SparkSession, dir: String): DataFrame =
+    graphKnnJoin(spark, dir, Flat, ef = 48)
 
   /** The batch graph join at an UNBOUNDED beam: connected shard graphs
     * make every shard search exhaustive, so the distributed fan-out +
@@ -177,34 +160,19 @@ object ScaleQueries {
     * top-5 (self-matches at d = 0 included — the join's documented
     * identity) the oracle brute-forces — the driver-visible row for the
     * exactness NswSpec pins in-engine. */
-  def nswKnnJoinPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    graft.scale.Nsw.knnJoin(nswGraph(spark, dir),
-        emb.filter(col("vec_id") < 30), k = 5, ef = Int.MaxValue)
-      .select(col("q_id"), col("rn"), col("n_id"),
-        round(col("d") * 10000).cast("long").as("dist_e4"))
-  }
+  def nswKnnJoinPrecision(spark: SparkSession, dir: String): DataFrame =
+    graphKnnJoin(spark, dir, Flat, ef = Int.MaxValue)
 
   /** The layered twin: hierarchy descent + root-seeded layer-0 beam per
     * query, exhaustive at ef = ∞ — same oracle. */
-  def hnswKnnJoinPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    graft.scale.Nsw.knnJoinHnsw(hnswGraph(spark, dir),
-        emb.filter(col("vec_id") < 30), k = 5, ef = Int.MaxValue)
-      .select(col("q_id"), col("rn"), col("n_id"),
-        round(col("d") * 10000).cast("long").as("dist_e4"))
-  }
+  def hnswKnnJoinPrecision(spark: SparkSession, dir: String): DataFrame =
+    graphKnnJoin(spark, dir, Layered, ef = Int.MaxValue)
 
   /** The batch join driven by the HNSW hierarchy: same fan-out/merge as
     * [[nswKnnJoin]], per-query coarse-to-fine descent inside each shard.
     * Rows-only headline; NswSpec pins unbounded beam == exact join. */
-  def hnswKnnJoin(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    graft.scale.Nsw.knnJoinHnsw(hnswGraph(spark, dir),
-        emb.filter(col("vec_id") < 30), k = 5, ef = 48)
-      .select(col("q_id"), col("rn"), col("n_id"),
-        round(col("d") * 10000).cast("long").as("dist_e4"))
-  }
+  def hnswKnnJoin(spark: SparkSession, dir: String): DataFrame =
+    graphKnnJoin(spark, dir, Layered, ef = 48)
 
   /** Cell-keyed NSW graph (the IVF hybrid) per (session, dir), cached —
     * built over the SAME shared IVF index the ivf_* queries probe. */
@@ -220,11 +188,8 @@ object ScaleQueries {
     * an exhaustive rerank. Rows-only headline; NswSpec pins recall and
     * nswivf_precision pins the machinery exhaustively. */
   def nswIvfTopk(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
     val index = defaultIndex(spark, dir)
-    graft.scale.Nsw.searchPruned(nswIvfGraph(spark, dir), index.centroids, q,
+    graft.scale.Nsw.searchPruned(nswIvfGraph(spark, dir), index.centroids, vec0(spark, dir),
       k = 13, nprobe = 3, ef = 48)
       .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
   }
@@ -234,39 +199,27 @@ object ScaleQueries {
     * exhaustive — must equal brute-force top-13. Same oracle as
     * ivf_precision. */
   def nswIvfPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
     val index = defaultIndex(spark, dir)
-    graft.scale.Nsw.searchPruned(nswIvfGraph(spark, dir), index.centroids, q,
+    graft.scale.Nsw.searchPruned(nswIvfGraph(spark, dir), index.centroids, vec0(spark, dir),
       k = 13, nprobe = index.centroids.length, ef = Int.MaxValue)
       .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
   }
 
-  /** Incrementally-grown graphs: built on 80% of the corpus, then the
-    * remaining 20% (every 5th id — INTERLEAVED with resident ids, the
-    * hard case for insertion-order-sensitive structures) arrives as a CDC
-    * batch through [[graft.scale.Nsw.insert]]/[[graft.scale.Nsw.insertHnsw]].
-    * Memoized like the batch-built graphs. */
-  private val nswInsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private def nswInsertedGraph(spark: SparkSession, dir: String): DataFrame =
-    nswInsMemo.getOrElseUpdate(
-      (org.apache.spark.sql.graftbridge.ColumnBridge.sessionUuid(spark), dir), {
+  /** Incrementally-grown graph per (session, dir, maxLevel): built on 80%
+    * of the corpus, then the remaining 20% (every 5th id — INTERLEAVED
+    * with resident ids, the hard case for insertion-order-sensitive
+    * structures) arrives as a CDC batch through
+    * [[graft.scale.Nsw.insert]]. Memoized like the batch-built graphs. */
+  private val insertedMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, String, Int), DataFrame]
+  private def insertedGraph(spark: SparkSession, dir: String, maxLevel: Int): DataFrame =
+    insertedMemo.getOrElseUpdate(
+      (org.apache.spark.sql.graftbridge.ColumnBridge.sessionUuid(spark), dir, maxLevel), {
         val emb = Tables.embeddings(spark, dir)
         graft.scale.Nsw.insert(
-          graft.scale.Nsw.build(emb.filter(col("vec_id") % 5 =!= 0), numShards = 4),
-          emb.filter(col("vec_id") % 5 === 0), numShards = 4).cache()
-      })
-  private val hnswInsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private def hnswInsertedGraph(spark: SparkSession, dir: String): DataFrame =
-    hnswInsMemo.getOrElseUpdate(
-      (org.apache.spark.sql.graftbridge.ColumnBridge.sessionUuid(spark), dir), {
-        val emb = Tables.embeddings(spark, dir)
-        graft.scale.Nsw.insertHnsw(
-          graft.scale.Nsw.buildHnsw(emb.filter(col("vec_id") % 5 =!= 0), numShards = 4),
-          emb.filter(col("vec_id") % 5 === 0), numShards = 4).cache()
+          graft.scale.Nsw.build(emb.filter(col("vec_id") % 5 =!= 0), maxLevel = maxLevel,
+            numShards = 4),
+          emb.filter(col("vec_id") % 5 === 0), numShards = 4, maxLevel = maxLevel).cache()
       })
 
   /** Exhaustive beam over the incrementally-grown flat graph: the
@@ -275,25 +228,15 @@ object ScaleQueries {
     * the unbounded-beam search misses a vector and the brute-force hash
     * breaks. The query vector (vec_id 0) is itself part of the INSERTED
     * delta. Same oracle as nsw_precision. */
-  def nswInsertPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
-    graft.scale.Nsw.search(nswInsertedGraph(spark, dir), q, k = 13, ef = Int.MaxValue)
-      .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
-  }
+  def nswInsertPrecision(spark: SparkSession, dir: String): DataFrame =
+    graphTop13(spark, dir, insertedGraph(spark, dir, Flat), ef = Int.MaxValue)
 
   /** The layered analog over the incrementally-grown HNSW: descent entry
     * re-selection (a delta node can out-level every resident), layer
     * rehydration, and layer-0 guard restoration all under the exactness
     * check. Same oracle as hnsw_precision. */
-  def hnswInsertPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
-    graft.scale.Nsw.searchHnsw(hnswInsertedGraph(spark, dir), q, k = 13, ef = Int.MaxValue)
-      .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
-  }
+  def hnswInsertPrecision(spark: SparkSession, dir: String): DataFrame =
+    graphTop13(spark, dir, insertedGraph(spark, dir, Layered), ef = Int.MaxValue)
 
   /** One deterministic transformer checkpoint per (session, dir) — the
     * weights FILE a production deployment would broadcast, resolved

@@ -2212,11 +2212,11 @@ object StoreQueries {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     Versioned.append(emb.filter(col("vec_id") % 3 =!= 2), store) // store v1
     val g1 = graft.scale.Nsw.build(
-      Versioned.read(spark, store, Some(1)), numShards = 4)
+      Versioned.read(spark, store, Some(1)), maxLevel = 0, numShards = 4)
     graft.store.VersionedNsw.commit(spark, idxT, g1, storeVersion = 1)
     Versioned.append(emb.filter(col("vec_id") % 3 === 2), store) // store v2
     val g2 = graft.scale.Nsw.build(
-      Versioned.read(spark, store, Some(2)), numShards = 4)
+      Versioned.read(spark, store, Some(2)), maxLevel = 0, numShards = 4)
     graft.store.VersionedNsw.commit(spark, idxT, g2, storeVersion = 2)
     val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
       .head.getSeq[Float](0).toArray

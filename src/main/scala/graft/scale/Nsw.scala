@@ -1,19 +1,19 @@
 package graft.scale
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Sharded navigable-small-world (NSW) graph ANN — the graph/beam-search
-  * counterpart of the reference's Chroma HNSW serving index
-  * (/root/reference/app.py:73-76), shaped for Spark batch instead of a
-  * single-process in-memory store: vectors are id-sharded into disjoint
-  * shards, each shard builds an in-partition NSW graph (greedy beam-search
+/** Sharded hierarchical navigable-small-world (HNSW) graph ANN — the
+  * graph/beam-search counterpart of the reference's Chroma HNSW serving
+  * index (reference app.py:73-76), shaped for Spark batch instead of
+  * a single-process in-memory store: vectors are id-sharded into disjoint
+  * shards, each shard builds an in-partition graph (greedy beam-search
   * insertion, bidirectional links, degree-capped) in one `mapPartitions`
-  * pass, and the whole index IS a DataFrame of adjacency rows
-  * `(shard, vec_id, embedding, neighbors)` — persistable as plain parquet
-  * partitioned by shard, like the IVF layout.
+  * pass, and the whole index IS a DataFrame of rows
+  * `(shard, vec_id, embedding, level, layers, parent)` — persistable as
+  * plain parquet partitioned by shard, like the IVF layout.
   *
-  * Query = map-only fan-out: every shard beam-searches its own graph
+  * Query = map-only fan-out: every shard searches its own graph
   * independently (no cross-shard edges, so no shuffle until the final
   * merge), then one global `TakeOrderedAndProject` keeps top-k of the
   * per-shard candidates. This is the standard disjoint-shard HNSW serving
@@ -24,22 +24,28 @@ import org.apache.spark.sql.functions._
   * per 32 GB executor at M=8). Build is embarrassingly parallel across
   * shards and needs no training pass (vs IVF's KMeans); inserts are
   * incremental by construction. The trade: queries touch every shard
-  * (fan-out cost), where IVF prunes cells — the hybrid (NSW inside IVF
-  * cells) composes both and is what this layout upgrades to by keying
-  * shards on IVF cell ids instead of id mod.
+  * (fan-out cost), where IVF prunes cells — the hybrid (graphs inside IVF
+  * cells, [[buildByCell]]) composes both by keying shards on IVF cell ids
+  * instead of id mod.
+  *
+  * Layers: `maxLevel` caps the hierarchy. Flat NSW is the graph built
+  * with `maxLevel = 0` — in Malkov & Yashunin's HNSW (TPAMI 2020) NSW is
+  * exactly the single-layer special case, and here the same builder,
+  * insert, search and k-NN join serve both: at level 0 the descent loops
+  * never run and the entry is the shard's min id. Levels buy log-routing
+  * inside big shards; NswSpec pins recall at working ef ≥ the flat graph's.
   *
   * Determinism (DeterminismSpec double-runs declared queries): shard
   * assignment is `vec_id % numShards` (not engine hash), insertion order
   * is ascending vec_id within a shard, every heap/prune ordering
-  * tie-breaks on id, and the search entry point is the shard's minimum
-  * id — no randomness anywhere, unlike textbook HNSW's random level
-  * draws (levels buy log-routing on billion-node MONOLITHIC graphs; with
-  * executor-bounded shards the flat NSW beam reaches the same recall,
-  * NswSpec pins it).
+  * tie-breaks on id, levels are a pure function of the id ([[levelOf]])
+  * and the entry is the highest-level node, ties to min id — no
+  * randomness anywhere, unlike textbook HNSW's random level draws.
   */
 object Nsw {
 
   val DefaultM = 8 // links added per insert; degree cap is 2*M
+  val DefaultMaxLevel = 4
 
   private def sqDist(a: Array[Float], b: Array[Float]): Double = {
     var d = 0.0
@@ -51,11 +57,11 @@ object Nsw {
   private val ord: Ordering[(Double, Long)] =
     Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
 
-  /** Greedy beam search over one in-memory shard graph: expand the
+  /** Greedy beam search over one in-memory graph layer: expand the
     * nearest unexpanded candidate until it is farther than the worst of
     * the `ef` best seen. Returns (id, dist) ordered by (dist, id).
     * With ef ≥ shard size nothing is ever evicted, so every node
-    * reachable from `entry` is visited — the graph is connected by
+    * reachable from `entry` is visited — layer 0 is connected by
     * construction (each insert links to an existing node,
     * bidirectionally), making the ef ≥ n parameterization EXACT; that is
     * what `nsw_precision` stakes its oracle row on. */
@@ -67,13 +73,14 @@ object Nsw {
     beamSearchFrom(vecs, adj, Seq(entry), q, ef, admit)
 
   /** [[beamSearch]] seeded with SEVERAL entry points — the layer-0 form
-    * the HNSW searches need for exactness: connectivity is guaranteed
-    * from the shard's min-id root (guarded parent→child edges), but the
+    * the searches need for exactness: connectivity is guaranteed from the
+    * shard's min-id root (guarded parent→child edges), but the
     * hierarchy's descent can land anywhere, and a pruned child→parent
     * back-edge may be the only path from that region back to the root's
     * subtree. Seeding with {descent entry, root} keeps the hierarchy's
-    * entry quality AND the root's reachability guarantee. */
-  /** `admit` is the FILTERED-search hook (the Chroma `where=` analog,
+    * entry quality AND the root's reachability guarantee.
+    *
+    * `admit` is the FILTERED-search hook (the Chroma `where=` analog,
     * hnswlib's filter-functor shape): navigation traverses the WHOLE
     * graph — frontier and visited-set ignore the predicate, because
     * non-matching nodes may be the only path between matching regions —
@@ -129,23 +136,6 @@ object Nsw {
     drained.reverse.map(t => (t._2, t._1)).toIndexedSeq
   }
 
-  /** Insert items (ascending id) into an empty graph: each new node links
-    * to its `m` beam-found nearest, links are made bidirectional, and any
-    * node exceeding the 2m degree cap keeps its closest neighbors
-    * (tie-break on id) — EXCEPT guarded parent edges, which pruning never
-    * drops: each inserted node designates its single nearest existing
-    * node as parent, and that parent→child edge is permanent. The
-    * invariant "every non-first node has an in-edge from an
-    * earlier-inserted node" then holds by induction, so every node is
-    * reachable from the entry via out-edges — textbook degree-capped NSW
-    * pruning can silently disconnect nodes (a back-link evicted by the
-    * cap may be a node's only in-edge), which would break
-    * `nsw_precision`'s exactness. The cost is an honest degree contract:
-    * a node's degree is bounded by max(2m, its guarded-children count) —
-    * unguarded edges never survive past the cap's remainder (one guarded
-    * edge per node graph-wide, so Σ guarded = n-1; a parent hub can
-    * exceed 2m through guarded edges alone, NswSpec measures the tail).
-    * Returns the adjacency in insertion order. */
   /** Items must carry distinct ids: the builder's maps are keyed by id, so
     * a duplicate would silently overwrite the earlier vector/adjacency
     * while `items` retains both rows — emitting duplicate adjacency rows
@@ -163,8 +153,8 @@ object Nsw {
     * (tie-break on id). When guarded alone reaches the cap, EVERY
     * unguarded edge goes — leaving them unpruned would let a hub keep
     * accumulating back-links unbounded (guarded + 2m is the documented
-    * degree contract, not guarded + everything). Shared by the flat and
-    * HNSW builders. */
+    * degree contract, not guarded + everything). A null `guarded` (the
+    * upper layers) prunes purely by distance. */
   private def pruneNeighbors(ns: scala.collection.mutable.ArrayBuffer[Long],
       guarded: java.util.HashSet[Long],
       vecs: java.util.HashMap[Long, Array[Float]],
@@ -180,263 +170,6 @@ object Nsw {
       ns ++= keep
       ns ++= best
     }
-
-  /** Mutable one-shard build state — what an INCREMENTAL insert needs to
-    * resume from: vectors, adjacency, the guarded parent→children sets
-    * (reconstructible from the persisted `parent` column — without them a
-    * post-insert prune could drop a guarded edge and break the
-    * connectivity invariant `nsw_precision` stakes exactness on), and the
-    * beam entry. */
-  private final class ShardState(expected: Int) {
-    val vecs = new java.util.HashMap[Long, Array[Float]](expected * 2)
-    val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]](expected * 2)
-    val children = new java.util.HashMap[Long, java.util.HashSet[Long]]()
-    val parents = new java.util.HashMap[Long, Long]()
-    var entry: Long = -1L
-  }
-
-  /** The insertion loop, shared by the from-scratch build and the
-    * incremental append: items (ascending id within a batch) enter an
-    * existing state one by one — beam to the m nearest, link
-    * bidirectionally, guard the single nearest as the permanent parent
-    * edge, degree-cap the rest. The guarded-reachability induction (“every
-    * non-first node has a permanent in-edge from an earlier node”) holds
-    * across batches because parents are restored from the persisted
-    * column, not recomputed. */
-  private def insertAll(st: ShardState, items: Array[(Long, Array[Float])],
-      m: Int, efConstruction: Int): Unit = {
-    val maxDeg = 2 * m
-    def prune(id: Long): Unit =
-      pruneNeighbors(st.adj.get(id), st.children.get(id), st.vecs, st.vecs.get(id), maxDeg)
-    items.foreach { case (id, v) =>
-      // intra-batch duplicates are rejected before this loop
-      // (requireDistinctIds), so a hit here means the id is resident in
-      // the rehydrated shard state — an upsert attempt, not a bad batch
-      require(!st.vecs.containsKey(id),
-        s"vec_id $id is already present in the index (insert is insert-only, no upsert; delete then re-insert to update)")
-      if (st.entry < 0) {
-        st.vecs.put(id, v)
-        st.adj.put(id, scala.collection.mutable.ArrayBuffer.empty[Long])
-        st.parents.put(id, -1L)
-        st.entry = id
-      } else {
-        val near = beamSearch(st.vecs, n => st.adj.get(n).toArray, st.entry, v, efConstruction).take(m)
-        st.vecs.put(id, v)
-        st.adj.put(id, scala.collection.mutable.ArrayBuffer(near.map(_._1): _*))
-        val parent = near.head._1 // nearest existing node: guarded in-edge
-        st.children.computeIfAbsent(parent, _ => new java.util.HashSet[Long]()).add(id)
-        st.parents.put(id, parent)
-        near.foreach { case (nid, _) =>
-          st.adj.get(nid) += id
-          prune(nid)
-        }
-      }
-    }
-  }
-
-  private[scale] def buildShardGraph(items: Array[(Long, Array[Float])],
-      m: Int, efConstruction: Int): Array[(Long, Array[Long])] = {
-    requireDistinctIds(items)
-    val st = new ShardState(items.length)
-    insertAll(st, items, m, efConstruction)
-    items.map { case (id, _) => (id, st.adj.get(id).toArray) }
-  }
-
-  /** Rehydrate a shard's build state from persisted adjacency rows
-    * (vec_id, embedding, neighbors, parent). */
-  private def loadShardState(
-      rows: Array[(Long, Array[Float], Array[Long], Long)]): ShardState = {
-    val st = new ShardState(rows.length)
-    rows.foreach { case (id, v, ns, p) =>
-      st.vecs.put(id, v)
-      st.adj.put(id, scala.collection.mutable.ArrayBuffer(ns.toSeq: _*))
-      st.parents.put(id, p)
-      if (p >= 0)
-        st.children.computeIfAbsent(p, _ => new java.util.HashSet[Long]()).add(id)
-    }
-    st.entry = rows.iterator.map(_._1).min
-    st
-  }
-
-  /** Build the sharded NSW index: one adjacency row per vector. The
-    * result is a plain DataFrame — persist with
-    * `write.partitionBy("shard").parquet` for the serving layout. */
-  def build(emb: DataFrame, numShards: Int = 8, m: Int = DefaultM,
-      efConstruction: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    buildKeyed(
-      emb.select(pmod(col(idCol), lit(numShards.toLong)).cast("int").as("shard"),
-        col(idCol).cast("long").as("vec_id"), col(vecCol).as("embedding")),
-      numShards, m, efConstruction)
-
-  /** NSW graphs keyed by IVF cell — the hybrid: vectors shard by the
-    * index's cell assignment instead of id-mod, so [[searchPruned]] can
-    * skip whole shard graphs the way IVF search skips cells (directory
-    * pruning once the graph is written `partitionBy("shard")`), and the
-    * beam replaces IVF's exhaustive in-cell rerank. Fan-out drops from
-    * every-shard to nprobe shards; recall follows the probed cells'
-    * coverage exactly as in IVF (plus the in-shard beam's own recall,
-    * which ef controls — NswSpec measures the composition). */
-  def buildByCell(index: Ivf.Index, m: Int = DefaultM, efConstruction: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    buildKeyed(
-      index.assigned.select(col("cell").cast("int").as("shard"),
-        col(idCol).cast("long").as("vec_id"), col(vecCol).as("embedding")),
-      numPartitions = math.max(1, index.centroids.length), m, efConstruction)
-
-  private def buildKeyed(keyed: DataFrame, numPartitions: Int, m: Int,
-      efConstruction: Int): DataFrame = {
-    val spark = keyed.sparkSession
-    import spark.implicits._
-    keyed
-      .repartition(numPartitions, col("shard"))
-      .as[(Int, Long, Array[Float])]
-      .mapPartitions { it =>
-        // a partition holds whole shards (possibly several — hash
-        // collisions of the shard key), never a fragment of one
-        it.toArray.groupBy(_._1).iterator.flatMap { case (shard, rows) =>
-          val items = rows.map(r => (r._2, r._3)).sortBy(_._1)
-          requireDistinctIds(items)
-          val st = new ShardState(items.length)
-          insertAll(st, items, m, efConstruction)
-          items.iterator.map { case (id, v) =>
-            (shard, id, v, st.adj.get(id).toArray, st.parents.get(id).longValue)
-          }
-        }
-      }
-      .toDF("shard", "vec_id", "embedding", "neighbors", "parent")
-  }
-
-  /** Incremental per-shard insert — the live `add_documents` path the
-    * serving index needs (the sibling of [[Ivf.append]]): route the delta
-    * batch to shards by the SAME id-mod key as [[build]], rehydrate each
-    * touched shard's build state from its persisted rows (guarded parent
-    * edges come from the `parent` column), and run the identical insertion
-    * loop over the delta (ascending id). Untouched shards pass through
-    * unchanged — at scale, with the graph stored `partitionBy("shard")`,
-    * only touched shard directories rewrite. The guarded-reachability
-    * invariant survives the append, so ef ≥ shard size stays EXACT over
-    * the grown graph (`nsw_insert_precision` stakes its oracle row on it),
-    * and when delta ids are larger than every resident id the result is
-    * BIT-IDENTICAL to a from-scratch build of the union (NswSpec pins
-    * both).
-    *
-    * INSERT-ONLY, not upsert: a delta id already resident in the graph
-    * (the CDC "update of an existing vector" shape) fails loudly rather
-    * than silently rewiring the neighborhood — re-embedding an existing
-    * document must go delete → insert (or a fresh build of the touched
-    * shard), because replacing a vector in place would invalidate every
-    * guarded parent edge chosen against the old position. */
-  def insert(graph: DataFrame, newVecs: DataFrame, numShards: Int,
-      m: Int = DefaultM, efConstruction: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = graph.sparkSession
-    import spark.implicits._
-    val delta = newVecs.select(
-      pmod(col(idCol), lit(numShards.toLong)).cast("int").as("shard"),
-      col(idCol).cast("long").as("vec_id"), col(vecCol).as("embedding"))
-    // the touched-shard set is bounded by numShards — the one driver
-    // scalar this path needs. Untouched shards BYPASS the cogroup as a
-    // narrow filter + union (with the graph stored partitionBy("shard"),
-    // that is "those directories are not read, let alone rewritten"),
-    // so insert cost scales with the touched shards, not the index
-    val touched = delta.select(col("shard")).distinct()
-      .as[Int].collect().toSet
-    val g = graph
-      .select(col("shard"), col("vec_id"), col("embedding"), col("neighbors"), col("parent"))
-    val gTouched = g.filter(col("shard").isInCollection(touched))
-      .as[(Int, Long, Array[Float], Array[Long], Long)]
-      .groupByKey(_._1)
-    val d = delta.as[(Int, Long, Array[Float])].groupByKey(_._1)
-    val grown = gTouched.cogroup(d) { (shard, graphRows, deltaRows) =>
-      val existing = graphRows.map(r => (r._2, r._3, r._4, r._5)).toArray
-      val items = deltaRows.map(r => (r._2, r._3)).toArray.sortBy(_._1)
-      if (items.isEmpty)
-        existing.iterator.map { case (id, v, ns, p) => (shard, id, v, ns, p) }
-      else {
-        requireDistinctIds(items) // intra-batch dup ≠ resident-id upsert
-        val st =
-          if (existing.isEmpty) new ShardState(items.length)
-          else loadShardState(existing)
-        insertAll(st, items, m, efConstruction)
-        val vecOf = new java.util.HashMap[Long, Array[Float]]()
-        existing.foreach { case (id, v, _, _) => vecOf.put(id, v) }
-        items.foreach { case (id, v) => vecOf.put(id, v) }
-        (existing.iterator.map(_._1) ++ items.iterator.map(_._1)).map { id =>
-          (shard, id, vecOf.get(id), st.adj.get(id).toArray, st.parents.get(id).longValue)
-        }
-      }
-    }.toDF("shard", "vec_id", "embedding", "neighbors", "parent")
-    g.filter(!col("shard").isInCollection(touched)).unionByName(grown)
-  }
-
-  /** Beam-search every shard graph for `q`, merge per-shard candidates
-    * into the global top-k by (dist, id). `ef` bounds per-shard work;
-    * ef ≥ shard size makes the search exact (see [[beamSearch]]).
-    *
-    * `admitted` (optional) is the metadata predicate of a FILTERED
-    * search, resolved to a one-column `vec_id` frame (e.g.
-    * `embeddings.filter(label % 4 === 1).select("vec_id")`): it
-    * equi-joins onto the graph rows as a flag — distributed, never a
-    * driver collect — and the flag gates the beam's RESULT heap while
-    * navigation still crosses non-matching nodes (see
-    * [[beamSearchFrom]]). Unbounded ef ⇒ exact top-k over the filtered
-    * corpus; a post-filter would instead return fewer than k rows
-    * whenever the unfiltered top-ef crowds matches out. */
-  def search(graph: DataFrame, q: Array[Float], k: Int = 13, ef: Int = 32,
-      admitted: DataFrame = null): DataFrame = {
-    val spark = graph.sparkSession
-    import spark.implicits._
-    val beam = math.max(ef, k)
-    flagged(graph.select(col("shard"), col("vec_id"), col("embedding"),
-        col("neighbors")), admitted)
-      .repartition(col("shard"))
-      .as[(Int, Long, Array[Float], Array[Long], Boolean)]
-      .mapPartitions { it =>
-        it.toArray.groupBy(_._1).iterator.flatMap { case (_, rows) =>
-          val vecs = new java.util.HashMap[Long, Array[Float]](rows.length * 2)
-          val adj = new java.util.HashMap[Long, Array[Long]](rows.length * 2)
-          val adm = new java.util.HashSet[Long](rows.length * 2)
-          rows.foreach { r =>
-            vecs.put(r._2, r._3); adj.put(r._2, r._4)
-            if (r._5) adm.add(r._2)
-          }
-          val entry = rows.iterator.map(_._2).min
-          beamSearch(vecs, adj.get(_), entry, q, beam, adm.contains(_))
-            .take(k).iterator.map { case (id, d) => (id, d) }
-        }
-      }
-      .toDF("vec_id", "dist")
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(k)
-  }
-
-  /** Left-join the admitted-id frame onto graph rows as a boolean
-    * flag; a null `admitted` admits everything without a join. */
-  private def flagged(g: DataFrame, admitted: DataFrame): DataFrame =
-    if (admitted == null) g.withColumn("__adm", org.apache.spark.sql.functions.lit(true))
-    else g.join(
-      admitted.select(col("vec_id").cast("long").as("vec_id"))
-        .distinct().withColumn("__adm", org.apache.spark.sql.functions.lit(true)),
-      Seq("vec_id"), "left")
-      .withColumn("__adm", coalesce(col("__adm"), org.apache.spark.sql.functions.lit(false)))
-      .select(g.columns.map(col) :+ col("__adm"): _*)
-
-  /** Hybrid search over a [[buildByCell]] graph: probe only the `nprobe`
-    * nearest cells' shard graphs (centroid ranking shared with
-    * `Ivf.search` via [[Ivf.nearestCells]]), beam inside each. With
-    * nprobe = nlist and an unbounded beam this is exhaustive and exact —
-    * the `nswivf_precision` oracle regime. `admitted` as in [[search]]. */
-  def searchPruned(graph: DataFrame, centroids: Array[Array[Float]],
-      q: Array[Float], k: Int = 13, nprobe: Int = 3, ef: Int = 32,
-      admitted: DataFrame = null): DataFrame = {
-    val cells = Ivf.nearestCells(centroids, q, nprobe)
-    search(graph.filter(col("shard").isInCollection(cells)), q, k, ef, admitted)
-  }
-
-  // ------------------------------------------------------------------ HNSW
-
-  val DefaultMaxLevel = 4
 
   /** Deterministic geometric layer assignment — the hierarchy of
     * Malkov & Yashunin's HNSW (the algorithm behind the reference's
@@ -454,22 +187,15 @@ object Nsw {
     math.min(maxLevel, java.lang.Long.numberOfTrailingZeros(z) / 3)
   }
 
-  /** HNSW insert pass over one shard: every node lives in layers 0..level;
-    * an insert greedily descends from the current entry (top layer, ef=1
-    * hill-climb per layer) to its own level, then beam-links (m nearest,
-    * bidirectional, degree-capped) at each of its layers. Layer 0 keeps
-    * the flat builder's GUARDED parent edges, so the base layer stays
-    * connected under pruning and an unbounded layer-0 beam remains EXACT —
-    * `hnsw_precision` stakes its oracle row on that, exactly like
-    * `nsw_precision` does on the flat graph. Upper layers prune purely by
-    * distance (they only route; a disconnected upper layer costs recall
-    * at bounded ef, never correctness at ef = ∞). Entry is the highest-
-    * level node, ties to the earliest inserted — deterministic. */
-  /** Mutable one-shard HNSW build state — the layered [[ShardState]],
-    * rehydratable from persisted rows for incremental insert. Only
-    * layer-0 parent edges are guarded (upper layers route; they may
-    * disconnect without costing exactness at ef = ∞). */
-  private final class HnswState(expected: Int, maxLevel: Int) {
+  /** Mutable one-shard build state — what an INCREMENTAL insert needs to
+    * resume from: vectors, levels, per-layer adjacency, the guarded
+    * layer-0 parent→children sets (reconstructible from the persisted
+    * `parent` column — without them a post-insert prune could drop a
+    * guarded edge and break the connectivity invariant `nsw_precision`
+    * stakes exactness on), and the descent entry. Only layer-0 parent
+    * edges are guarded (upper layers route; they may disconnect without
+    * costing exactness at ef = ∞). */
+  private final class State(expected: Int, maxLevel: Int) {
     val vecs = new java.util.HashMap[Long, Array[Float]](expected * 2)
     val adjL = Array.fill(maxLevel + 1)(
       new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]())
@@ -478,20 +204,45 @@ object Nsw {
     val levels = new java.util.HashMap[Long, Int](expected * 2)
     var entry: Long = -1L
     var entryLevel: Int = -1
+
+    /** One node's persisted form: (level, layers, parent). */
+    def row(id: Long): (Int, Array[Array[Long]], Long) = {
+      val lvl = levels.get(id)
+      (lvl, (0 to lvl).map(l => adjL(l).get(id).toArray).toArray, parents.get(id).longValue)
+    }
   }
 
-  /** The layered insertion loop, shared by build and incremental insert
-    * (see [[insertAll]] for the guarded-induction argument — it holds
-    * across batches because layer-0 parents persist in the `parent`
-    * column). */
-  private def insertAllHnsw(st: HnswState, items: Array[(Long, Array[Float])],
+  /** The insertion loop, shared by the from-scratch build and the
+    * incremental append: items (ascending id within a batch) enter an
+    * existing state one by one. Each node lives in layers 0..level; it
+    * greedily descends from the current entry (top layer, ef=1
+    * hill-climb per layer) to its own level, then at each of its layers
+    * beams to the m nearest, links bidirectionally and degree-caps the
+    * neighbours at 2m. On layer 0 the single nearest becomes the node's
+    * permanent GUARDED parent edge, which pruning never drops. The
+    * invariant "every non-first node has an in-edge from an
+    * earlier-inserted node" then holds by induction, so every node is
+    * reachable from the min-id root via layer-0 out-edges — textbook
+    * degree-capped pruning can silently disconnect nodes (a back-link
+    * evicted by the cap may be a node's only in-edge), which would break
+    * `nsw_precision`'s exactness. The induction holds across batches
+    * because parents are restored from the persisted column, not
+    * recomputed. The cost is an honest degree contract: a node's layer-0
+    * degree is bounded by max(2m, its guarded-children count) (one
+    * guarded edge per node graph-wide, so Σ guarded = n-1; a parent hub
+    * can exceed 2m through guarded edges alone, NswSpec measures the
+    * tail). Upper layers prune purely by distance. The entry is the
+    * highest-level node, ties to the earliest inserted. */
+  private def insertNodes(st: State, items: Array[(Long, Array[Float])],
       m: Int, efConstruction: Int, maxLevel: Int): Unit = {
     val maxDeg = 2 * m
     def pruneAt(layer: Int, id: Long): Unit =
       pruneNeighbors(st.adjL(layer).get(id),
         if (layer == 0) st.children.get(id) else null, st.vecs, st.vecs.get(id), maxDeg)
     items.foreach { case (id, v) =>
-      // see insertAll: a hit here is an upsert attempt on a resident id
+      // intra-batch duplicates are rejected before this loop
+      // (requireDistinctIds), so a hit here means the id is resident in
+      // the rehydrated shard state — an upsert attempt, not a bad batch
       require(!st.vecs.containsKey(id),
         s"vec_id $id is already present in the index (insert is insert-only, no upsert; delete then re-insert to update)")
       val lvl = levelOf(id, maxLevel)
@@ -530,25 +281,29 @@ object Nsw {
     }
   }
 
-  private[scale] def buildShardHnsw(items: Array[(Long, Array[Float])],
-      m: Int, efConstruction: Int, maxLevel: Int): Array[(Long, Int, Array[Array[Long]])] = {
+  /** Build one shard from scratch: (vec_id, level, layers, parent) per
+    * item, in item order. */
+  private[scale] def buildShard(items: Array[(Long, Array[Float])],
+      m: Int, efConstruction: Int, maxLevel: Int): Array[(Long, Int, Array[Array[Long]], Long)] = {
     requireDistinctIds(items)
-    val st = new HnswState(items.length, maxLevel)
-    insertAllHnsw(st, items, m, efConstruction, maxLevel)
-    items.map { case (id, _) =>
-      val lvl = st.levels.get(id)
-      (id, lvl, (0 to lvl).map(l => st.adjL(l).get(id).toArray).toArray)
-    }
+    val st = new State(items.length, maxLevel)
+    insertNodes(st, items, m, efConstruction, maxLevel)
+    items.map { case (id, _) => val (lvl, ls, p) = st.row(id); (id, lvl, ls, p) }
   }
 
-  /** Rehydrate a shard's layered build state from persisted rows
+  /** Rehydrate a shard's build state from persisted rows
     * (vec_id, embedding, level, layers, parent). Entry: highest level,
-    * ties to min id — the builder's own rule under ascending insertion. */
-  private def loadHnswState(
+    * ties to min id — the builder's own rule under ascending insertion.
+    * Every resident level must fit `maxLevel`: inserting into a layered
+    * graph with a smaller cap is a caller error, reported as such. */
+  private def loadState(
       rows: Array[(Long, Array[Float], Int, Array[Array[Long]], Long)],
-      maxLevel: Int): HnswState = {
-    val st = new HnswState(rows.length, maxLevel)
+      maxLevel: Int): State = {
+    val st = new State(rows.length, maxLevel)
     rows.foreach { case (id, v, lvl, layers, p) =>
+      require(lvl <= maxLevel,
+        s"vec_id $id has level $lvl above maxLevel $maxLevel " +
+          "(insert with the maxLevel the graph was built with)")
       st.vecs.put(id, v)
       st.levels.put(id, lvl)
       (0 to lvl).foreach { l =>
@@ -559,64 +314,102 @@ object Nsw {
       if (p >= 0)
         st.children.computeIfAbsent(p, _ => new java.util.HashSet[Long]()).add(id)
     }
-    val (entry, entryLevel) = rows.iterator
-      .map(r => (r._1, r._3)).reduce { (a, b) =>
-        if (b._2 > a._2 || (b._2 == a._2 && b._1 < a._1)) b else a
-      }
+    val (entry, entryLevel) = topEntry(rows.iterator.map(r => (r._1, r._3)))
     st.entry = entry
     st.entryLevel = entryLevel
     st
   }
 
-  /** Build the sharded HNSW index: one row per vector with its level,
+  /** (id, level) of the highest-level node, ties to min id. */
+  private def topEntry(idLevels: Iterator[(Long, Int)]): (Long, Int) =
+    idLevels.reduce { (a, b) =>
+      if (b._2 > a._2 || (b._2 == a._2 && b._1 < a._1)) b else a
+    }
+
+  /** Build the sharded index: one row per vector with its level,
     * per-layer adjacency and guarded layer-0 parent
-    * `(shard, vec_id, embedding, level, layers, parent)` — the same
-    * disjoint-shard layout as [[build]], plus the hierarchy.
-    * Persistable as parquet partitioned by shard, like the flat graph. */
-  def buildHnsw(emb: DataFrame, numShards: Int = 8, m: Int = DefaultM,
-      efConstruction: Int = 64, maxLevel: Int = DefaultMaxLevel,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = emb.sparkSession
+    * `(shard, vec_id, embedding, level, layers, parent)`. `maxLevel = 0`
+    * builds the flat NSW graph, [[DefaultMaxLevel]] the hierarchy; it is
+    * required so no caller switches between them silently. The result is
+    * a plain DataFrame — persist with [[write]] for the serving layout. */
+  def build(emb: DataFrame, maxLevel: Int, numShards: Int = 8, m: Int = DefaultM,
+      efConstruction: Int = 64,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    buildKeyed(
+      emb.select(pmod(col(idCol), lit(numShards.toLong)).cast("int").as("shard"),
+        col(idCol).cast("long").as("vec_id"), col(vecCol).as("embedding")),
+      numShards, m, efConstruction, maxLevel)
+
+  /** Flat graphs keyed by IVF cell — the hybrid: vectors shard by the
+    * index's cell assignment instead of id-mod, so [[searchPruned]] can
+    * skip whole shard graphs the way IVF search skips cells (directory
+    * pruning once the graph is written `partitionBy("shard")`), and the
+    * beam replaces IVF's exhaustive in-cell rerank. Fan-out drops from
+    * every-shard to nprobe shards; recall follows the probed cells'
+    * coverage exactly as in IVF (plus the in-shard beam's own recall,
+    * which ef controls — NswSpec measures the composition). */
+  def buildByCell(index: Ivf.Index, m: Int = DefaultM, efConstruction: Int = 64,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    buildKeyed(
+      index.assigned.select(col("cell").cast("int").as("shard"),
+        col(idCol).cast("long").as("vec_id"), col(vecCol).as("embedding")),
+      numPartitions = math.max(1, index.centroids.length), m, efConstruction,
+      maxLevel = 0)
+
+  private def buildKeyed(keyed: DataFrame, numPartitions: Int, m: Int,
+      efConstruction: Int, maxLevel: Int): DataFrame = {
+    val spark = keyed.sparkSession
     import spark.implicits._
-    emb
-      .select(pmod(col(idCol), lit(numShards.toLong)).cast("int").as("shard"),
-        col(idCol).cast("long").as("vec_id"), col(vecCol).as("embedding"))
-      .repartition(numShards, col("shard"))
+    keyed
+      .repartition(numPartitions, col("shard"))
       .as[(Int, Long, Array[Float])]
       .mapPartitions { it =>
+        // a partition holds whole shards (possibly several — hash
+        // collisions of the shard key), never a fragment of one
         it.toArray.groupBy(_._1).iterator.flatMap { case (shard, rows) =>
           val items = rows.map(r => (r._2, r._3)).sortBy(_._1)
-          requireDistinctIds(items)
-          val st = new HnswState(items.length, maxLevel)
-          insertAllHnsw(st, items, m, efConstruction, maxLevel)
-          items.iterator.map { case (id, v) =>
-            val lvl = st.levels.get(id)
-            (shard, id, v, lvl,
-              (0 to lvl).map(l => st.adjL(l).get(id).toArray).toArray,
-              st.parents.get(id).longValue)
-          }
+          buildShard(items, m, efConstruction, maxLevel).iterator.zip(items.iterator)
+            .map { case ((id, lvl, ls, p), (_, v)) => (shard, id, v, lvl, ls, p) }
         }
       }
       .toDF("shard", "vec_id", "embedding", "level", "layers", "parent")
   }
 
-  /** Incremental per-shard HNSW insert — [[insert]] for the layered
-    * graph: same id-mod routing, rehydrated layered state (guarded
-    * layer-0 parents from the `parent` column), the identical layered
-    * insertion loop over the delta. The analog of a live HNSW
-    * `add_documents` (reference: Chroma inserts into its serving index
-    * incrementally, helper/multiple_document_upload.py:168), as a batch
-    * job over only the touched shards. INSERT-ONLY like [[insert]]: a
-    * resident delta id fails loudly; update = delete → insert. */
-  def insertHnsw(graph: DataFrame, newVecs: DataFrame, numShards: Int,
-      m: Int = DefaultM, efConstruction: Int = 64, maxLevel: Int = DefaultMaxLevel,
+  /** Incremental per-shard insert — the live `add_documents` path the
+    * serving index needs (the sibling of [[Ivf.append]]; Chroma inserts
+    * into its serving index incrementally,
+    * helper/multiple_document_upload.py:168): route the delta batch to
+    * shards by the SAME id-mod key as [[build]], rehydrate each touched
+    * shard's build state from its persisted rows (guarded parent edges
+    * come from the `parent` column), and run the identical insertion loop
+    * over the delta (ascending id). `maxLevel` must be the one the graph
+    * was built with. Untouched shards pass through unchanged — at scale,
+    * with the graph stored `partitionBy("shard")`, only touched shard
+    * directories rewrite. The guarded-reachability invariant survives the
+    * append, so ef ≥ shard size stays EXACT over the grown graph
+    * (`nsw_insert_precision` stakes its oracle row on it), and when delta
+    * ids are larger than every resident id the result is BIT-IDENTICAL to
+    * a from-scratch build of the union (NswSpec pins both).
+    *
+    * INSERT-ONLY, not upsert: a delta id already resident in the graph
+    * (the CDC "update of an existing vector" shape) fails loudly rather
+    * than silently rewiring the neighborhood — re-embedding an existing
+    * document must go delete → insert (or a fresh build of the touched
+    * shard), because replacing a vector in place would invalidate every
+    * guarded parent edge chosen against the old position. */
+  def insert(graph: DataFrame, newVecs: DataFrame, numShards: Int, maxLevel: Int,
+      m: Int = DefaultM, efConstruction: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = graph.sparkSession
     import spark.implicits._
     val delta = newVecs.select(
       pmod(col(idCol), lit(numShards.toLong)).cast("int").as("shard"),
       col(idCol).cast("long").as("vec_id"), col(vecCol).as("embedding"))
-    // untouched shards bypass the cogroup entirely (see [[insert]])
+    // the touched-shard set is bounded by numShards — the one driver
+    // scalar this path needs. Untouched shards BYPASS the cogroup as a
+    // narrow filter + union (with the graph stored partitionBy("shard"),
+    // that is "those directories are not read, let alone rewritten"),
+    // so insert cost scales with the touched shards, not the index
     val touched = delta.select(col("shard")).distinct()
       .as[Int].collect().toSet
     val g = graph
@@ -634,33 +427,29 @@ object Nsw {
       else {
         requireDistinctIds(items) // intra-batch dup ≠ resident-id upsert
         val st =
-          if (existing.isEmpty) new HnswState(items.length, maxLevel)
-          else loadHnswState(existing, maxLevel)
-        insertAllHnsw(st, items, m, efConstruction, maxLevel)
-        val vecOf = new java.util.HashMap[Long, Array[Float]]()
-        existing.foreach { case (id, v, _, _, _) => vecOf.put(id, v) }
-        items.foreach { case (id, v) => vecOf.put(id, v) }
+          if (existing.isEmpty) new State(items.length, maxLevel)
+          else loadState(existing, maxLevel)
+        insertNodes(st, items, m, efConstruction, maxLevel)
         (existing.iterator.map(_._1) ++ items.iterator.map(_._1)).map { id =>
-          val lvl = st.levels.get(id)
-          (shard, id, vecOf.get(id), lvl,
-            (0 to lvl).map(l => st.adjL(l).get(id).toArray).toArray,
-            st.parents.get(id).longValue)
+          val (lvl, ls, p) = st.row(id)
+          (shard, id, st.vecs.get(id), lvl, ls, p)
         }
       }
     }.toDF("shard", "vec_id", "embedding", "level", "layers", "parent")
     g.filter(!col("shard").isInCollection(touched)).unionByName(grown)
   }
 
-  /** One HNSW shard in memory: vectors, per-layer adjacency, the descent
+  /** One shard in memory: vectors, per-layer adjacency, the descent
     * entry (highest level, ties to min id — matching the builder's
     * "strictly greater replaces" rule under ascending-id insertion) and
     * the layer-0 ROOT (min id): guarded parent edges prove connectivity
     * from the root, not from wherever descent lands, so the layer-0 beam
-    * seeds with BOTH — that is what makes ef ≥ shard size exact. */
-  private final class HnswShard(
-      val vecs: java.util.HashMap[Long, Array[Float]],
-      val layers: java.util.HashMap[Long, Array[Array[Long]]],
-      val entry: Long, val entryLevel: Int, val root: Long) {
+    * seeds with BOTH — that is what makes ef ≥ shard size exact. On a
+    * flat graph entry and root coincide. */
+  private[scale] final class Shard(
+      vecs: java.util.HashMap[Long, Array[Float]],
+      layers: java.util.HashMap[Long, Array[Array[Long]]],
+      entry: Long, entryLevel: Int, root: Long) {
     /** `admit` gates only the layer-0 RESULT heap: the upper-layer
       * descent is pure navigation (its output is an entry point, not a
       * result), so it ignores the predicate — filtering it could strand
@@ -678,25 +467,33 @@ object Nsw {
     }
   }
 
-  private def loadHnswShard(
-      rows: Array[(Int, Long, Array[Float], Int, Array[Array[Long]])]): HnswShard = {
+  /** Load one shard's rows (shard, vec_id, embedding, level, layers). */
+  private[scale] def loadShard(
+      rows: Array[(Int, Long, Array[Float], Int, Array[Array[Long]])]): Shard = {
     val vecs = new java.util.HashMap[Long, Array[Float]](rows.length * 2)
     val layers = new java.util.HashMap[Long, Array[Array[Long]]](rows.length * 2)
     rows.foreach { r => vecs.put(r._2, r._3); layers.put(r._2, r._5) }
-    val (entry, entryLevel) = rows.iterator
-      .map(r => (r._2, r._4)).reduce { (a, b) =>
-        if (b._2 > a._2 || (b._2 == a._2 && b._1 < a._1)) b else a
-      }
-    new HnswShard(vecs, layers, entry, entryLevel, rows.iterator.map(_._2).min)
+    val (entry, entryLevel) = topEntry(rows.iterator.map(r => (r._2, r._4)))
+    new Shard(vecs, layers, entry, entryLevel, rows.iterator.map(_._2).min)
   }
 
-  /** HNSW search: per shard, greedy-descend from the top-layer entry
-    * through layers L..1, then beam at layer 0 with `ef` (seeded with
-    * the root as well — see [[HnswShard]]); merge shards into the global
-    * top-k. ef ≥ shard size is exact. `admitted` is the filtered-search
-    * predicate frame as in [[search]] — applied inside the layer-0
-    * beam, never to the descent. */
-  def searchHnsw(graph: DataFrame, q: Array[Float], k: Int = 13, ef: Int = 32,
+  /** Search every shard graph for `q` — per shard, greedy-descend from the
+    * top-layer entry through layers L..1, then beam layer 0 with `ef`
+    * (seeded with the root as well — see [[Shard]]) — and merge the
+    * per-shard candidates into the global top-k by (dist, id). `ef`
+    * bounds per-shard work; ef ≥ shard size makes the search exact (see
+    * [[beamSearch]]).
+    *
+    * `admitted` (optional) is the metadata predicate of a FILTERED
+    * search, resolved to a one-column `vec_id` frame (e.g.
+    * `embeddings.filter(label % 4 === 1).select("vec_id")`): it
+    * equi-joins onto the graph rows as a flag — distributed, never a
+    * driver collect — and the flag gates the layer-0 beam's RESULT heap
+    * while navigation still crosses non-matching nodes (see
+    * [[beamSearchFrom]]). Unbounded ef ⇒ exact top-k over the filtered
+    * corpus; a post-filter would instead return fewer than k rows
+    * whenever the unfiltered top-ef crowds matches out. */
+  def search(graph: DataFrame, q: Array[Float], k: Int = 13, ef: Int = 32,
       admitted: DataFrame = null): DataFrame = {
     val spark = graph.sparkSession
     import spark.implicits._
@@ -709,7 +506,7 @@ object Nsw {
         it.toArray.groupBy(_._1).iterator.flatMap { case (_, rows) =>
           val adm = new java.util.HashSet[Long](rows.length * 2)
           rows.foreach { r => if (r._6) adm.add(r._2) }
-          loadHnswShard(rows.map(r => (r._1, r._2, r._3, r._4, r._5)))
+          loadShard(rows.map(r => (r._1, r._2, r._3, r._4, r._5)))
             .search(q, k, beam, adm.contains(_))
         }
       }
@@ -718,11 +515,33 @@ object Nsw {
       .limit(k)
   }
 
-  /** Persist a graph (flat or HNSW — any shard-keyed adjacency frame) as
-    * parquet partitioned by shard: the serving layout, where a pruned
-    * search's shard filter becomes directory-level partition pruning
-    * (the same contract as Ivf.write; NswSpec pins identical results
-    * through the round-trip). */
+  /** Left-join the admitted-id frame onto graph rows as a boolean
+    * flag; a null `admitted` admits everything without a join. */
+  private def flagged(g: DataFrame, admitted: DataFrame): DataFrame =
+    if (admitted == null) g.withColumn("__adm", lit(true))
+    else g.join(
+      admitted.select(col("vec_id").cast("long").as("vec_id"))
+        .distinct().withColumn("__adm", lit(true)),
+      Seq("vec_id"), "left")
+      .withColumn("__adm", coalesce(col("__adm"), lit(false)))
+      .select(g.columns.map(col) :+ col("__adm"): _*)
+
+  /** Hybrid search over a [[buildByCell]] graph: probe only the `nprobe`
+    * nearest cells' shard graphs (centroid ranking shared with
+    * `Ivf.search` via [[Ivf.nearestCells]]), beam inside each. With
+    * nprobe = nlist and an unbounded beam this is exhaustive and exact —
+    * the `nswivf_precision` oracle regime. `admitted` as in [[search]]. */
+  def searchPruned(graph: DataFrame, centroids: Array[Array[Float]],
+      q: Array[Float], k: Int = 13, nprobe: Int = 3, ef: Int = 32,
+      admitted: DataFrame = null): DataFrame = {
+    val cells = Ivf.nearestCells(centroids, q, nprobe)
+    search(graph.filter(col("shard").isInCollection(cells)), q, k, ef, admitted)
+  }
+
+  /** Persist a graph as parquet partitioned by shard: the serving layout,
+    * where a pruned search's shard filter becomes directory-level
+    * partition pruning (the same contract as Ivf.write; NswSpec pins
+    * identical results through the round-trip). */
   def write(graph: DataFrame, path: String): Unit =
     graph.write.mode("overwrite").partitionBy("shard").parquet(path)
 
@@ -734,11 +553,12 @@ object Nsw {
 
   /** Large-batch k-NN join over the sharded graph — what a 100 TB offline
     * eval job runs instead of [[search]]'s one-vector form. Queries fan
-    * out to shards (flat graphs: every shard; cell-keyed graphs with
+    * out to shards (id-keyed graphs: every shard; cell-keyed graphs with
     * `centroids` given: only each query's `nprobe` nearest cells, the
-    * IVF-pruned hybrid), the fan-out is a distributed join (no driver
-    * collect on either side), each shard partition rebuilds its graph
-    * ONCE per task and beams every assigned query through it, and the
+    * IVF-pruned hybrid, ranked by [[Ivf.nearestCellsCol]]), the fan-out
+    * is a distributed join (no driver collect on either side), each shard
+    * partition rebuilds its graph ONCE per task and runs every assigned
+    * query through [[Shard.search]] (descent, then layer-0 beam), and the
     * per-query global top-k is a rank window that compiles to
     * WindowGroupLimit — the same merge shape as [[Ivf.knnJoin]].
     * Self-matches (a corpus vector querying its own graph) are kept:
@@ -752,54 +572,10 @@ object Nsw {
     val q0 = queries.select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_emb"))
     val fanned =
       if (centroids == null)
-        // flat graphs have no routing key: every query visits every shard
-        // (the honest fan-out cost the cell-keyed hybrid exists to avoid)
+        // id-keyed graphs have no routing key: every query visits every
+        // shard (the honest fan-out cost the cell-keyed hybrid avoids)
         q0.crossJoin(broadcast(graph.select(col("shard")).distinct()))
-      else {
-        val cents = centroids
-        val probe = udf { (v: Seq[Float]) =>
-          Ivf.nearestCells(cents, if (v == null) null else v.toArray, nprobe)
-        }
-        q0.withColumn("shard", explode(probe(col("q_emb"))))
-      }
-    val g = graph
-      .select(col("shard"), col("vec_id"), col("embedding"), col("neighbors"))
-      .as[(Int, Long, Array[Float], Array[Long])]
-      .groupByKey(_._1)
-    val qs = fanned
-      .select(col("shard").cast("int"), col("q_id"), col("q_emb"))
-      .as[(Int, Long, Array[Float])]
-      .groupByKey(_._1)
-    val perShard = g.cogroup(qs) { (_, graphRows, queryRows) =>
-      val rows = graphRows.toArray
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val vecs = new java.util.HashMap[Long, Array[Float]](rows.length * 2)
-        val adj = new java.util.HashMap[Long, Array[Long]](rows.length * 2)
-        rows.foreach { r => vecs.put(r._2, r._3); adj.put(r._2, r._4) }
-        val entry = rows.iterator.map(_._2).min
-        queryRows.flatMap { case (_, qid, qv) =>
-          beamSearch(vecs, adj.get(_), entry, qv, beam)
-            .take(k).iterator.map { case (id, d) => (qid, id, d) }
-        }
-      }
-    }.toDF("q_id", "n_id", "d")
-    mergeTopK(perShard, k)
-  }
-
-  /** Batch k-NN join over a [[buildHnsw]] graph — [[knnJoin]] with the
-    * layer hierarchy driving per-query entry selection: each shard task
-    * rebuilds its layered graph once, every assigned query descends from
-    * the top-layer entry and beams layer 0. Same distributed fan-out and
-    * WindowGroupLimit merge as the flat form. */
-  def knnJoinHnsw(graph: DataFrame, queries: DataFrame, k: Int = 5, ef: Int = 32,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = graph.sparkSession
-    import spark.implicits._
-    val beam = math.max(ef, k)
-    val fanned = queries
-      .select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_emb"))
-      .crossJoin(broadcast(graph.select(col("shard")).distinct()))
+      else q0.withColumn("shard", explode(Ivf.nearestCellsCol(centroids, col("q_emb"), nprobe)))
     val g = graph
       .select(col("shard"), col("vec_id"), col("embedding"), col("level"), col("layers"))
       .as[(Int, Long, Array[Float], Int, Array[Array[Long]])]
@@ -812,7 +588,7 @@ object Nsw {
       val rows = graphRows.toArray
       if (rows.isEmpty) Iterator.empty
       else {
-        val shard = loadHnswShard(rows)
+        val shard = loadShard(rows)
         queryRows.flatMap { case (_, qid, qv) =>
           shard.search(qv, k, beam).map { case (id, d) => (qid, id, d) }
         }

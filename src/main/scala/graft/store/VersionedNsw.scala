@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * consistency comes from the manifest log.
   *
   * Row encoding, one schema (the [[VersionedIndex]] pattern):
-  *  - `kind = 'g'`: graph rows (shard, vec_id, embedding, neighbors,
-  *    parent) — exactly [[graft.scale.Nsw.build]]'s output columns;
+  *  - `kind = 'g'`: graph rows (shard, vec_id, embedding, level, layers,
+  *    parent) — exactly [[graft.scale.Nsw.build]]'s output columns, so
+  *    flat and layered graphs version alike;
   *  - `kind = 'm'`: one meta row carrying the STORE version this graph
   *    was built from.
   * Graph rows land `repartition(shard)` so files cluster by shard (the
@@ -32,7 +33,7 @@ object VersionedNsw {
   /** A pinned, immutable view of one index version. */
   case class Snapshot(graph: DataFrame, version: Int, storeVersion: Int)
 
-  private val GraphCols = Seq("shard", "vec_id", "embedding", "neighbors", "parent")
+  private val GraphCols = Seq("shard", "vec_id", "embedding", "level", "layers", "parent")
 
   /** Publish `graph` (an [[graft.scale.Nsw]] adjacency frame) as the
     * next version of `table` in ONE atomic commit pinned to
@@ -47,14 +48,16 @@ object VersionedNsw {
       col("shard").cast("int").as("shard"),
       col("vec_id").cast("long").as("vec_id"),
       col("embedding").cast("array<float>").as("embedding"),
-      col("neighbors").cast("array<bigint>").as("neighbors"),
+      col("level").cast("int").as("level"),
+      col("layers").cast("array<array<bigint>>").as("layers"),
       col("parent").cast("long").as("parent"),
       lit(null).cast("long").as("store_version"))
     val meta = Seq(storeVersion.toLong).toDF("store_version")
       .select(lit("m").as("kind"), lit(null).cast("int").as("shard"),
         lit(null).cast("long").as("vec_id"),
         lit(null).cast("array<float>").as("embedding"),
-        lit(null).cast("array<bigint>").as("neighbors"),
+        lit(null).cast("int").as("level"),
+        lit(null).cast("array<array<bigint>>").as("layers"),
         lit(null).cast("long").as("parent"), col("store_version"))
     val batch = f"nsw-${java.util.UUID.randomUUID().toString.take(8)}"
     val dir = new java.io.File(table, batch)
@@ -75,8 +78,7 @@ object VersionedNsw {
 
   /** Open a PINNED snapshot of `version` (default latest): the file
     * list resolves here, once, so concurrent rebuilds never tear this
-    * reader. The graph stays a lazy scan for [[graft.scale.Nsw.search]]
-    * / [[graft.scale.Nsw.searchHnsw]]. */
+    * reader. The graph stays a lazy scan for [[graft.scale.Nsw.search]]. */
   def open(spark: SparkSession, table: String,
       version: Option[Int] = None): Snapshot = {
     val v = version.getOrElse(Versioned.currentVersion(table))

@@ -6,10 +6,10 @@ import org.scalacheck.Prop.forAll
 import graft.core.{CountMin, CountMinAgg}
 
 /** Property tests for the driver-free cores of the round-5 primitives:
-  * Count-Min invariants over arbitrary streams, and NSW graph build/beam
-  * invariants over random vector sets (the guarded-connectivity theorem
-  * `nsw_precision` relies on, exercised across random geometries instead
-  * of one fixture). */
+  * Count-Min invariants over arbitrary streams, and graph build/search
+  * invariants over random vector sets, flat and layered (the
+  * guarded-connectivity theorem `nsw_precision` and `hnsw_precision` rely
+  * on, exercised across random geometries instead of one fixture). */
 object CountMinProps extends Properties("CountMin") {
 
   private val streamGen: Gen[List[Long]] =
@@ -70,10 +70,15 @@ object MediaProps extends Properties("MediaCodecs") {
 
 object NswProps extends Properties("Nsw") {
 
+  // ids start at a generated base so the deterministic level assignment
+  // (a function of the id) differs from case to case
   private val itemsGen: Gen[Array[(Long, Array[Float])]] = for {
     n <- Gen.chooseNum(1, 40)
+    base <- Gen.chooseNum(0L, 1L << 40)
     vecs <- Gen.listOfN(n, Gen.listOfN(4, Gen.chooseNum(-100, 100).map(_ / 10.0f)))
-  } yield vecs.zipWithIndex.map { case (v, i) => (i.toLong, v.toArray) }.toArray
+  } yield vecs.zipWithIndex.map { case (v, i) => (base + i, v.toArray) }.toArray
+
+  private val maxLevelGen: Gen[Int] = Gen.oneOf(0, Nsw.DefaultMaxLevel)
 
   private val qGen: Gen[Array[Float]] =
     Gen.listOfN(4, Gen.chooseNum(-100, 100).map(_ / 10.0f)).map(_.toArray)
@@ -85,8 +90,9 @@ object NswProps extends Properties("Nsw") {
   }
 
   property("every node reachable from the entry (guarded parent edges)") =
-    forAll(itemsGen) { items =>
-      val adj = Nsw.buildShardGraph(items, m = 3, efConstruction = 8).toMap
+    forAll(itemsGen, maxLevelGen) { (items, maxLevel) =>
+      val adj = Nsw.buildShard(items, m = 3, efConstruction = 8, maxLevel)
+        .map(r => r._1 -> r._3(0)).toMap
       val entry = items.map(_._1).min
       val seen = scala.collection.mutable.Set(entry)
       val stack = scala.collection.mutable.Stack(entry)
@@ -96,12 +102,11 @@ object NswProps extends Properties("Nsw") {
     }
 
   property("unbounded beam is exhaustive and exactly (dist, id)-ordered") =
-    forAll(itemsGen, qGen) { (items, q) =>
-      val adjArr = Nsw.buildShardGraph(items, m = 3, efConstruction = 8)
-      val vecs = new java.util.HashMap[Long, Array[Float]]()
-      items.foreach { case (id, v) => vecs.put(id, v) }
-      val adj = adjArr.toMap
-      val got = Nsw.beamSearch(vecs, adj(_), items.map(_._1).min, q, Int.MaxValue)
+    forAll(itemsGen, maxLevelGen, qGen) { (items, maxLevel, q) =>
+      val vecOf = items.toMap
+      val shard = Nsw.loadShard(Nsw.buildShard(items, m = 3, efConstruction = 8, maxLevel)
+        .map { case (id, lvl, layers, _) => (0, id, vecOf(id), lvl, layers) })
+      val got = shard.search(q, items.length, Int.MaxValue).toIndexedSeq
       val want = items.map { case (id, v) => (id, sqDist(v, q)) }
         .sortBy { case (id, d) => (d, id) }.toIndexedSeq
       got == want

@@ -10,7 +10,7 @@ class NswSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val emb = Tables.embeddings(spark, sfDir).cache()
-  private lazy val graph = Nsw.build(emb, numShards = 4).cache()
+  private lazy val graph = Nsw.build(emb, maxLevel = 0, numShards = 4).cache()
 
   private def queryVec(id: Long): Array[Float] =
     emb.filter(col("vec_id") === id).select(col("embedding"))
@@ -22,7 +22,7 @@ class NswSpec extends SparkSpec {
       .limit(k).select("vec_id").as[Long].collect().toSeq
 
   test("every node is reachable from its shard's entry (guarded parent edges hold)") {
-    val rows = graph.select("shard", "vec_id", "neighbors")
+    val rows = graph.select(col("shard"), col("vec_id"), col("layers")(0))
       .as[(Int, Long, Array[Long])].collect()
     assert(rows.length == emb.count())
     rows.groupBy(_._1).foreach { case (shard, nodes) =>
@@ -38,7 +38,7 @@ class NswSpec extends SparkSpec {
   }
 
   test("degree contract: capped at 2m except guarded children; tail is small") {
-    val degs = graph.select(size(col("neighbors"))).as[Int].collect()
+    val degs = graph.select(size(col("layers")(0))).as[Int].collect()
     val over = degs.count(_ > 2 * Nsw.DefaultM)
     // guarded edges total n-1 graph-wide; hubs past the cap must stay rare
     assert(over <= degs.length / 10, s"$over of ${degs.length} nodes exceed the 2m cap")
@@ -69,8 +69,8 @@ class NswSpec extends SparkSpec {
     val gotFlat = Nsw.search(graph, q, k = 13, ef = Int.MaxValue, admitted = admitted)
       .select("vec_id").as[Long].collect().toSeq
     assert(gotFlat == exactFiltered(13), "flat filtered search diverged from brute force")
-    val hg = Nsw.buildHnsw(emb, numShards = 4)
-    val gotH = Nsw.searchHnsw(hg, q, k = 13, ef = Int.MaxValue, admitted = admitted)
+    val hg = Nsw.build(emb, maxLevel = Nsw.DefaultMaxLevel, numShards = 4)
+    val gotH = Nsw.search(hg, q, k = 13, ef = Int.MaxValue, admitted = admitted)
       .select("vec_id").as[Long].collect().toSeq
     assert(gotH == exactFiltered(13), "hnsw filtered search diverged from brute force")
     // bounded beam: the in-beam filter returns k admitted rows; a
@@ -99,9 +99,10 @@ class NswSpec extends SparkSpec {
   }
 
   test("build is deterministic: identical adjacency on rebuild") {
-    val a = graph.select("vec_id", "neighbors")
+    val a = graph.select(col("vec_id"), col("layers")(0))
       .as[(Long, Array[Long])].collect().map(r => r._1 -> r._2.toSeq).toMap
-    val b = Nsw.build(emb, numShards = 4).select("vec_id", "neighbors")
+    val b = Nsw.build(emb, maxLevel = 0, numShards = 4)
+      .select(col("vec_id"), col("layers")(0))
       .as[(Long, Array[Long])].collect().map(r => r._1 -> r._2.toSeq).toMap
     assert(a == b)
   }
@@ -133,7 +134,7 @@ class NswSpec extends SparkSpec {
 
   test("single-node shard searches without crashing") {
     val one = emb.filter(col("vec_id") === 0)
-    val g = Nsw.build(one, numShards = 2)
+    val g = Nsw.build(one, maxLevel = 0, numShards = 2)
     val got = Nsw.search(g, queryVec(0), k = 5, ef = 8)
       .select("vec_id").as[Long].collect().toSeq
     assert(got == Seq(0L))
@@ -143,7 +144,7 @@ class NswSpec extends SparkSpec {
     val dup = emb.filter(col("vec_id") < 8)
       .unionAll(emb.filter(col("vec_id") < 8))
     val e = intercept[org.apache.spark.SparkException] {
-      Nsw.build(dup, numShards = 2).count()
+      Nsw.build(dup, maxLevel = 0, numShards = 2).count()
     }
     assert(e.getMessage.contains("duplicate vec_id") ||
       Option(e.getCause).exists(_.getMessage.contains("duplicate vec_id")))
@@ -151,7 +152,8 @@ class NswSpec extends SparkSpec {
 
   // ------------------------------------------------------------------ HNSW
 
-  private lazy val hnsw = Nsw.buildHnsw(emb, numShards = 4).cache()
+  private lazy val hnsw =
+    Nsw.build(emb, maxLevel = Nsw.DefaultMaxLevel, numShards = 4).cache()
 
   test("hnsw level assignment is deterministic and geometric (P(level>=l) ~ 8^-l)") {
     val n = 100000
@@ -196,7 +198,7 @@ class NswSpec extends SparkSpec {
   test("hnsw unbounded beam reproduces exact brute-force top-13 (hnsw_precision regime)") {
     for (qid <- Seq(0L, 7L, 123L)) {
       val q = queryVec(qid)
-      val got = Nsw.searchHnsw(hnsw, q, k = 13, ef = Int.MaxValue)
+      val got = Nsw.search(hnsw, q, k = 13, ef = Int.MaxValue)
         .select("vec_id").as[Long].collect().toSeq
       assert(got == exactTopK(q, 13), s"query $qid diverged from brute force")
     }
@@ -206,7 +208,8 @@ class NswSpec extends SparkSpec {
     val a = hnsw.select("vec_id", "layers")
       .as[(Long, Array[Array[Long]])].collect()
       .map(r => r._1 -> r._2.map(_.toSeq).toSeq).toMap
-    val b = Nsw.buildHnsw(emb, numShards = 4).select("vec_id", "layers")
+    val b = Nsw.build(emb, maxLevel = Nsw.DefaultMaxLevel, numShards = 4)
+      .select("vec_id", "layers")
       .as[(Long, Array[Array[Long]])].collect()
       .map(r => r._1 -> r._2.map(_.toSeq).toSeq).toMap
     assert(a == b)
@@ -224,7 +227,7 @@ class NswSpec extends SparkSpec {
     }
     val flat = recall(q => Nsw.search(graph, q, k = 13, ef = 48)
       .select("vec_id").as[Long].collect().toSet)
-    val hier = recall(q => Nsw.searchHnsw(hnsw, q, k = 13, ef = 48)
+    val hier = recall(q => Nsw.search(hnsw, q, k = 13, ef = 48)
       .select("vec_id").as[Long].collect().toSet)
     assert(hier >= flat, s"hnsw recall $hier below flat NSW recall $flat at equal ef")
     assert(hier >= 0.85, s"hnsw mean recall $hier too low")
@@ -235,9 +238,9 @@ class NswSpec extends SparkSpec {
     Nsw.write(hnsw, dir)
     val reloaded = Nsw.read(spark, dir)
     val q = queryVec(0)
-    val mem = Nsw.searchHnsw(hnsw, q, k = 13, ef = 48)
+    val mem = Nsw.search(hnsw, q, k = 13, ef = 48)
       .select("vec_id").as[Long].collect().toSeq
-    val disk = Nsw.searchHnsw(reloaded, q, k = 13, ef = 48)
+    val disk = Nsw.search(reloaded, q, k = 13, ef = 48)
       .select("vec_id").as[Long].collect().toSeq
     assert(disk == mem)
     // a shard filter on the stored graph prunes at the directory level
@@ -255,12 +258,13 @@ class NswSpec extends SparkSpec {
     val cut = 400L
     val init = emb.filter(col("vec_id") < cut)
     val delta = emb.filter(col("vec_id") >= cut)
-    val grown = Nsw.insert(Nsw.build(init, numShards = 4), delta, numShards = 4)
-      .select("vec_id", "neighbors", "parent")
+    val grown = Nsw.insert(Nsw.build(init, maxLevel = 0, numShards = 4), delta,
+      numShards = 4, maxLevel = 0)
+      .select(col("vec_id"), col("layers")(0), col("parent"))
       .as[(Long, Array[Long], Long)].collect()
       .map(r => r._1 -> ((r._2.toSeq, r._3))).toMap
-    val scratch = Nsw.build(emb, numShards = 4)
-      .select("vec_id", "neighbors", "parent")
+    val scratch = Nsw.build(emb, maxLevel = 0, numShards = 4)
+      .select(col("vec_id"), col("layers")(0), col("parent"))
       .as[(Long, Array[Long], Long)].collect()
       .map(r => r._1 -> ((r._2.toSeq, r._3))).toMap
     assert(grown == scratch)
@@ -270,11 +274,12 @@ class NswSpec extends SparkSpec {
     val cut = 400L
     val init = emb.filter(col("vec_id") < cut)
     val delta = emb.filter(col("vec_id") >= cut)
-    val grown = Nsw.insertHnsw(Nsw.buildHnsw(init, numShards = 4), delta, numShards = 4)
+    val grown = Nsw.insert(Nsw.build(init, maxLevel = Nsw.DefaultMaxLevel, numShards = 4), delta,
+      numShards = 4, maxLevel = Nsw.DefaultMaxLevel)
       .select("vec_id", "level", "layers", "parent")
       .as[(Long, Int, Array[Array[Long]], Long)].collect()
       .map(r => r._1 -> ((r._2, r._3.map(_.toSeq).toSeq, r._4))).toMap
-    val scratch = Nsw.buildHnsw(emb, numShards = 4)
+    val scratch = Nsw.build(emb, maxLevel = Nsw.DefaultMaxLevel, numShards = 4)
       .select("vec_id", "level", "layers", "parent")
       .as[(Long, Int, Array[Array[Long]], Long)].collect()
       .map(r => r._1 -> ((r._2, r._3.map(_.toSeq).toSeq, r._4))).toMap
@@ -288,17 +293,27 @@ class NswSpec extends SparkSpec {
     val init = emb.filter(col("vec_id") < 400)
     val delta = emb.filter(col("vec_id") >= 400 && col("vec_id") % 4 === 1)
     assert(delta.count() > 0)
-    val base = Nsw.build(init, numShards = 4)
+    val base = Nsw.build(init, maxLevel = 0, numShards = 4)
     def rowsOf(df: org.apache.spark.sql.DataFrame, shards: Seq[Int]) =
       df.filter(col("shard").isin(shards.map(Int.box): _*))
-        .select("shard", "vec_id", "neighbors", "parent")
+        .select(col("shard"), col("vec_id"), col("layers")(0), col("parent"))
         .as[(Int, Long, Array[Long], Long)].collect()
         .map(r => (r._1, r._2) -> ((r._3.toSeq, r._4))).toMap
-    val grown = Nsw.insert(base, delta, numShards = 4)
+    val grown = Nsw.insert(base, delta, numShards = 4, maxLevel = 0)
     assert(rowsOf(grown, Seq(0, 2, 3)) == rowsOf(base, Seq(0, 2, 3)))
     // and the touched shard actually grew
     assert(grown.filter(col("shard") === 1).count() ==
       base.filter(col("shard") === 1).count() + delta.count())
+  }
+
+  test("insert with a smaller maxLevel than the graph's fails with a clear message") {
+    val delta = emb.filter(col("vec_id") < 4)
+      .withColumn("vec_id", col("vec_id") + 1000000L)
+    val e = intercept[org.apache.spark.SparkException] {
+      Nsw.insert(hnsw, delta, numShards = 4, maxLevel = 0).count()
+    }
+    assert(e.getMessage.contains("above maxLevel") ||
+      Option(e.getCause).exists(_.getMessage.contains("above maxLevel")), e.getMessage)
   }
 
   test("interleaved-id insert keeps the unbounded beam exact (insert_precision regime)") {
@@ -307,7 +322,8 @@ class NswSpec extends SparkSpec {
     // guarded-reachability invariant ⇒ ef = ∞ equals brute force
     val init = emb.filter(col("vec_id") % 5 =!= 0)
     val delta = emb.filter(col("vec_id") % 5 === 0)
-    val grown = Nsw.insert(Nsw.build(init, numShards = 4), delta, numShards = 4).cache()
+    val grown = Nsw.insert(Nsw.build(init, maxLevel = 0, numShards = 4), delta,
+      numShards = 4, maxLevel = 0).cache()
     try {
       assert(grown.count() == emb.count())
       for (qid <- Seq(0L, 7L)) {
@@ -316,11 +332,11 @@ class NswSpec extends SparkSpec {
           .select("vec_id").as[Long].collect().toSeq
         assert(got == exactTopK(q, 13), s"query $qid diverged after interleaved insert")
       }
-      val hGrown = Nsw.insertHnsw(Nsw.buildHnsw(init, numShards = 4), delta,
-        numShards = 4).cache()
+      val hGrown = Nsw.insert(Nsw.build(init, maxLevel = Nsw.DefaultMaxLevel, numShards = 4), delta,
+        numShards = 4, maxLevel = Nsw.DefaultMaxLevel).cache()
       try {
         val q = queryVec(0)
-        val got = Nsw.searchHnsw(hGrown, q, k = 13, ef = Int.MaxValue)
+        val got = Nsw.search(hGrown, q, k = 13, ef = Int.MaxValue)
           .select("vec_id").as[Long].collect().toSeq
         assert(got == exactTopK(q, 13), "hnsw diverged after interleaved insert")
       } finally hGrown.unpersist()
@@ -366,12 +382,12 @@ class NswSpec extends SparkSpec {
       .filter(col("rn") <= 5)
       .select("q_id", "vec_id").as[(Long, Long)].collect()
       .groupBy(_._1).map { case (q, ps) => q -> ps.map(_._2).toSet }
-    val got = Nsw.knnJoinHnsw(hnsw, queries, k = 5, ef = Int.MaxValue)
+    val got = Nsw.knnJoin(hnsw, queries, k = 5, ef = Int.MaxValue)
       .select("q_id", "n_id").as[(Long, Long)].collect()
       .groupBy(_._1).map { case (q, ps) => q -> ps.map(_._2).toSet }
     assert(got == exact)
     // working beam: every query still finds its own vector at d=0
-    val pruned = Nsw.knnJoinHnsw(hnsw, queries, k = 5, ef = 48)
+    val pruned = Nsw.knnJoin(hnsw, queries, k = 5, ef = 48)
       .select("q_id", "n_id").as[(Long, Long)].collect()
       .groupBy(_._1).map { case (q, ps) => q -> ps.map(_._2).toSet }
     pruned.foreach { case (q, ns) => assert(ns.contains(q), s"query $q lost its self-match") }
