@@ -69,7 +69,7 @@ object ScaleQueries {
   private val Flat = 0
   private val Layered = graft.scale.Nsw.DefaultMaxLevel
 
-  /** Embedding of vec_id 0, the single-query probe of the graph queries. */
+  /** Embedding of vec_id 0, the single-query probe of the graph and IVF queries. */
   private def vec0(spark: SparkSession, dir: String): Array[Float] =
     Tables.embeddings(spark, dir).filter(col("vec_id") === 0).select(col("embedding"))
       .head().getSeq[Float](0).toArray
@@ -360,9 +360,7 @@ object ScaleQueries {
 
   /** IVF build + probe: top-13 for the vec_id=0 query with nprobe=3/16. */
   def ivfTopk(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
+    val q = vec0(spark, dir)
     val index = defaultIndex(spark, dir)
     Ivf.search(index, q, k = 13, nprobe = 3)
       .select(col("vec_id"), col("cell"), round(col("dist") * 10000).cast("long").as("dist_e4"))
@@ -376,9 +374,7 @@ object ScaleQueries {
     * PqSpec pins recall against exact ground truth and pq_precision
     * pins the identical machinery losslessly. */
   def ivfpqTopk(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
+    val q = vec0(spark, dir)
     Pq.search(pqIndex(spark, dir, "compressed"), q, k = 13, nprobe = 3, shortlist = 64)
       .select(col("vec_id"), col("cell"),
         round(col("dist") * 10000).cast("long").as("dist_e4"))
@@ -486,9 +482,7 @@ object ScaleQueries {
     * exact brute-force top-13 — any mis-assigned or dropped vector breaks
     * the hash match. Same oracle as knn_top13. */
   def ivfPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
+    val q = vec0(spark, dir)
     val index = defaultIndex(spark, dir)
     Ivf.search(index, q, k = 13, nprobe = 16)
       .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
@@ -502,9 +496,7 @@ object ScaleQueries {
     * brute-force top-13 or the hash breaks. Same oracle as
     * ivf_precision. */
   def pqPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
+    val q = vec0(spark, dir)
     Pq.search(pqIndex(spark, dir, "lossless"), q, k = 13, nprobe = 16, shortlist = 13)
       .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))
   }
@@ -521,9 +513,7 @@ object ScaleQueries {
     * probe + filter + rerank chain must equal brute force over the
     * filtered corpus — which DuckDB recomputes. */
   def ivfFilteredPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
+    val q = vec0(spark, dir)
     Ivf.search(defaultIndex(spark, dir), q, k = 13, nprobe = 16,
       corpusFilter = col("label") % 4 === 1)
       .select(col("vec_id"), round(col("dist") * 10000).cast("long").as("dist_e4"))

@@ -2192,9 +2192,10 @@ object StoreQueries {
   }
 
   /** Snapshot-versioned NSW graph index (X291 — [[graft.store
-    * .VersionedNsw]], VERDICT r13 #6: the graph-index sibling of
-    * X273's versioned IVF): the sharded NSW adjacency lives under the
-    * store's manifest protocol, so a nightly rebuild is ONE atomic
+    * .VersionedIndex.commitGraph]], VERDICT r13 #6: the graph half of
+    * X273's versioned index, one publish protocol for both): the sharded
+    * NSW adjacency lives under the store's manifest protocol, with
+    * per-file `#stats:shard` markers, so a nightly rebuild is ONE atomic
     * replace and "search at index v1" is exact time travel pinned to
     * store v1. Index v1 is built from store v1 (vec_id % 3 != 2), the
     * rebuild publishes v2 from the grown store; searches run with an
@@ -2213,15 +2214,15 @@ object StoreQueries {
     Versioned.append(emb.filter(col("vec_id") % 3 =!= 2), store) // store v1
     val g1 = graft.scale.Nsw.build(
       Versioned.read(spark, store, Some(1)), maxLevel = 0, numShards = 4)
-    graft.store.VersionedNsw.commit(spark, idxT, g1, storeVersion = 1)
+    graft.store.VersionedIndex.commitGraph(spark, idxT, g1, storeVersion = 1)
     Versioned.append(emb.filter(col("vec_id") % 3 === 2), store) // store v2
     val g2 = graft.scale.Nsw.build(
       Versioned.read(spark, store, Some(2)), maxLevel = 0, numShards = 4)
-    graft.store.VersionedNsw.commit(spark, idxT, g2, storeVersion = 2)
+    graft.store.VersionedIndex.commitGraph(spark, idxT, g2, storeVersion = 2)
     val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
       .head.getSeq[Float](0).toArray
     def rows(v: Int) = {
-      val s = graft.store.VersionedNsw.open(spark, idxT, Some(v))
+      val s = graft.store.VersionedIndex.openGraph(spark, idxT, Some(v))
       graft.scale.Nsw.search(s.graph, q, k = 10, ef = Int.MaxValue)
         .select(lit(v.toLong).as("idx_version"),
           lit(s.storeVersion.toLong).as("store_version"), col("vec_id"),

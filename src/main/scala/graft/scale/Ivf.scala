@@ -15,10 +15,10 @@ import graft.core.VectorOps
   * scores only the `nprobe` nearest cells and exact-reranks inside them.
   *
   * Scale notes: the build is KMeans (sampled fit is fine at scale) plus one
-  * map-only assignment pass (centroids broadcast) and one
-  * repartition-by-cell write; search prunes (nlist - nprobe)/nlist of the
-  * data before any distance math, and with a cell-partitioned store the
-  * pruning is directory-level partition pruning.
+  * map-only assignment pass (centroids broadcast); search prunes
+  * (nlist - nprobe)/nlist of the data before any distance math, and on
+  * the persisted index ([[graft.store.VersionedIndex]]) the pruning is
+  * file-level, from the manifest's per-file cell stats.
   */
 object Ivf {
 
@@ -49,7 +49,8 @@ object Ivf {
     // same cell no matter which path carried it
     val assigned = emb
       .withColumn("cell", element_at(nearestCellsCol(centroids, col(vecCol), 1), 1))
-      // cluster the layout by cell: at scale this is write.partitionBy(cell)
+      // cluster the layout by cell (VersionedIndex.commit range-clusters
+      // the persisted files the same way)
       .repartition(col("cell"))
     Index(centroids, assigned)
   }
@@ -110,9 +111,9 @@ object Ivf {
     * §2.1 Q1's leakage quirk): the predicate applies AFTER cell pruning
     * and BEFORE the rerank/top-k, so matching rows can never be crowded
     * out by filtered-out neighbors (post-filtering the top-k would
-    * return < k rows). On a cell-partitioned store both prunings
-    * compose: directory-level cell pruning × parquet predicate pushdown
-    * of the metadata filter. For highly selective filters production
+    * return < k rows). On the persisted index both prunings compose:
+    * file-level cell pruning × parquet predicate pushdown of the
+    * metadata filter. For highly selective filters production
     * flips to brute force over the filtered rows (the candidate set is
     * already small); that switch is a cost decision, not a semantics
     * one — at nprobe = nlist this path IS the brute force, which is how
@@ -132,7 +133,7 @@ object Ivf {
       q: Array[Float], k: Int, idCol: String, vecCol: String,
       corpusFilter: Column): DataFrame =
     assigned
-      .filter(col("cell").isInCollection(cells)) // partition pruning at scale
+      .filter(col("cell").isInCollection(cells))
       .filter(corpusFilter)
       .withColumn("dist", VectorOps.squaredL2(col(vecCol), lit(q)))
       .orderBy(col("dist").asc, col(idCol).asc)
@@ -208,30 +209,5 @@ object Ivf {
       .select(col("count")).collect().map(_.getLong(0))
     if (sizes.isEmpty || index.centroids.isEmpty) 1.0
     else sizes.max.toDouble / (sizes.sum.toDouble / index.centroids.length)
-  }
-
-  /** Persist the index: vectors as parquet partitioned by cell (search-time
-    * cell pruning becomes directory-level partition pruning), centroids as
-    * a small side table. */
-  def write(index: Index, path: String): Unit = {
-    index.assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors")
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    index.centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** Load a persisted index. Centroids (nlist rows) come to the driver;
-    * vectors stay a lazy partitioned scan. */
-  def read(spark: SparkSession, path: String): Index = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid"))
-      .collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Float](1).toArray)
-    Index(centroids, spark.read.option("basePath", s"$path/vectors").parquet(s"$path/vectors"))
   }
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * shards, each shard builds an in-partition graph (greedy beam-search
   * insertion, bidirectional links, degree-capped) in one `mapPartitions`
   * pass, and the whole index IS a DataFrame of rows
-  * `(shard, vec_id, embedding, level, layers, parent)` — persistable as
-  * plain parquet partitioned by shard, like the IVF layout.
+  * `(shard, vec_id, embedding, level, layers, parent)`, persisted
+  * through [[graft.store.VersionedIndex.commitGraph]] like the IVF index.
   *
   * Query = map-only fan-out: every shard searches its own graph
   * independently (no cross-shard edges, so no shuffle until the final
@@ -537,17 +537,6 @@ object Nsw {
     val cells = Ivf.nearestCells(centroids, q, nprobe)
     search(graph.filter(col("shard").isInCollection(cells)), q, k, ef, admitted)
   }
-
-  /** Persist a graph as parquet partitioned by shard: the serving layout,
-    * where a pruned search's shard filter becomes directory-level
-    * partition pruning (the same contract as Ivf.write; NswSpec pins
-    * identical results through the round-trip). */
-  def write(graph: DataFrame, path: String): Unit =
-    graph.write.mode("overwrite").partitionBy("shard").parquet(path)
-
-  /** Load a persisted graph as a lazy partitioned scan. */
-  def read(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.option("basePath", path).parquet(path)
 
   // ------------------------------------------------------- batch k-NN join
 

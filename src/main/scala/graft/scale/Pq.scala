@@ -3,8 +3,6 @@ package graft.scale
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.VectorOps
-
 /** IVF-PQ: product quantization layered on the IVF cell layout — the
   * standard vector-store memory story at 100 TB (Jégou et al., "Product
   * Quantization for Nearest Neighbor Search", TPAMI 2011; the format
@@ -188,10 +186,7 @@ object Pq {
       .withColumn("adist", adcUdf(col("cell"), col("pq_code")))
       .orderBy(col("adist").asc, col(idCol).asc)
       .limit(shortlist)
-    short
-      .withColumn("dist", VectorOps.squaredL2(col(vecCol), lit(q)))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("cell"), col("dist"))
+    // exact rerank of the shortlist: IVF's own probe-and-rerank half
+    Ivf.searchCells(short, cells, q, k, idCol, vecCol, lit(true))
   }
 }

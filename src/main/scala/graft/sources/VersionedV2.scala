@@ -7,9 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, MessageTypeParser}
@@ -63,10 +60,9 @@ import graft.store.Versioned
   * uniform footers, no outstanding renames — the fixture store tables.
   * TIMESTAMP maps to parquet INT64 timestamp-micros (UTC-adjusted) and
   * DATE to INT32 date — Spark's own parquet mapping, so files
-  * interchange with native readers. The row decode path is the
-  * parquet-hadoop example Group API kept as the
-  * `-Dgraft.v2.columnar=off` fallback; the default scan is the
-  * vectorized [[VersionedColumnarReader]]. */
+  * interchange with native readers. Every non-empty projection decodes
+  * through the vectorized [[VersionedColumnarReader]]; empty ones
+  * (COUNT(*)) answer from footers in [[VersionedCountReader]]. */
 class VersionedV2 extends TableProvider with DataSourceRegister {
 
   override def shortName(): String = "graft-versioned"
@@ -108,8 +104,8 @@ object VersionedV2 {
   /** The table's schema: the manifest's RECORDED schema marker when one
     * exists (authoritative — it is what ADD COLUMN / append-time
     * evolution maintain, and pre-evolution files serve NULL for columns
-    * they lack via the per-file read-schema clip in
-    * [[VersionedPartitionReader]]); otherwise the first data file's
+    * they lack via the per-file schema handling in
+    * [[VersionedColumnarReader]]); otherwise the first data file's
     * footer (marker-free legacy tables with uniform footers — the
     * original scoped contract). Outstanding renames would make names
     * lie, so they are rejected loudly. */
@@ -1085,8 +1081,10 @@ private[sources] class VersionedReaderFactory extends PartitionReaderFactory {
     // metadata alone — ZERO data pages opened at any table size (a file
     // with deletion vectors additionally reads its sidecars, still no
     // data pages)
-    if (p.emitEmptyRows) new VersionedCountReader(p.file, p.dvFiles)
-    else new VersionedPartitionReader(p)
+    require(p.emitEmptyRows,
+      s"graft-versioned: ${p.file} has a non-empty projection; it must " +
+        "take the columnar reader")
+    new VersionedCountReader(p.file, p.dvFiles)
   }
 
   /** Columnar decode for the connector's full projection surface — the
@@ -1100,21 +1098,8 @@ private[sources] class VersionedReaderFactory extends PartitionReaderFactory {
     * empty projections keep the count reader (per-partition decision is
     * schema-only, so every partition of a scan agrees — Spark requires
     * uniformity). */
-  override def supportColumnarReads(partition: InputPartition): Boolean = {
-    val p = partition.asInstanceOf[VersionedFilePartition]
-    // -Dgraft.v2.columnar=off forces the row reader — the seam
-    // VersionedV2Spec uses to compare the columnar reader against the row
-    // reader (and an escape hatch); default is ON
-    sys.props.get("graft.v2.columnar").forall(_ != "off") &&
-    !p.emitEmptyRows && p.required.fields.forall(f =>
-      f.name == VersionedV2.FileMetaCol || (f.dataType match {
-        case LongType | IntegerType | DoubleType | FloatType |
-             BooleanType | StringType | TimestampType | DateType => true
-        case dt: DecimalType if dt.precision <= 18 => true
-        case ArrayType(FloatType, _) => true
-        case _ => false
-      }))
-  }
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    !partition.asInstanceOf[VersionedFilePartition].emitEmptyRows
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
@@ -1150,8 +1135,7 @@ private[sources] class VersionedCountReader(file: String,
 
 /** Vectorized parquet decode — the scan path a 100 TB table rides.
   *
-  * The row reader ([[VersionedPartitionReader]], kept as the
-  * `-Dgraft.v2.columnar=off` fallback) materializes one example-API
+  * A row reader over the example Group API would materialize one
   * `Group` PER ROW: an object graph, a field-by-name lookup and a boxed
   * value per cell — allocation-bound at scan rates. This reader walks
   * each row group's column pages directly (`ColumnReadStoreImpl`, the
@@ -1161,8 +1145,8 @@ private[sources] class VersionedCountReader(file: String,
   * `array<float>` embedding columns decode on this path too — the
   * repeated-FLOAT values stream into the array vector's child in one
   * repetition-level loop (the vector-payload scan behind every k-NN /
-  * ANN-build / re-embed read). Per-file schema handling is IDENTICAL to
-  * the row reader (the evolution contract): requested columns this file
+  * ANN-build / re-embed read). Per-file schema handling is the evolution
+  * contract: requested columns this file
   * lacks serve a constant-null vector, `_graft_file` a constant-string
   * vector, present columns decode under the FILE's own column
   * descriptors. Vectors are reused across batches (reset, not
@@ -1203,7 +1187,7 @@ private[sources] class VersionedColumnarReader(p: VersionedFilePartition)
     } else if (!fileFields(f.name)) {
       // evolution constant: the column's EXISTS_DEFAULT if declared
       // (ALTER ADD COLUMN ... DEFAULT — ANSI: old rows read the
-      // default), NULL otherwise — mirrors the row reader exactly
+      // default), NULL otherwise
       val v = new ConstantColumnVector(Cap, f.dataType)
       org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
           .getExistenceDefaultValue(f) match {
@@ -1407,8 +1391,8 @@ private[sources] class VersionedColumnarReader(p: VersionedFilePartition)
             // boundaries are repetition level 0; records never span row
             // groups and batches align to records, so the inner loop can
             // peek the NEXT value's repetition level safely under the
-            // remaining-value guard. Matches the row reader: def-0 decodes
-            // as the EMPTY array (2-level lists cannot represent null).
+            // remaining-value guard. def-0 decodes as the EMPTY array
+            // (2-level lists cannot represent null).
             // Deleted records consume their values without emitting.
             val child = vec.arrayData()
             var left = valuesLeft(k)
@@ -1456,136 +1440,4 @@ private[sources] class VersionedColumnarReader(p: VersionedFilePartition)
     batch.close()
     reader.close()
   }
-}
-
-/** Row-at-a-time parquet decode through the example Group API — one open
-  * per file, projection applied via the read schema. */
-private[sources] class VersionedPartitionReader(p: VersionedFilePartition)
-    extends PartitionReader[InternalRow] {
-
-  private val projected = MessageTypeParser.parseMessageType(p.projectedMsg)
-  // CLIP the requested read schema to the fields THIS file actually has:
-  // after ADD COLUMN / append-time evolution, pre-evolution files lack
-  // the new columns and must serve NULL (GroupReadSupport rejects a
-  // requested field absent from the file schema outright). One footer
-  // open per file — the file is being opened anyway.
-  private val fileMsg: MessageType = {
-    val in = HadoopInputFile.fromPath(new Path(p.file), new Configuration())
-    val r = ParquetFileReader.open(in)
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-  private val fileFields: Set[String] =
-    fileMsg.getFields.asScala.map(_.getName).toSet
-  private val readMsg = {
-    val keep = projected.getFields.asScala.map(_.getName).toSeq
-      .filter(fileFields)
-    // every requested column postdating this file: read the file's first
-    // field so row multiplicity survives, emit all-NULL data columns
-    val names =
-      if (keep.nonEmpty) keep
-      else Seq(fileMsg.getFields.asScala.head.getName)
-    // field DEFINITIONS come from the FILE (GroupReadSupport requires the
-    // requested repetition to match — a marker-derived `optional` request
-    // against a `required` file field is rejected outright)
-    new MessageType(projected.getName,
-      names.map(n => fileMsg.getType(fileMsg.getFieldIndex(n))).asJava)
-  }
-  private val conf = new Configuration()
-  conf.set(ReadSupport.PARQUET_READ_SCHEMA, readMsg.toString)
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new Path(p.file))
-      .withConf(conf).build()
-  // required-schema order may differ from file order; map by name. The
-  // `_graft_file` metadata column maps to -1 and serves the partition's
-  // own file path; a column this file PREDATES maps to -2 and serves
-  // NULL
-  private val fieldIdx: Array[Int] =
-    p.required.fields.map(f =>
-      if (f.name == VersionedV2.FileMetaCol) -1
-      else if (!fileFields(f.name)) -2
-      else readMsg.getFieldIndex(f.name))
-  private val types: Array[DataType] = p.required.fields.map(_.dataType)
-  // file fields carrying legacy INT96 timestamps (decode differs)
-  private val isInt96: Array[Boolean] = p.required.fields.map(f =>
-    fileFields(f.name) && {
-      val t = fileMsg.getType(fileMsg.getFieldIndex(f.name))
-      t.isPrimitive && t.asPrimitiveType().getPrimitiveTypeName == INT96
-    })
-  // compact decimals may ride INT32 (external writers, p <= 9) or INT64
-  private val isInt32: Array[Boolean] = p.required.fields.map(f =>
-    fileFields(f.name) && {
-      val t = fileMsg.getType(fileMsg.getFieldIndex(f.name))
-      t.isPrimitive && t.asPrimitiveType().getPrimitiveTypeName == INT32
-    })
-  // a column added via `ALTER TABLE ... ADD COLUMN c T DEFAULT v` reads
-  // as v (not NULL) from rows predating it — ANSI/Postgres semantics,
-  // carried in the field's EXISTS_DEFAULT metadata (null when the column
-  // has no default, which keeps the plain-evolution NULL contract)
-  private val missingValue: Array[Any] = p.required.fields.map(f =>
-    org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-      .getExistenceDefaultValue(f))
-  private val fileValue = UTF8String.fromString(p.file)
-  private var cur: Group = _
-  // deletion vectors: sorted distinct positions to skip; reads are
-  // sequential so one monotone pointer replaces per-row binary search
-  private val deleted: Array[Long] =
-    if (p.dvFiles.isEmpty) Array.emptyLongArray
-    else Versioned.readDvPositions(p.dvFiles)
-  private var dvPtr = 0
-  private var pos = -1L
-
-  override def next(): Boolean = {
-    while (true) {
-      cur = reader.read()
-      if (cur == null) return false
-      pos += 1
-      while (dvPtr < deleted.length && deleted(dvPtr) < pos) dvPtr += 1
-      if (!(dvPtr < deleted.length && deleted(dvPtr) == pos)) return true
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow =
-    if (p.emitEmptyRows) new GenericInternalRow(0)
-    else {
-      val vals = new Array[Any](fieldIdx.length)
-      var i = 0
-      while (i < fieldIdx.length) {
-        val fi = fieldIdx(i)
-        vals(i) =
-          if (fi == -1) fileValue
-          // column added after this file was written: its EXISTS_DEFAULT
-          // if declared, NULL otherwise
-          else if (fi == -2) missingValue(i)
-          else types(i) match {
-            // repeated field: ALL occurrences are the vector (count 0 =
-            // empty array, never null — 2-level lists can't tell apart)
-            case ArrayType(FloatType, _) =>
-              val n = cur.getFieldRepetitionCount(fi)
-              val a = new Array[Float](n)
-              var j = 0
-              while (j < n) { a(j) = cur.getFloat(fi, j); j += 1 }
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(a)
-            case _ if cur.getFieldRepetitionCount(fi) == 0 => null
-            case TimestampType if isInt96(i) =>
-              VersionedV2.int96ToMicros(cur.getInt96(fi, 0).getBytes)
-            case LongType | TimestampType => cur.getLong(fi, 0)
-            case dt: DecimalType =>
-              val unscaled =
-                if (isInt32(i)) cur.getInteger(fi, 0).toLong
-                else cur.getLong(fi, 0)
-              org.apache.spark.sql.types.Decimal(unscaled, dt.precision, dt.scale)
-            case IntegerType | DateType => cur.getInteger(fi, 0)
-            case DoubleType => cur.getDouble(fi, 0)
-            case FloatType => cur.getFloat(fi, 0)
-            case BooleanType => cur.getBoolean(fi, 0)
-            case StringType => UTF8String.fromBytes(cur.getBinary(fi, 0).getBytes)
-            case other => sys.error(s"unsupported type $other")
-          }
-        i += 1
-      }
-      new GenericInternalRow(vals)
-    }
-
-  override def close(): Unit = reader.close()
 }

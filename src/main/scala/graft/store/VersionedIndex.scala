@@ -5,43 +5,34 @@ import org.apache.spark.sql.functions._
 
 import graft.scale.Ivf
 
-/** Snapshot-versioned serving index — the vector index managed by the
-  * SAME manifest machinery as the store it serves (round-12 verdict ask
-  * #5: the IVF/NSW directories were the one mutable-in-place corner of
-  * an otherwise time-travelable system; `nightly_crawl`'s delete→insert
-  * edited live files, so a reader mid-rebuild could see a torn index,
-  * and nothing pinned index↔store consistency).
+/** Snapshot-versioned ANN index — the one way an IVF index or an
+  * NSW/HNSW graph is persisted, under the SAME manifest machinery as the
+  * store it serves (round-12 verdict ask #5: in-place index directories
+  * let a reader mid-rebuild see a torn index, and nothing pinned
+  * index↔store consistency). Chroma keeps its HNSW and its metadata in
+  * one consistent collection the same way (reference app.py:73-76).
   *
-  * Design: one index version is ONE [[Versioned]] table version holding
-  * three row kinds in a single schema —
-  *   - `kind = 'v'`: the assigned vectors (vec_id, embedding, cell),
-  *   - `kind = 'c'`: the centroids (cell, centroid),
-  *   - `kind = 'm'`: one meta row carrying the STORE version this index
-  *     was built from.
-  * Publishing is one atomic manifest commit (centroids, vectors and the
-  * store pin can never tear apart); a REBUILD replaces the previous
-  * content in one commit, with old snapshots readable until vacuum —
-  * exactly the contract the data table already has. Chroma keeps its
-  * HNSW and its metadata in one consistent collection the same way
-  * (reference app.py:73-76); here the consistency comes from the log.
+  * One index version is ONE [[Versioned]] table version, one schema:
+  *   - IVF: `kind = 'v'` vectors (cell, vec_id, embedding) and
+  *     `kind = 'c'` centroids (cell, centroid);
+  *   - graph: `kind = 'g'` rows (shard, vec_id, embedding, level, layers,
+  *     parent) — [[graft.scale.Nsw.build]]'s output, flat or layered;
+  *   - both: one `kind = 'm'` meta row pinning the STORE version.
+  * Both publish through one protocol: rows land RANGE-clustered on their
+  * key (`cell` / `shard`) with each file's `#stats:<key>` [min, max]
+  * marker IN the data commit, so a probe selects FILES from the
+  * manifest alone ([[search]]; [[Versioned.prunedFilesIn]] on `shard`)
+  * — at 100 TB a 3-of-256-cell probe opens ~3/256 of the index files.
+  * A rebuild replaces the content in one commit; old versions stay
+  * time-travelable until vacuum, the data table's own contract.
   *
-  * Concurrency: [[open]] resolves the manifest ONCE, so a snapshot in a
-  * reader's hands keeps serving its exact files through any number of
-  * concurrent rebuilds (VersionedIndexSpec races them). Two concurrent
-  * rebuilds serialize through the put-if-absent commit: the loser's
-  * rewrite fails loudly ([[Versioned.commitExternalRewrite]]'s
-  * lost-inputs check), never half-lands.
-  *
-  * Scale: a rebuild writes O(index) — the right cost for a layout change
-  * (new centroids re-cell every vector anyway). Incremental delete→
-  * insert maintenance between rebuilds edits the Index value in memory
-  * (Ivf.append / anti-join) and commits the result through the same
-  * path. Vectors land RANGE-clustered by cell and every vector file's
-  * `#stats:cell` [min, max] marker publishes IN the data commit, so
-  * [[search]]'s probe filter selects FILES from the manifest alone —
-  * at 100 TB a 3-of-256-cell probe opens ~3/256 of the index files
-  * instead of scanning all of them and discarding rows after decode
-  * (VERDICT r13's one scale-weak path, closed). */
+  * Concurrency: an open resolves the manifest ONCE, so a snapshot keeps
+  * serving its exact files through any number of rebuilds
+  * (VersionedIndexSpec races them). Two racing rebuilds serialize
+  * through the put-if-absent commit: the loser fails loudly (the
+  * atomic replace's lost-inputs check). A rebuild
+  * writes O(index); incremental maintenance (Ivf.append / Nsw.insert)
+  * edits the index value in memory and commits through the same path. */
 object VersionedIndex {
 
   /** A pinned, immutable view: `index` reads exactly `version`'s files
@@ -64,6 +55,11 @@ object VersionedIndex {
       scala.collection.concurrent.TrieMap.empty[(String, Seq[String]), org.apache.spark.sql.DataFrame]
   }
 
+  /** A pinned graph view: `graph` is a lazy scan of `version`'s graph
+    * rows for [[graft.scale.Nsw.search]]; `version` lets a caller prune
+    * files by shard through [[Versioned.prunedFilesIn]]. */
+  case class GraphSnapshot(graph: DataFrame, version: Int, storeVersion: Int)
+
   /** Publish `index` as the next version of `table` in ONE atomic
     * commit pinned to `storeVersion`. First publish creates the table;
     * later publishes REPLACE the full content (old versions remain
@@ -72,57 +68,80 @@ object VersionedIndex {
       storeVersion: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): Int = {
     import spark.implicits._
-    val nullVec = lit(null).cast("array<float>")
     val vectors = index.assigned.select(
       lit("v").as("kind"),
       col("cell").cast("int").as("cell"),
       col(idCol).cast("long").as("vec_id"),
-      col(vecCol).as("embedding"),
-      nullVec.as("centroid"),
-      lit(null).cast("long").as("store_version"))
+      col(vecCol).as("embedding"))
     val centroids = index.centroids.zipWithIndex.toSeq
       .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "centroid")
-      .select(lit("c").as("kind"), col("cell").cast("int").as("cell"),
-        lit(null).cast("long").as("vec_id"), nullVec.as("embedding"),
-        col("centroid").cast("array<float>").as("centroid"),
-        lit(null).cast("long").as("store_version"))
+      .select(lit("c").as("kind"), col("cell"),
+        col("centroid").cast("array<float>").as("centroid"))
+    publish(spark, table, vectors, "cell", index.centroids.length,
+      Some(centroids), storeVersion)
+  }
+
+  /** Publish an [[graft.scale.Nsw]] graph frame as the next version of
+    * `table` — [[commit]]'s contract, keyed on `shard`: one file per
+    * shard range, at most the session's shuffle parallelism of them. */
+  def commitGraph(spark: SparkSession, table: String, graph: DataFrame,
+      storeVersion: Int): Int = {
+    // persisted for the publish: range clustering samples its input in
+    // a job of its own, and a graph's input is the whole graph build
+    val rows = graph.select(
+      lit("g").as("kind"),
+      col("shard").cast("int").as("shard"),
+      col("vec_id").cast("long").as("vec_id"),
+      col("embedding").cast("array<float>").as("embedding"),
+      col("level").cast("int").as("level"),
+      col("layers").cast("array<array<bigint>>").as("layers"),
+      col("parent").cast("long").as("parent")).persist()
+    try publish(spark, table, rows, "shard",
+      spark.sessionState.conf.numShufflePartitions, None, storeVersion)
+    finally rows.unpersist()
+  }
+
+  /** The one publish: stage `rows` RANGE-clustered on `key` into at most
+    * `files` files (a contiguous key span per file, so the per-file
+    * [min, max] marker is tight — hash clustering would smear each file
+    * across the key space and the stats could never prune) plus one tail
+    * file holding `tail` and the meta row; then commit the batch with its
+    * `#stats:<key>` markers, put-if-absent at v1 or one atomic replace. */
+  private def publish(spark: SparkSession, table: String, rows: DataFrame,
+      key: String, files: Int, tail: Option[DataFrame],
+      storeVersion: Int): Int = {
+    import spark.implicits._
     val meta = Seq(storeVersion.toLong).toDF("store_version")
-      .select(lit("m").as("kind"), lit(null).cast("int").as("cell"),
-        lit(null).cast("long").as("vec_id"), nullVec.as("embedding"),
-        nullVec.as("centroid"), col("store_version"))
+      .select(lit("m").as("kind"), col("store_version"))
+    val tailRows = tail.fold(meta)(_.unionByName(meta, allowMissingColumns = true))
     val batch = f"idx-${java.util.UUID.randomUUID().toString.take(8)}"
     val dir = new java.io.File(table, batch)
-    // RANGE-clustered vector files (contiguous cell span per file, so
-    // the per-file [min, max] cell marker is tight — hash clustering
-    // would smear each file across the cell space and the stats could
-    // never prune); centroids + meta ride a small tail file
-    vectors.repartitionByRange(math.max(1, index.centroids.length), col("cell"))
-      .unionByName(centroids.coalesce(1)).unionByName(meta.coalesce(1))
+    rows.repartitionByRange(math.max(1, files), col(key))
+      .unionByName(tailRows.coalesce(1), allowMissingColumns = true)
       .write.parquet(dir.getPath)
     val added = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => s"$batch/${f.getName}").toSeq.sorted
-    // per-file cell [min, max], published IN the data commit (one
-    // column-pruned pass over the just-staged batch — no second
-    // ANALYZE job, no second version, and time travel to THIS version
-    // prunes too). The centroid tail file spans every cell (kept by any
-    // probe — it is tiny); the meta row's NULL cell contributes no
-    // marker for its file, so it is conservatively kept, same as any
-    // unanalyzed file.
+    // per-file key [min, max], published IN the data commit (one
+    // column-pruned pass over the just-staged batch — no second ANALYZE
+    // job, no second version, and time travel to THIS version prunes
+    // too). The IVF tail file spans every cell (kept by any probe — it is
+    // tiny); a NULL key contributes no marker, so a meta-only tail file
+    // is conservatively kept, same as any unanalyzed file.
     val markers = spark.read.parquet(dir.getPath)
       .select(element_at(split(col("_metadata.file_path"), "/"), -1).as("f"),
-        col("cell").cast("long").as("x"))
+        col(key).cast("long").as("x"))
       .where(col("x").isNotNull)
       .groupBy("f").agg(min("x").as("mn"), max("x").as("mx"))
       .collect()
       .map(r => Versioned.statsMarkerLine(table, s"$batch/${r.getString(0)}",
-        "cell", r.getLong(1), r.getLong(2))).toSeq
+        key, r.getLong(1), r.getLong(2))).toSeq
     if (Versioned.currentVersion(table) == 0)
       // FIRST publish: a direct put-if-absent commit at v1 — two racing
       // bootstraps must not merge (commitExternalFiles' blind conflict
       // retry would APPEND the loser's files to the winner's index: two
-      // meta rows, mixed vector sets). The loser's EEXIST surfaces as
-      // the same loud conflict the rebuild path reports.
+      // meta rows, mixed row sets). The loser's EEXIST surfaces as the
+      // same loud conflict the rebuild path reports.
       Versioned.commit(table, 0, added ++ markers)
     else
       // atomic full replace: the loser of a rebuild race fails loudly
@@ -130,32 +149,47 @@ object VersionedIndex {
         Versioned.files(table), extraMarkers = markers)
   }
 
-  /** Open a PINNED snapshot of `version` (default: latest): the file
-    * list resolves here, once — a concurrent rebuild commits new files
-    * and retires these from the MANIFEST, but the files themselves stay
-    * until vacuum, so this snapshot keeps serving consistent results.
-    * Centroids (nlist rows) and the store pin come to the driver; the
-    * vectors stay a lazy scan for [[Ivf.search]]/[[Ivf.knnJoin]]. */
-  def open(spark: SparkSession, table: String,
-      version: Option[Int] = None): Snapshot = {
+  /** Resolve `version` (default: latest) ONCE and read its rows with the
+    * store pin: a concurrent rebuild commits new files and retires these
+    * from the MANIFEST, but the files themselves stay until vacuum, so a
+    * snapshot keeps serving consistent results. A version without its
+    * meta row is corrupt or partially written and fails naming table and
+    * version, not with a bare NoSuchElementException (ADVICE r13). */
+  private def pinned(spark: SparkSession, table: String,
+      version: Option[Int]): (Int, DataFrame, Int) = {
     val v = version.getOrElse(Versioned.currentVersion(table))
     val df = Versioned.read(spark, table, Some(v))
-    val centroids = df.filter(col("kind") === "c")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray)
-    require(centroids.nonEmpty, s"index $table v$v has no centroid rows")
-    // guarded like the centroid check: a corrupt/partial index version
-    // must surface as a diagnostic error naming table and version, not
-    // a bare NoSuchElementException from .head (ADVICE r13)
     val metaRows = df.filter(col("kind") === "m")
       .select(col("store_version")).collect()
     require(metaRows.nonEmpty,
       s"index $table v$v has no meta row (store-version pin) — " +
         "corrupt or partially-written index version")
-    val storeVersion = metaRows.head.getLong(0).toInt
+    (v, df, metaRows.head.getLong(0).toInt)
+  }
+
+  /** Open a PINNED IVF snapshot of `version` (default: latest).
+    * Centroids (nlist rows) and the store pin come to the driver; the
+    * vectors stay a lazy scan for [[Ivf.search]]/[[Ivf.knnJoin]]. */
+  def open(spark: SparkSession, table: String,
+      version: Option[Int] = None): Snapshot = {
+    val (v, df, storeVersion) = pinned(spark, table, version)
+    val centroids = df.filter(col("kind") === "c")
+      .select(col("cell"), col("centroid")).collect()
+      .sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray)
+    require(centroids.nonEmpty, s"index $table v$v has no centroid rows")
     val vectors = df.filter(col("kind") === "v")
       .select(col("vec_id"), col("embedding"), col("cell"))
     Snapshot(Ivf.Index(centroids, vectors), v, storeVersion, table)
+  }
+
+  /** Open a PINNED graph snapshot of `version` (default: latest); the
+    * graph stays a lazy scan for [[graft.scale.Nsw.search]]. */
+  def openGraph(spark: SparkSession, table: String,
+      version: Option[Int] = None): GraphSnapshot = {
+    val (v, df, storeVersion) = pinned(spark, table, version)
+    val graph = df.filter(col("kind") === "g").select(
+      Seq("shard", "vec_id", "embedding", "level", "layers", "parent").map(col): _*)
+    GraphSnapshot(graph, v, storeVersion)
   }
 
   /** The index files a `nprobe`-cell probe for `q` would OPEN at this

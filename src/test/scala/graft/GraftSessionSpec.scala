@@ -9,7 +9,7 @@ import graft.plans.TopKPerGroup
 /** Tier-1 runs under the graded session policy, and the policy stays in
   * one place: the suites' shared session carries `GraftSession`'s conf
   * and injected planner strategy, and no main source builds a session
-  * of its own or reads a streaming env knob. */
+  * of its own or reads a streaming env knob or a JVM system property. */
 class GraftSessionSpec extends SparkSpec {
 
   test("the shared test session carries the GraftSession conf and extensions") {
@@ -48,6 +48,16 @@ class GraftSessionSpec extends SparkSpec {
       p <- mainSources
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
       if line.contains("SPARK_GRAFT_STREAM_")
+    } yield s"$p:${i + 1}"
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("no JVM system-property knob in main sources") {
+    val offenders = for {
+      p <- mainSources
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if !isComment(line) && (line.contains("sys.props.get(\"graft.") ||
+        line.contains("System.getProperty(\"graft."))
     } yield s"$p:${i + 1}"
     assert(offenders.isEmpty, offenders.mkString(", "))
   }

@@ -12,13 +12,13 @@ import graft.SparkSpec
 class TopKPerGroupSpec extends SparkSpec {
   import spark.implicits._
 
+  // the shared session already carries TopKPerGroup.Strategy through
+  // GraftExtensions; only the flag is toggled, and restored afterwards
   private def withStrategy[T](f: => T): T = {
-    if (!spark.experimental.extraStrategies
-        .exists(_.isInstanceOf[TopKPerGroup.Strategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroup.Strategy(spark)
+    val prev = spark.conf.getOption(TopKPerGroup.EnabledKey)
     spark.conf.set(TopKPerGroup.EnabledKey, "true")
-    try f finally spark.conf.set(TopKPerGroup.EnabledKey, "false")
+    try f finally prev.fold(spark.conf.unset(TopKPerGroup.EnabledKey))(
+      spark.conf.set(TopKPerGroup.EnabledKey, _))
   }
 
   private val rnd = new scala.util.Random(20260814L)

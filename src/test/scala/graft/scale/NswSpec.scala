@@ -234,19 +234,21 @@ class NswSpec extends SparkSpec {
   }
 
   test("persisted hnsw graph reloads, prunes by shard, and searches identically") {
-    val dir = tmpDir("nsw").toString + "/hnsw"
-    Nsw.write(hnsw, dir)
-    val reloaded = Nsw.read(spark, dir)
+    val t = tmpDir("nsw").toString + "/hnsw"
+    graft.store.VersionedIndex.commitGraph(spark, t, hnsw, storeVersion = 1)
+    val reloaded = graft.store.VersionedIndex.openGraph(spark, t)
     val q = queryVec(0)
     val mem = Nsw.search(hnsw, q, k = 13, ef = 48)
       .select("vec_id").as[Long].collect().toSeq
-    val disk = Nsw.search(reloaded, q, k = 13, ef = 48)
+    val disk = Nsw.search(reloaded.graph, q, k = 13, ef = 48)
       .select("vec_id").as[Long].collect().toSeq
     assert(disk == mem)
-    // a shard filter on the stored graph prunes at the directory level
-    val plan = reloaded.filter(col("shard") === 1)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("shard"), plan)
+    // a shard probe on the stored graph prunes at the file level, from
+    // the manifest's #stats:shard markers alone
+    val all = graft.store.Versioned.files(t, Some(reloaded.version))
+    val kept = graft.store.Versioned.prunedFilesIn(t, reloaded.version,
+      "shard", Seq(1L))
+    assert(kept.size < all.size, s"shard 1 kept ${kept.size} of ${all.size} files")
   }
 
   // --------------------------------------------------- incremental insert

@@ -119,19 +119,23 @@ class ScaleSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0).select("embedding")
       .head().getSeq[Float](0).toArray
     val index = Ivf.build(spark, emb)
-    val dir = tmpDir("ivf").toString + "/index"
-    Ivf.write(index, dir)
-    val reloaded = Ivf.read(spark, dir)
+    val t = tmpDir("ivf").toString + "/index"
+    graft.store.VersionedIndex.commit(spark, t, index, storeVersion = 1)
+    val snap = graft.store.VersionedIndex.open(spark, t)
+    val reloaded = snap.index
     assert(reloaded.centroids.map(_.toSeq).toSeq == index.centroids.map(_.toSeq).toSeq)
     val mem = Ivf.search(index, q, k = 13, nprobe = 3)
       .select("vec_id").as[Long].collect().toSeq
     val disk = Ivf.search(reloaded, q, k = 13, nprobe = 3)
       .select("vec_id").as[Long].collect().toSeq
     assert(disk == mem)
-    // the cell filter must reach the partitioned scan as partition pruning
-    val plan = Ivf.search(reloaded, q, k = 13, nprobe = 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"), plan)
+    // the probed cells must prune the stored index at the file level
+    val pruned = graft.store.VersionedIndex.search(spark, snap, q, k = 13, nprobe = 3)
+      .select("vec_id").as[Long].collect().toSeq
+    assert(pruned == mem)
+    val all = graft.store.Versioned.files(t, Some(snap.version))
+    val kept = graft.store.VersionedIndex.probeFiles(snap, q, nprobe = 3)
+    assert(kept.size < all.size, s"nprobe=3 kept ${kept.size} of ${all.size} files")
   }
 
   test("IVF incremental append: new vectors are searchable without a refit") {

@@ -878,12 +878,9 @@ class VersionedV2Spec extends SparkSpec {
     assert(proj.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
       proj.queryExecution.executedPlan.toString)
     val viaColumnar = proj.as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
-    val viaRow =
-      try {
-        System.setProperty("graft.v2.columnar", "off")
-        v2(path).select("id", "emb").as[(Long, Seq[Float])]
-          .collect().sortBy(_._1).toSeq
-      } finally System.clearProperty("graft.v2.columnar")
+    // reference: Spark's own parquet reader over the same version
+    val viaRow = Versioned.read(spark, path).select("id", "emb")
+      .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
     assert(viaColumnar.size == 10000 && viaColumnar == viaRow)
     // spot-check content, not just reader agreement
     assert(viaColumnar(9L.toInt)._2 == Seq(9f, 9.25f),
@@ -1084,9 +1081,9 @@ class VersionedV2Spec extends SparkSpec {
       def all() = spark.sql(s"SELECT id, emb FROM $cat.e")
         .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
       val columnar = all()
-      val row = try {
-        System.setProperty("graft.v2.columnar", "off"); all()
-      } finally System.clearProperty("graft.v2.columnar")
+      // reference: Spark's own parquet reader, deletion vectors applied
+      val row = Versioned.read(spark, path).select("id", "emb")
+        .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
       (columnar, row)
     }
     // compact used to stage with the native writer (3-level LIST), which
@@ -1133,10 +1130,10 @@ class VersionedV2Spec extends SparkSpec {
       (3L, Some("2021-11-07 01:30:00.000001"), Some("2021-11-07")),
       (4L, None, None))
     assert(collectAll() == expected)
-    // the row reader agrees (columnar is the default path above)
-    val viaRow =
-      try { System.setProperty("graft.v2.columnar", "off"); collectAll() }
-      finally System.clearProperty("graft.v2.columnar")
+    // Spark's own parquet reader agrees (the connector read is above)
+    val viaRow = Versioned.read(spark, s"$root/t")
+      .selectExpr("id", "CAST(ts AS STRING)", "CAST(d AS STRING)").orderBy("id")
+      .as[(Long, Option[String], Option[String])].collect().toSeq
     assert(viaRow == expected)
     // a typed-literal DELETE translates through the predicate bridge
     spark.sql(s"DELETE FROM $cat.t WHERE ts < TIMESTAMP'1970-01-01 00:00:00'")
@@ -1158,9 +1155,9 @@ class VersionedV2Spec extends SparkSpec {
     val expected = Seq((1L, Some("12.34")), (2L, Some("-0.05")),
       (3L, Some("9999999999.99")), (4L, None))
     assert(readAll() == expected)
-    val viaRow =
-      try { System.setProperty("graft.v2.columnar", "off"); readAll() }
-      finally System.clearProperty("graft.v2.columnar")
+    val viaRow = Versioned.read(spark, s"$root/m")
+      .selectExpr("id", "CAST(amount AS STRING)").orderBy("id")
+      .as[(Long, Option[String])].collect().toSeq
     assert(viaRow == expected)
     // typed decimal literal through the DELETE predicate bridge
     spark.sql(s"DELETE FROM $cat.m WHERE amount < 0.00")
@@ -1204,13 +1201,9 @@ class VersionedV2Spec extends SparkSpec {
     assert(viaCol.forall { case (i, s, e) =>
       s == (i % 5).toString && e == Seq(i.toFloat, (i + 1).toFloat) },
       "surviving rows keep aligned values across scalar and array columns")
-    // row reader agrees batch-for-batch
-    val viaRow =
-      try {
-        System.setProperty("graft.v2.columnar", "off")
-        v2(path).select("id", "s", "emb")
-          .as[(Long, String, Seq[Float])].collect().sortBy(_._1).toSeq
-      } finally System.clearProperty("graft.v2.columnar")
+    // Spark's own parquet reader, deletion vectors applied, agrees
+    val viaRow = Versioned.read(spark, path).select("id", "s", "emb")
+      .as[(Long, String, Seq[Float])].collect().sortBy(_._1).toSeq
     assert(viaRow == viaCol)
     // COUNT(*): the zero-data-page count reader subtracts sidecar counts
     assert(v2(path).count() == expectIds.size)
