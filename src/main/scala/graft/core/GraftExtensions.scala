@@ -28,9 +28,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // its exact logical pattern AND when its conf flag is set — see
     // graft.plans.TopKPerGroup)
     ext.injectPlannerStrategy(session => graft.plans.TopKPerGroup.Strategy(session))
-    // automatic manifest-stats file skipping over Versioned.table reads
-    // (fires only on relations tagged with the graft.table reader option)
-    ext.injectOptimizerRule(session => graft.plans.StatsSkip.SkipRule(session))
     // SQL CREATE/DROP VIEW + view reads for graft catalogs (X278) — a
     // delegating parser, the Delta/Iceberg injection pattern (Spark's own
     // analyzer routes view DDL to the session catalog only; see

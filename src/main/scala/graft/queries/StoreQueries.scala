@@ -1137,9 +1137,10 @@ object StoreQueries {
   }
 
   /** LOG-level data skipping ([[graft.store.Versioned.analyzeStats]] /
-    * `readPruned` — the Delta per-file-stats design): ANALYZE records
-    * each file's [min, max] of the key column as manifest marker lines,
-    * after which a range read selects files from the MANIFEST ALONE —
+    * [[graft.store.Versioned.prunedFiles]] — the Delta per-file-stats
+    * design): ANALYZE records each file's [min, max] of the key column
+    * as manifest marker lines, after which a range read selects files
+    * from the MANIFEST ALONE —
     * zero footer opens, zero directory listing (the log-level
     * complement of zorder_scan's footer-envelope skipping; at 100 TB
     * with 10⁵ files that is the difference between one small-file read
@@ -1152,39 +1153,20 @@ object StoreQueries {
     * correctness never depends on ANALYZE coverage. */
   def statsPrunedScan(spark: SparkSession, dir: String): DataFrame = {
     val path = scratch("statsprune", dir)
-    rmTree(path)
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("v"))
-    (0 until 4).foreach { b =>
-      graft.store.Versioned.append(
-        ev.filter(col("user_id") >= b * 40 && col("user_id") < (b + 1) * 40)
-          .coalesce(1), path): Unit
-    }
-    graft.store.Versioned.analyzeStats(spark, path, "user_id"): Unit
+    rangeLanded(spark, dir, path)
     val total = graft.store.Versioned.files(path).size
-    val read = graft.store.Versioned.prunedFiles(path, "user_id", 20, 59).size
-    graft.store.Versioned.readPruned(spark, path, "user_id", 20, 59)
+    val kept = graft.store.Versioned.prunedFiles(path, "user_id", 20, 59)
+    graft.store.Versioned.readFilesOf(spark, path,
+        graft.store.Versioned.currentVersion(path), kept)
       .filter(col("user_id") >= 20 && col("user_id") <= 59)
       .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("rev_e2"))
       .select(lit(total.toLong).as("n_files_total"),
-        lit(read.toLong).as("n_files_read"), col("n_rows"), col("rev_e2"))
+        lit(kept.size.toLong).as("n_files_read"), col("n_rows"), col("rev_e2"))
   }
 
-  /** AUTOMATIC data skipping ([[graft.plans.StatsSkip]] — the optimizer-
-    * rule completion of `stats_pruned_scan`): the same 4-file range-landed
-    * store, but the query is a PLAIN `.filter` over
-    * [[graft.store.Versioned.table]] — no readPruned call. The registered
-    * `Rule[LogicalPlan]` extracts the [20, 59] bounds from the filter's
-    * conjuncts, consults the manifest stats, and rebuilds the scan's file
-    * index with only the 2 overlapping files; the declared row reports the
-    * file count FROM THE OPTIMIZED PLAN plus the slice aggregate, both
-    * under the oracle. This is where skipping belongs at 100 TB: in the
-    * optimizer, so every ad-hoc query gets it without calling a special
-    * read API. */
-  def statsSkipAuto(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.StatsSkip.attach(spark)
-    val path = scratch("statsskipauto", dir)
+  /** The 4-file store `stats_pruned_scan` and `stats_skip_auto` share:
+    * one file per 40-user range of `user_id`, stats analyzed. */
+  private def rangeLanded(spark: SparkSession, dir: String, path: String): Unit = {
     rmTree(path)
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"),
@@ -1195,13 +1177,24 @@ object StoreQueries {
           .coalesce(1), path): Unit
     }
     graft.store.Versioned.analyzeStats(spark, path, "user_id"): Unit
-    val df = graft.store.Versioned.table(spark, path)
+  }
+
+  /** AUTOMATIC data skipping (the completion of `stats_pruned_scan`): the
+    * same 4-file range-landed store, but the query is a PLAIN `.filter`
+    * over the `graft-versioned` source — no pruning call. The source
+    * receives the [20, 59] bounds as pushed filters and keeps only the
+    * files the manifest stats admit, so the built scan holds 2 of 4
+    * files; the declared row reports that count FROM THE PHYSICAL PLAN
+    * ([[graft.sources.VersionedV2.filesScanned]]) plus the slice
+    * aggregate, both under the oracle. This is where skipping belongs at
+    * 100 TB: in the scan, so every ad-hoc query gets it without calling a
+    * special read API. */
+  def statsSkipAuto(spark: SparkSession, dir: String): DataFrame = {
+    val path = scratch("statsskipauto", dir)
+    rangeLanded(spark, dir, path)
+    val df = spark.read.format("graft-versioned").option("path", path).load()
       .filter(col("user_id") >= 20 && col("user_id") <= 59)
-    val read = df.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources
-          .HadoopFsRelation].location.inputFiles.length
-    }.sum
+    val read = graft.sources.VersionedV2.filesScanned(df)
     val total = graft.store.Versioned.files(path).size
     df.agg(count(lit(1)).as("n_rows"), sum(col("v")).as("rev_e2"))
       .select(lit(total.toLong).as("n_files_total"),
@@ -1209,7 +1202,7 @@ object StoreQueries {
   }
 
   /** Bloom-filter file skipping ([[graft.store.Versioned.analyzeBloom]]
-    * + the same [[graft.plans.StatsSkip]] rule): the store lands
+    * + the `graft-versioned` source's equality pushdown): the store lands
     * INTERLEAVED — each of the 4 files holds one `user_id % 4` residue
     * class, so every file's [min, max] covers the whole domain and
     * min/max stats can prune NOTHING (the plan-counted stats-only
@@ -1222,7 +1215,6 @@ object StoreQueries {
     * 16 Kbit/6-hash filter ≈ 0 — and the filter is deterministic, so
     * the plan-counted 1-of-4 is stable. */
   def bloomSkipScan(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.StatsSkip.attach(spark)
     val path = scratch("bloomskip", dir)
     rmTree(path)
     val ev = Tables.events(spark, dir)
@@ -1234,20 +1226,17 @@ object StoreQueries {
     }
     graft.store.Versioned.analyzeStats(spark, path, "user_id"): Unit
     graft.store.Versioned.analyzeBloom(spark, path, "user_id"): Unit
-    def scanned(df: DataFrame): Long = df.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources
-          .HadoopFsRelation].location.inputFiles.length
-    }.sum.toLong
+    def v2 = spark.read.format("graft-versioned").option("path", path).load()
     // stats alone cannot prune an interleaved landing: a (non-point) range
     // probe intersects every file's [residue, max] envelope — reads all 4
-    val statsOnly = scanned(graft.store.Versioned.table(spark, path)
-      .filter(col("user_id") >= 6 && col("user_id") <= 8))
-    val df = graft.store.Versioned.table(spark, path).filter(col("user_id") === 7)
+    val statsOnly = graft.sources.VersionedV2.filesScanned(
+      v2.filter(col("user_id") >= 6 && col("user_id") <= 8))
+    val df = v2.filter(col("user_id") === 7)
     df.agg(count(lit(1)).as("n_rows"), sum(col("v")).as("rev_e2"))
       .select(lit(graft.store.Versioned.files(path).size.toLong).as("n_files_total"),
-        lit(statsOnly).as("n_files_stats_only"),
-        lit(scanned(df)).as("n_files_bloom"), col("n_rows"), col("rev_e2"))
+        lit(statsOnly.toLong).as("n_files_stats_only"),
+        lit(graft.sources.VersionedV2.filesScanned(df).toLong).as("n_files_bloom"),
+        col("n_rows"), col("rev_e2"))
   }
 
   /** ZERO-REWRITE column rename ([[graft.store.Versioned.renameColumn]]
@@ -2943,8 +2932,8 @@ object StoreQueries {
         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS rev_e2
         |FROM events WHERE user_id = 7""".stripMargin,
-    // the optimizer rule must land on the same 2-of-4 file selection and
-    // the same slice aggregate as the manual readPruned path
+    // the graft-versioned source's pushdown must land on the same 2-of-4
+    // file selection and the same slice aggregate as the prunedFiles read
     "stats_skip_auto" ->
       """SELECT CAST(4 AS BIGINT) AS n_files_total,
         |  CAST(2 AS BIGINT) AS n_files_read,

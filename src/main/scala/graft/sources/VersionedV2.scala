@@ -14,7 +14,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.Types
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -23,6 +23,9 @@ import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountS
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -93,6 +96,24 @@ object VersionedV2 {
   /** Name of the file-provenance metadata column (see
     * [[VersionedTable.metadataColumns]]). */
   private[sources] val FileMetaCol = "_graft_file"
+
+  /** Files `df`'s `graft-versioned` scans open: the kept-file count of
+    * every [[VersionedScan]] in the physical plan (one input partition per
+    * kept file), walking through AQE and its query stages. Read before
+    * execution it counts planning-time pruning; after execution it also
+    * counts runtime (DPP) pruning. */
+  private[graft] def filesScanned(df: DataFrame): Int = {
+    def scans(p: SparkPlan): Seq[VersionedScan] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case b: BatchScanExec => b.scan match {
+        case v: VersionedScan => Seq(v)
+        case _ => Seq.empty
+      }
+      case o => o.children.flatMap(scans)
+    }
+    scans(df.queryExecution.executedPlan).map(_.keptFiles).sum
+  }
 
   private[sources] def pathAndVersion(
       options: CaseInsensitiveStringMap): (String, Option[Int]) = {
@@ -702,21 +723,13 @@ private[sources] class VersionedScanBuilder(path: String, version: Option[Int],
     true
   }
 
-  private def longBound(v: Any): Option[Long] = v match {
-    case l: Long => Some(l)
-    case i: Int => Some(i.toLong)
-    case s: Short => Some(s.toLong)
-    case b: Byte => Some(b.toLong)
-    case _ => None
-  }
-
   /** Filters the manifest metadata can act on (file-level). */
   private def skippable(f: Filter): Boolean = f match {
-    case EqualTo(_, v) => longBound(v).isDefined || v.isInstanceOf[String]
-    case GreaterThan(_, v) => longBound(v).isDefined
-    case GreaterThanOrEqual(_, v) => longBound(v).isDefined
-    case LessThan(_, v) => longBound(v).isDefined
-    case LessThanOrEqual(_, v) => longBound(v).isDefined
+    case EqualTo(_, v) => Versioned.longOf(v).isDefined || v.isInstanceOf[String]
+    case GreaterThan(_, v) => Versioned.longOf(v).isDefined
+    case GreaterThanOrEqual(_, v) => Versioned.longOf(v).isDefined
+    case LessThan(_, v) => Versioned.longOf(v).isDefined
+    case LessThanOrEqual(_, v) => Versioned.longOf(v).isDefined
     case _ => false
   }
 
@@ -746,35 +759,26 @@ private[sources] class VersionedScanBuilder(path: String, version: Option[Int],
     val snap =
       if (version.forall(_ == snapVer)) Some(Versioned.skipSnapshot(path, snapVer))
       else None
+    // a file survives when the snapshot admits it under EVERY pushed filter
+    def admits(s: Versioned.SkipSnapshot, line: String): Filter => Boolean = {
+      case EqualTo(c, v) => s.admitsValue(line, c, v)
+      // x > Long.MaxValue is unsatisfiable — prune everything; l + 1
+      // would wrap and silently disable skipping
+      case GreaterThan(c, v) =>
+        val l = Versioned.longOf(v).get
+        l < Long.MaxValue && s.admitsRange(line, c, l + 1, Long.MaxValue)
+      case GreaterThanOrEqual(c, v) =>
+        s.admitsRange(line, c, Versioned.longOf(v).get, Long.MaxValue)
+      case LessThan(c, v) =>
+        val l = Versioned.longOf(v).get
+        l > Long.MinValue && s.admitsRange(line, c, Long.MinValue, l - 1)
+      case LessThanOrEqual(c, v) =>
+        s.admitsRange(line, c, Long.MinValue, Versioned.longOf(v).get)
+      case _ => true
+    }
     val survivors = snap match {
       case None => all
-      case Some(s) => pushed.foldLeft(all) { (fs, f) =>
-        f match {
-          case EqualTo(c, v) =>
-            val byStats = longBound(v) match {
-              case Some(l) => Versioned.pruneStatsSnap(path, s, fs, c, l, l)
-              case None => fs
-            }
-            Versioned.pruneBloomSnap(path, s, byStats, c, String.valueOf(v))
-          case GreaterThan(c, v) =>
-            // x > Long.MaxValue is unsatisfiable — prune everything;
-            // l + 1 would wrap and silently disable skipping (ADVICE r10)
-            val l = longBound(v).get
-            if (l == Long.MaxValue) Seq.empty
-            else Versioned.pruneStatsSnap(path, s, fs, c, l + 1, Long.MaxValue)
-          case GreaterThanOrEqual(c, v) =>
-            Versioned.pruneStatsSnap(path, s, fs, c, longBound(v).get,
-              Long.MaxValue)
-          case LessThan(c, v) =>
-            val l = longBound(v).get
-            if (l == Long.MinValue) Seq.empty
-            else Versioned.pruneStatsSnap(path, s, fs, c, Long.MinValue, l - 1)
-          case LessThanOrEqual(c, v) =>
-            Versioned.pruneStatsSnap(path, s, fs, c, Long.MinValue,
-              longBound(v).get)
-          case _ => fs
-        }
-      }
+      case Some(s) => Versioned.admitted(path, all)(line => pushed.forall(admits(s, line)))
     }
     // COUNT(*) prunes to zero columns; read the narrowest field so row
     // multiplicity survives while decoding as little as possible. The
@@ -916,13 +920,6 @@ private[sources] class VersionedScan(total: Int, files0: Seq[String],
       predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
       : Unit = {
     import org.apache.spark.sql.connector.expressions.{Literal => V2Literal}
-    def longOf(v: Any): Option[Long] = v match {
-      case l: Long => Some(l)
-      case i: Int => Some(i.toLong)
-      case s: Short => Some(s.toLong)
-      case b: Byte => Some(b.toLong)
-      case _ => None
-    }
     // prune against the manifest snapshot PINNED at build() — resolving
     // currentVersion here would race a concurrent rewrite (ADVICE r11):
     // its commit removes a planned file's marker lines and a fresh-version
@@ -930,15 +927,9 @@ private[sources] class VersionedScan(total: Int, files0: Seq[String],
     def survivorsFor(c: String, raw: Seq[Any]): Option[Set[String]] = {
       if (!runtimeCols.contains(c)) return None
       val s = snap.getOrElse(return None)
-      val sets = raw.map { v =>
-        val byStats = longOf(v) match {
-          case Some(l) => Versioned.pruneStatsSnap(tablePath, s, files, c, l, l)
-          case None => files // strings: stats are integral-only
-        }
-        Versioned.pruneBloomSnap(tablePath, s, byStats, c,
-          v match { case u: UTF8String => u.toString; case other => String.valueOf(other) })
-      }
-      Some(sets.flatten.toSet)
+      Some(Versioned.admitted(tablePath, files) { line =>
+        raw.exists(v => s.admitsValue(line, c, v))
+      }.toSet)
     }
     predicates.foreach { p =>
       (p.name(), p.children().toSeq) match {

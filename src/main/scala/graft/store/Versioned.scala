@@ -578,40 +578,16 @@ object Versioned {
     else retryCommit(table, markers, Set.empty, maxRetries)
   }
 
-  /** Data-skipping read: resolve the current files, DROP every file
-    * whose recorded [min, max] for `column` misses [lo, hi] entirely,
-    * and read the survivors — file selection costs one manifest read,
-    * no footer opens, no directory listing. Files without a stats
-    * marker are conservatively kept (correctness never depends on
-    * ANALYZE coverage). The caller applies the row-level predicate on
-    * top, exactly as with any coarse index. */
-  def readPruned(spark: SparkSession, table: String, column: String,
-      lo: Long, hi: Long): DataFrame = {
-    val cur = currentVersion(table)
-    val stats = statsOf(table, Some(cur))
-    val fs = files(table, Some(cur))
-    require(fs.nonEmpty, s"table $table has no committed data at $cur")
-    val keep = fs.filter { abs =>
-      stats.get((column, manifestLineOf(table, abs))) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
-    if (keep.isEmpty) readUnder(spark, table, cur, fs).limit(0)
-    else readUnder(spark, table, cur, keep)
-  }
-
-  /** Files [[readPruned]] would open for [lo, hi] — exposed so specs
-    * and queries can pin the skip count. */
+  /** Files a [lo, hi] read of `column` must open at the current version:
+    * every file whose recorded [min, max] can intersect the window (see
+    * [[SkipSnapshot.admitsRange]]). File selection costs one manifest
+    * read, no footer opens, no directory listing; read the survivors with
+    * [[readFilesOf]] and apply the row-level predicate on top, exactly as
+    * with any coarse index. */
   def prunedFiles(table: String, column: String, lo: Long, hi: Long): Seq[String] = {
     val cur = currentVersion(table)
-    val stats = statsOf(table, Some(cur))
-    files(table, Some(cur)).filter { abs =>
-      stats.get((column, manifestLineOf(table, abs))) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
+    val snap = SkipSnapshot(cur, statsOf(table, Some(cur)), Map.empty)
+    admitted(table, files(table, Some(cur)))(snap.admitsRange(_, column, lo, hi))
   }
 
   /** POINT-SET file pruning at a pinned version: the files of `version`
@@ -626,18 +602,16 @@ object Versioned {
     * no live match either. */
   def prunedFilesIn(table: String, version: Int, column: String,
       values: Seq[Long]): Seq[String] = {
-    val stats = statsOf(table, Some(version))
-    files(table, Some(version)).filter { abs =>
-      stats.get((column, manifestLineOf(table, abs))) match {
-        case Some((mn, mx)) => values.exists(v => v >= mn && v <= mx)
-        case None => true
-      }
+    val snap = SkipSnapshot(version, statsOf(table, Some(version)), Map.empty)
+    admitted(table, files(table, Some(version))) { line =>
+      values.exists(v => snap.admitsRange(line, column, v, v))
     }
   }
 
   /** Read exactly `absFiles` of `version` (deletion vectors applied) —
-    * for callers that pruned the file list externally, e.g. the
-    * versioned serving index's probe-pruned search. */
+    * for callers that pruned the file list themselves: a
+    * [[prunedFiles]] range read, the versioned serving index's
+    * probe-pruned search. */
   private[graft] def readFilesOf(spark: SparkSession, table: String,
       version: Int, absFiles: Seq[String]): DataFrame =
     readUnder(spark, table, version, absFiles)
@@ -738,58 +712,56 @@ object Versioned {
     else retryCommit(table, markers, Set.empty, maxRetries)
   }
 
-  /** Drop every file of `absFiles` whose Bloom filter (at `version`)
-    * proves `column != value` for all rows; files lacking a filter are
-    * conservatively kept. Driver-side metadata work, no file I/O. */
-  private[graft] def pruneByBloom(table: String, version: Int,
-      absFiles: Seq[String], column: String, value: String): Seq[String] = {
-    val blooms = bloomOf(table, Some(version))
-    absFiles.filter { raw =>
-      blooms.get((column, manifestLineOf(table, toLocalPath(raw)))) match {
-        case Some((m, k, bs)) => bloomMightContain(bs, m, k, value)
-        case None => true
-      }
-    }
-  }
-
-  /** Version-pinned skipping metadata captured at scan-BUILD time. A scan
-    * that prunes at EXECUTION time (runtime V2 filtering) must consult the
-    * manifest version it was planned against, not whatever
-    * [[currentVersion]] resolves to when the filter arrives — a concurrent
-    * DELETE/UPDATE rewrite landing between planning and execution would
-    * otherwise drop a planned file's marker lines and the prune would
-    * silently discard that file's rows. Files absent from the snapshot's
-    * maps are conservatively kept. */
+  /** Version-pinned skipping metadata — the ONE file-admit rule every
+    * data-skipping path decides with: the `graft-versioned` source's
+    * planning-time and runtime pruning, [[prunedFiles]] and
+    * [[prunedFilesIn]]. A scan that prunes at EXECUTION time (runtime V2
+    * filtering) must consult the manifest version it was planned against,
+    * not whatever [[currentVersion]] resolves to when the filter arrives —
+    * a concurrent DELETE/UPDATE rewrite landing between planning and
+    * execution would otherwise drop a planned file's marker lines and the
+    * prune would silently discard that file's rows. Files absent from the
+    * snapshot's maps are conservatively admitted. */
   case class SkipSnapshot(version: Int,
       stats: Map[(String, String), (Long, Long)],
-      blooms: Map[(String, String), (Int, Int, Array[Byte])])
+      blooms: Map[(String, String), (Int, Int, Array[Byte])]) {
+
+    /** Can the file at manifest `line` hold a `column` value in [lo, hi]?
+      * Only a recorded [min, max] that misses the window says no. */
+    def admitsRange(line: String, column: String, lo: Long, hi: Long): Boolean =
+      stats.get((column, line)).forall { case (mn, mx) => mx >= lo && mn <= hi }
+
+    /** Can the file at manifest `line` hold `column = value`? An integral
+      * value must pass [[admitsRange]]; any value must then pass the
+      * file's Bloom filter, probed with its string form (the form
+      * [[analyzeBloom]] hashes). */
+    def admitsValue(line: String, column: String, value: Any): Boolean =
+      longOf(value).forall(l => admitsRange(line, column, l, l)) &&
+        blooms.get((column, line)).forall { case (m, k, bs) =>
+          bloomMightContain(bs, m, k, String.valueOf(value))
+        }
+  }
 
   /** Capture `version`'s stats + bloom markers as one immutable snapshot. */
   private[graft] def skipSnapshot(table: String, version: Int): SkipSnapshot =
     SkipSnapshot(version, statsOf(table, Some(version)),
       bloomOf(table, Some(version)))
 
-  /** [lo, hi]-range file pruning against a pinned [[SkipSnapshot]] —
-    * the snapshot-consistent form of [[prunedFiles]]. */
-  private[graft] def pruneStatsSnap(table: String, snap: SkipSnapshot,
-      absFiles: Seq[String], column: String, lo: Long, hi: Long): Seq[String] =
-    absFiles.filter { raw =>
-      snap.stats.get((column, manifestLineOf(table, toLocalPath(raw)))) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
+  /** The files of `absFiles` (absolute paths or `file:` URIs) whose
+    * manifest line `admit` accepts — callers pass a [[SkipSnapshot]] test. */
+  private[graft] def admitted(table: String, absFiles: Seq[String])(
+      admit: String => Boolean): Seq[String] =
+    absFiles.filter(f => admit(manifestLineOf(table, toLocalPath(f))))
 
-  /** Equality bloom pruning against a pinned [[SkipSnapshot]] —
-    * the snapshot-consistent form of [[pruneByBloom]]. */
-  private[graft] def pruneBloomSnap(table: String, snap: SkipSnapshot,
-      absFiles: Seq[String], column: String, value: String): Seq[String] =
-    absFiles.filter { raw =>
-      snap.blooms.get((column, manifestLineOf(table, toLocalPath(raw)))) match {
-        case Some((m, k, bs)) => bloomMightContain(bs, m, k, value)
-        case None => true
-      }
-    }
+  /** An integral literal as a Long — the one literal form min/max stats
+    * can bound; anything else is None. */
+  private[graft] def longOf(v: Any): Option[Long] = v match {
+    case l: Long => Some(l)
+    case i: Int => Some(i.toLong)
+    case s: Short => Some(s.toLong)
+    case b: Byte => Some(b.toLong)
+    case _ => None
+  }
 
   private val DeletesPrefix = "#deletes:"
 
@@ -1136,7 +1108,7 @@ object Versioned {
   /** ZERO-REWRITE column rename (the Iceberg `ALTER TABLE RENAME COLUMN`
     * design point, minus field IDs): one metadata-only commit carrying a
     * `#rename:old:new` marker plus the updated schema marker — no data
-    * file is touched at ANY table size. [[read]]/[[table]] resolve it by
+    * file is touched at ANY table size. [[read]] resolves it by
     * scanning under the union of canonical and legacy names and folding
     * `coalesce(new, legacy old)` per marker, so pre-rename files serve
     * their values under the new name and post-rename files (written with
@@ -1657,58 +1629,6 @@ object Versioned {
   /** [[read]] pinned to [[versionAsOf]]`(tsMillis)`. */
   def readAsOf(spark: SparkSession, table: String, tsMillis: Long): DataFrame =
     read(spark, table, Some(versionAsOf(table, tsMillis)))
-
-  /** Read a version (default latest) as a SKIPPING-ELIGIBLE DataFrame:
-    * same rows as [[read]], but the relation carries `graft.table` /
-    * `graft.version` reader options so the registered
-    * [[graft.plans.StatsSkip]] optimizer rule can recognize it and drop
-    * files whose manifest [min, max] stats miss a range predicate —
-    * automatic data skipping with NO change to the user's query text
-    * (the `readPruned` call sites become plain `.filter`s). Untagged
-    * [[read]] frames are never touched by the rule. */
-  def table(spark: SparkSession, table: String, version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(table))
-    val fs = files(table, Some(v))
-    require(fs.nonEmpty, s"table $table has no committed data at $v")
-    val renames = renamesOf(table, Some(v))
-    if (renames.nonEmpty)
-      // renamed tables read resolved (the coalesce projection sits
-      // between any filter and the scan, so the skipping rule cannot
-      // fire; stats keyed on legacy names would be stale anyway)
-      return applyRenames(spark, table, v, fs, renames)
-    // outstanding deletion vectors force the DV-applied read (the
-    // anti-join sits between filter and scan, so StatsSkip cannot fire
-    // until compaction folds the vectors — read-debt, not wrong answers;
-    // stats pruning would stay CONSERVATIVE either way)
-    if (deletesOf(table, Some(v)).nonEmpty)
-      return readUnder(spark, table, v, fs)
-    val r = spark.read
-      .option("graft.table", Paths.get(table).toAbsolutePath.toString)
-      .option("graft.version", v.toString)
-    schemaOf(table, Some(v)) match {
-      case Some(st) => r.schema(st).parquet(fs: _*)
-      case None => r.parquet(fs: _*)
-    }
-  }
-
-  /** Drop every file of `absFiles` whose recorded [min, max] stats (at
-    * `version`) provably miss one of `bounds`' per-column [lo, hi]
-    * windows; files lacking a marker for a bounded column are
-    * conservatively kept. Driver-side metadata work for the
-    * [[graft.plans.StatsSkip]] rule — one manifest read, no file I/O. */
-  private[graft] def pruneByStats(table: String, version: Int,
-      absFiles: Seq[String], bounds: Map[String, (Long, Long)]): Seq[String] = {
-    val stats = statsOf(table, Some(version))
-    absFiles.filter { raw =>
-      val line = manifestLineOf(table, toLocalPath(raw))
-      bounds.forall { case (c, (lo, hi)) =>
-        stats.get((c, line)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true
-        }
-      }
-    }
-  }
 
   /** Append-only change feed: the rows ADDED between `fromVersion`
     * (exclusive) and `toVersion` (inclusive, default latest) — exactly

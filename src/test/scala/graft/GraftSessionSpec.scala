@@ -9,7 +9,8 @@ import graft.plans.TopKPerGroup
 /** Tier-1 runs under the graded session policy, and the policy stays in
   * one place: the suites' shared session carries `GraftSession`'s conf
   * and injected planner strategy, and no main source builds a session
-  * of its own or reads a streaming env knob or a JVM system property. */
+  * of its own, reads a streaming env knob or a JVM system property, or
+  * appends a rule to a built session. */
 class GraftSessionSpec extends SparkSpec {
 
   test("the shared test session carries the GraftSession conf and extensions") {
@@ -48,6 +49,19 @@ class GraftSessionSpec extends SparkSpec {
       p <- mainSources
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
       if line.contains("SPARK_GRAFT_STREAM_")
+    } yield s"$p:${i + 1}"
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("no main source appends to a session's experimental rules") {
+    // extraOptimizations/extraStrategies are per-session mutable lists: an
+    // append from a query or helper leaks into every later plan of the
+    // shared session — ship rules through GraftExtensions instead
+    val assign = """experimental\.extra(?:Optimizations|Strategies)\s*(?:\+\+|:\+)?=(?!=)""".r
+    val offenders = for {
+      p <- mainSources
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if !isComment(line) && assign.findFirstIn(line).isDefined
     } yield s"$p:${i + 1}"
     assert(offenders.isEmpty, offenders.mkString(", "))
   }

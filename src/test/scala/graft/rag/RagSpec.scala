@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import graft.SparkSpec
 import graft.ingest.IngestPipeline
+import graft.streaming.ChatLog
 
 class RagSpec extends SparkSpec {
   import spark.implicits._
@@ -44,9 +45,9 @@ class RagSpec extends SparkSpec {
 
   test("chat log appends timestamped records") {
     val dir = tmpDir("chatlog").toString + "/log"
-    Rag.logChat(spark, dir, "a@x.com", "q1", "a1", 1700000000000000L)
-    Rag.logChat(spark, dir, "a@x.com", "q2", "a2", 1700000060000000L)
-    val log = spark.read.parquet(dir)
+    ChatLog.append(spark, dir, "a@x.com", "q1", "a1", 1700000000000000L)
+    ChatLog.append(spark, dir, "a@x.com", "q2", "a2", 1700000060000000L)
+    val log = spark.read.parquet(ChatLog.landingDir(dir))
     assert(log.count() == 2)
     assert(log.columns.toSet == Set("ts", "user", "question", "answer"))
   }

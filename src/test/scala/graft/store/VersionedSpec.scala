@@ -769,6 +769,12 @@ class VersionedSpec extends SparkSpec {
     assert(rows(tgt) == Set((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
+  /** The rows of the files whose `id` stats admit [lo, hi] at the current
+    * version — a stats-pruned range read. */
+  private def rangeRead(t: String, lo: Long, hi: Long) =
+    Versioned.readFilesOf(spark, t, Versioned.currentVersion(t),
+      Versioned.prunedFiles(t, "id", lo, hi))
+
   test("shallow clone carries LIVE stats/bloom markers: skipping works on the clone") {
     // the clone's data lines are ABSOLUTE external paths, so carried
     // markers must rewrite their embedded file line to the same form —
@@ -788,7 +794,7 @@ class VersionedSpec extends SparkSpec {
       "clone stats markers must key on the clone's absolute file lines")
     assert(Versioned.statsOf(tgt).size == Versioned.statsOf(src).size)
     assert(Versioned.bloomOf(tgt).size == Versioned.bloomOf(src).size)
-    assert(Versioned.readPruned(spark, tgt, "id", 40, 60)
+    assert(rangeRead(tgt, 40, 60)
       .as[(Long, String)].collect().toSet == Set((50L, "c")))
   }
 
@@ -817,10 +823,10 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.statsOf(t).size == 3)
     // pruning selects files from stats alone
     assert(Versioned.prunedFiles(t, "id", 8, 30).size == 1)
-    assert(Versioned.readPruned(spark, t, "id", 8, 30)
+    assert(rangeRead(t, 8, 30)
       .as[(Long, String)].collect().toSet == Set((10L, "c"), (20L, "d")))
     assert(Versioned.prunedFiles(t, "id", 100, 200).isEmpty)
-    assert(Versioned.readPruned(spark, t, "id", 100, 200).count() == 0)
+    assert(rangeRead(t, 100, 200).count() == 0)
     // incremental: a new (unanalyzed) file is conservatively read...
     Versioned.append(Seq((200L, "f")).toDF("id", "s").coalesce(1), t)
     assert(Versioned.prunedFiles(t, "id", 8, 30).size == 2)
@@ -843,22 +849,23 @@ class VersionedSpec extends SparkSpec {
     Versioned.analyzeStats(spark, t, "id")
     Versioned.analyzeBloom(spark, t, "id")
     assert(Versioned.bloomOf(t).size == 2)
-    val all = Versioned.files(t)
-    val v = Versioned.currentVersion(t)
+    // the admit rule at the current version, over its files
+    def admitted(admit: (Versioned.SkipSnapshot, String) => Boolean): Seq[String] = {
+      val snap = Versioned.skipSnapshot(t, Versioned.currentVersion(t))
+      Versioned.admitted(t, Versioned.files(t))(admit(snap, _))
+    }
     // min/max keeps both files for any in-range point; bloom prunes to 1
-    assert(Versioned.pruneByStats(t, v, all, Map("id" -> (51L, 51L))).size == 2)
-    assert(Versioned.pruneByBloom(t, v, all, "id", "51").size == 1)
-    assert(Versioned.pruneByBloom(t, v, all, "id", "100").size == 1)
+    assert(admitted(_.admitsRange(_, "id", 51L, 51L)).size == 2)
+    assert(admitted(_.admitsValue(_, "id", "51")).size == 1)
+    assert(admitted(_.admitsValue(_, "id", "100")).size == 1)
     // an absent value may FP but never misses; at 6 keys FPR ~ 0
-    assert(Versioned.pruneByBloom(t, v, all, "id", "77").isEmpty)
+    assert(admitted(_.admitsValue(_, "id", "77")).isEmpty)
     // incremental: a new file lacks a filter and is conservatively kept
     Versioned.append(Seq((200L, "g")).toDF("id", "s").coalesce(1), t)
-    val v2 = Versioned.currentVersion(t)
-    assert(Versioned.pruneByBloom(t, v2, Versioned.files(t), "id", "77").size == 1)
+    assert(admitted(_.admitsValue(_, "id", "77")).size == 1)
     Versioned.analyzeBloom(spark, t, "id")
     assert(Versioned.bloomOf(t).size == 3)
-    assert(Versioned.pruneByBloom(t, Versioned.currentVersion(t),
-      Versioned.files(t), "id", "77").isEmpty)
+    assert(admitted(_.admitsValue(_, "id", "77")).isEmpty)
     // a rewrite retires the removed files' bloom markers with them
     Versioned.deleteWhere(spark, t, org.apache.spark.sql.functions.col("id") === 2L)
     assert(Versioned.bloomOf(t).size == 2,
