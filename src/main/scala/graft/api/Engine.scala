@@ -51,15 +51,20 @@ final class Engine(spark: SparkSession, storeDir: String, chatLogDir: String,
         s"upload batch of ${files.size} files exceeds ${Engine.MaxFilesPerUpload}; " +
           "use StreamingIngest for bulk loads")
       val batch = files.toDF("path", "content").withColumn("user", lit(user))
-      // the dedup key is (user, file_hash) with user fixed to the caller,
-      // so only the caller's partitions can match — open only the caller's
-      // directory as the gate's store side
-      val result = IngestPipeline.ingest(spark, batch, ChunkStore.openUser(spark, storeDir, user))
+      // The dedup gate's store side, collected up front: the batch's
+      // hashes probe only the caller's directory (the key is (user,
+      // file_hash) with user fixed to the caller), and at most one row per
+      // uploaded file comes back. As local rows, the gate holds no scan
+      // of the store, so the append below neither re-lists the tenant's
+      // directory to refresh the cached ingest nor lets the dedup join see
+      // this batch's own freshly written chunks.
+      val hashes = batch.select(IngestPipeline.fileHash).as[String].collect().distinct
+      val stored = ChunkStore.openUser(spark, storeDir, user).map(_
+        .where(col("file_hash").isin(hashes.toIndexedSeq: _*))
+        .select("file_hash").distinct().as[String].collect().toSeq
+        .toDF("file_hash").withColumn("user", lit(user)))
+      val result = IngestPipeline.ingest(spark, batch, stored)
       try {
-        // Materialize outcomes BEFORE the append: the dedup join re-reads
-        // the store on evaluation, and an evaluation after the append
-        // would see this batch's own freshly-written chunks — marking the
-        // upload a duplicate of itself (read-your-own-write).
         val rows = result.outcomes.collect()
         // any accepted chunks? answered from the collected report — no
         // extra cluster job just to probe emptiness
@@ -70,22 +75,12 @@ final class Engine(spark: SparkSession, storeDir: String, chatLogDir: String,
       } finally result.release()
     }
 
-  /** The chat-log relay (landing → canonical log on Structured
-    * Streaming): started on first chat, resumed from its checkpoint if a
-    * previous engine instance over the same dirs already committed
-    * turns — restart replays nothing (see [[graft.streaming.ChatLog]]).
-    * Re-resolved per call rather than cached: after shutdown() a stopped
-    * query's processAllAvailable() returns immediately, which would
-    * silently strand turns in the landing dir. */
-  private def chatRelay: org.apache.spark.sql.streaming.StreamingQuery = this.synchronized {
-    spark.streams.active.find(_.name == ChatLog.relayName(chatLogDir))
-      .getOrElse(ChatLog.relay(spark, chatLogDir))
-  }
-
   /** POST /chat — retrieve top-13 for the question WITHIN the caller's
     * tenant (fixing app.py:409's cross-user leakage; Rag.retrieve's user
     * filter stays as a second guard over the tenant open), assemble the
-    * grounded prompt, append the chat log through the streaming sink.
+    * grounded prompt, and log the turn as one driver-written file
+    * ([[ChatLog.append]]): no Spark job or stream runs for the log, and the
+    * turn is readable through [[ChatLog.read]] before `chat` returns.
     * The LLM completion itself is an external boundary; the prompt is
     * the engine's product. */
   def chat(token: String, question: String): Either[Jwt.AuthError, String] =
@@ -93,16 +88,13 @@ final class Engine(spark: SparkSession, storeDir: String, chatLogDir: String,
       val p = ChunkStore.openUser(spark, storeDir, user)
         .fold(Rag.prompt(question, ""))(Rag.ask(_, question, user))
       ChatLog.append(spark, chatLogDir, user, question, p, now() * 1000000L)
-      // flush for read-your-write facade semantics; production leaves the
-      // relay draining asynchronously
-      chatRelay.processAllAvailable()
       p
     }
 
-  /** Stop the chat-log relay (the checkpoint makes a later restart
-    * seamless). */
-  def shutdown(): Unit =
-    spark.streams.active.filter(_.name == ChatLog.relayName(chatLogDir)).foreach(_.stop())
+  /** Release the engine. It holds nothing between calls (no stream, no
+    * cached frame), so this does nothing; it stays for callers written
+    * against the relay-era engine, which stopped its chat-log relay here. */
+  def shutdown(): Unit = ()
 
   /** POST /delete-file — drop every chunk of the caller's `filename`;
     * returns the deleted count (0 = the reference's "No vectors found"). */

@@ -2,7 +2,7 @@ package graft.ingest
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -51,6 +51,10 @@ object IngestPipeline {
 
   type Parser = Array[Byte] => Either[String, Seq[String]]
 
+  /** A file's dedup key (multiple_document_upload.py:139): SHA-256 hex of
+    * its `content` bytes. */
+  val fileHash: Column = sha2(col("content"), 256)
+
   /** Default per-format parsers. CSV mirrors the reference's loader
     * semantics (one document per row, "header: value" lines); HTML strips
     * tags. */
@@ -88,9 +92,10 @@ object IngestPipeline {
   /** Run the full ingest dataflow.
     *
     * @param files  DataFrame with `path: string, user: string, content: binary`
-    * @param store  existing chunk store (for the file_hash dedup gate); pass
-    *               None on first load (the reference's `vector_db is None`
-    *               branch at :140)
+    * @param store  the dedup gate's store side: any frame with `user` and
+    *               `file_hash` columns — the existing chunk store, or rows
+    *               already collected from it; pass None on first load (the
+    *               reference's `vector_db is None` branch at :140)
     * @param chunker chunk splitter (reference config 1000/200)
     * @param cacheParsed cache the parse stage (both outputs consume it);
     *                    pass false when only ONE of chunks/outcomes will be
@@ -126,7 +131,7 @@ object IngestPipeline {
     val named = files
       .withColumn("source", lower(element_at(split(col("path"), "/"), -1)))
       .withColumn("type", element_at(split(col("source"), "\\."), -1))
-      .withColumn("file_hash", sha2(col("content"), 256))
+      .withColumn("file_hash", fileHash)
 
     val supported = named.withColumn("supported", col("type").isInCollection(AllowedExts))
 

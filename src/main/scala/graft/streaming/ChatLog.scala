@@ -1,68 +1,98 @@
 package graft.streaming
 
+import java.io.IOException
+import java.util.UUID
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
+
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** The chat log as a streaming pipeline — the reference's append-only
-  * history write (/root/reference/app.py:436-443) carried end-to-end on
-  * Structured Streaming instead of ad-hoc batch appends.
+/** The chat log — the reference's append-only history write
+  * (its app.py:436-443) as one parquet file per turn.
   *
-  * Shape: each chat turn lands as a small parquet file in a landing
-  * directory (the producer side is a plain durable write — cheap, atomic
-  * per turn); a file-source stream relays landing → canonical log through
-  * [[Streams.appendSink]]. The relay's checkpoint records which landing
-  * files are committed, so restarts replay nothing and lose nothing —
-  * exactly-once into the canonical log without any dedup pass. This is
-  * the same landing/relay design as [[StreamingIngest]], so the two
-  * stream-like structures of the reference share one idiom.
+  * Shape: [[append]] writes each turn on the driver as one small parquet
+  * file in [[landingDir]] and publishes it with a rename, so a turn is
+  * visible exactly once, whole, as soon as `append` returns — read-your-
+  * write with no Spark job, no stream and no checkpoint on the chat path.
+  * Concurrent writers need no coordination: every call writes its own
+  * uniquely named file. [[read]] reads that directory with the pinned
+  * [[schema]].
   *
-  * 100 TB note: the canonical log inherits appendSink's parquet layout;
-  * a production deployment would leave the relay running continuously
-  * (micro-batches amortize the per-file overhead) and compact the log
-  * with ChunkStore.compact-style rewrites. The facade flushes per turn
-  * only to give read-your-write semantics under test.
+  * Logs written by relay-era engines read back complete without
+  * migration: those engines landed every turn in the same directory (as
+  * Spark-written files, INT96 `ts`) and their relay only copied turns out
+  * of it, never deleting one. The copies under `logDir` itself are not
+  * read.
+  *
+  * 100 TB note: the log grows by one small file per turn, like the
+  * reference's per-request append; compacting it is left to an offline
+  * rewrite.
   */
 object ChatLog {
 
   val schema = Encoders.product[Streams.ChatRecord].schema
 
+  /** Parquet schema of a turn file: [[schema]] with `ts` as INT64
+    * microseconds since the epoch, UTC-adjusted (read back as
+    * TimestampType). */
+  private val fileSchema = MessageTypeParser.parseMessageType(
+    """message chat_turn {
+      |  optional int64 ts (TIMESTAMP(MICROS,true));
+      |  optional binary user (STRING);
+      |  optional binary question (STRING);
+      |  optional binary answer (STRING);
+      |}""".stripMargin)
+
+  /** The directory that holds every turn of the log at `logDir`. */
   def landingDir(logDir: String): String = logDir + ".landing"
   def checkpointDir(logDir: String): String = logDir + ".checkpoint"
 
-  /** Relay query name, unique per log directory: engines over different
-    * logs coexist in one session, while a second relay over the SAME log
-    * is still rejected by the streaming manager's name check (two relays
-    * sharing a checkpoint would corrupt it). The full path is embedded
-    * VERBATIM, not hashed or sanitized: Engine resolves its running relay
-    * by this name, so the name→dir mapping must be injective — a 32-bit
-    * hash collision (or two paths sanitizing identically) would silently
-    * adopt another directory's relay and strand this log's turns in its
-    * landing dir. */
+  /** Relay query name, unique per log directory: a second relay over the
+    * SAME log is rejected by the streaming manager's name check (two
+    * relays sharing a checkpoint would corrupt it). The full path is
+    * embedded verbatim, so the name→dir mapping is injective. */
   def relayName(logDir: String): String = "chat-log-relay:" + logDir
 
-  /** Durably land one chat turn (producer side; no streaming machinery on
-    * this path — a turn is visible to the relay as soon as the file
-    * exists). */
+  /** Durably log one chat turn: write it on the driver as
+    * `_part-<uuid>.parquet` (hidden from readers), then rename it to
+    * `part-<uuid>.parquet`. Null fields are omitted (read back as null). */
   def append(spark: SparkSession, logDir: String, user: String, question: String,
       answer: String, tsMicros: Long): Unit = {
-    import spark.implicits._
-    Seq((tsMicros, user, question, answer))
-      .toDF("ts_us", "user", "question", "answer")
-      .select(timestamp_micros(col("ts_us")).as("ts"), col("user"),
-        col("question"), col("answer"))
-      .write.mode("append").parquet(landingDir(logDir))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(landingDir(logDir))
+    val fs = dir.getFileSystem(conf)
+    val name = s"part-${UUID.randomUUID()}.parquet"
+    val tmp = new Path(dir, "_" + name)
+    val turn = new SimpleGroup(fileSchema)
+    turn.add("ts", tsMicros)
+    Seq("user" -> user, "question" -> question, "answer" -> answer)
+      .foreach { case (field, v) => if (v != null) turn.add(field, v) }
+    try {
+      val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf).withType(fileSchema).build()
+      try writer.write(turn) finally writer.close()
+      if (!fs.rename(tmp, new Path(dir, name)))
+        throw new IOException(s"could not publish chat turn $tmp")
+    } catch {
+      case e: Throwable => fs.delete(tmp, false); throw e
+    }
   }
 
-  /** Start (or resume, if the checkpoint exists) the landing → log relay.
-    * Safe to call across process restarts: committed landing files are
-    * skipped, uncommitted ones are picked up. */
+  /** A landing → `logDir` file-stream relay, as relay-era engines ran it
+    * per turn. Nothing in the engine starts it: it remains only for the
+    * journey benchmark's traced routes, which still flush it, and goes
+    * when they do. Its output under `logDir` is not what [[read]] reads. */
   def relay(spark: SparkSession, logDir: String): StreamingQuery =
     Streams.appendSink(
       spark.readStream.schema(schema).parquet(landingDir(logDir)),
       logDir, checkpointDir(logDir), queryName = relayName(logDir))
 
-  /** The canonical log (relay output). */
+  /** Every turn logged at `logDir`, each once. */
   def read(spark: SparkSession, logDir: String): DataFrame =
-    spark.read.schema(schema).parquet(logDir)
+    spark.read.schema(schema).parquet(landingDir(logDir))
 }

@@ -9,9 +9,10 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   TimerValues, ValueState}
 
 /** Structured Streaming forms of the engine's append-shaped flows —
-  * the reference's chat log (/root/reference/app.py:436-443) and
-  * incremental `add_documents` ingest (multiple_document_upload.py:168) are
-  * batch in the reference but naturally streaming (SURVEY.md §2.3 X7).
+  * the reference's incremental `add_documents` ingest
+  * (multiple_document_upload.py:168) is batch in the reference but
+  * naturally streaming (SURVEY.md §2.3 X7). (Its chat log,
+  * [[ChatRecord]], is a plain per-turn file append: [[ChatLog]].)
   * The transformations are shared with the batch queries; only the source/
   * sink binding differs — the Spark streaming/batch unification does the
   * rest.
@@ -319,7 +320,9 @@ object Streams {
   def eventStream(spark: SparkSession, dir: String, schemaFrom: DataFrame): DataFrame =
     spark.readStream.schema(schemaFrom.schema).parquet(dir)
 
-  /** Append-only streaming sink (chat log / ingest landing). */
+  /** Append-only parquet streaming sink. No main source starts one: its
+    * one caller is [[ChatLog.relay]], kept only for the journey
+    * benchmark's traced routes, and both go when those routes do. */
   def appendSink(df: DataFrame, outDir: String, checkpointDir: String,
       queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream

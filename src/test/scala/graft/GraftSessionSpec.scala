@@ -9,8 +9,8 @@ import graft.plans.TopKPerGroup
 /** Tier-1 runs under the graded session policy, and the policy stays in
   * one place: the suites' shared session carries `GraftSession`'s conf
   * and injected planner strategy, and no main source builds a session
-  * of its own, reads a streaming env knob or a JVM system property, or
-  * appends a rule to a built session. */
+  * of its own, reads a streaming env knob or a JVM system property,
+  * appends a rule to a built session, or flushes a stream. */
 class GraftSessionSpec extends SparkSpec {
 
   test("the shared test session carries the GraftSession conf and extensions") {
@@ -72,6 +72,18 @@ class GraftSessionSpec extends SparkSpec {
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
       if !isComment(line) && (line.contains("sys.props.get(\"graft.") ||
         line.contains("System.getProperty(\"graft."))
+    } yield s"$p:${i + 1}"
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("no main source flushes a stream on a request path") {
+    // processAllAvailable blocks the caller until a stream drains: a
+    // route that flushes a stream pays a micro-batch per request
+    val flush = """\bprocessAllAvailable\b""".r
+    val offenders = for {
+      p <- mainSources
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if !isComment(line) && flush.findFirstIn(line).isDefined
     } yield s"$p:${i + 1}"
     assert(offenders.isEmpty, offenders.mkString(", "))
   }

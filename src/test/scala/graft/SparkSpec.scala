@@ -20,9 +20,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Stop and await every streaming query still running (chat relays,
-    * file-stream replays), so no micro-batch outlives its suite and races
-    * the SparkContext shutdown at the end of the run. */
+  /** Stop and await every streaming query still running (file-stream
+    * replays, a chat relay a test started), so no micro-batch outlives
+    * its suite and races the SparkContext shutdown at the end of the run. */
   override protected def afterAll(): Unit =
     try SparkSession.getDefaultSession.foreach(_.streams.active.foreach { q =>
       q.stop()

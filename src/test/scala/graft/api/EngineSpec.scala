@@ -6,6 +6,7 @@ import graft.SparkSpec
 import graft.auth.Jwt
 import graft.rag.Rag
 import graft.store.ChunkStore
+import graft.streaming.ChatLog
 
 /** End-to-end journey through the facade — the complete reference
   * workflow (login → upload → chat → delete) with the behaviors the
@@ -48,7 +49,7 @@ class EngineSpec extends SparkSpec {
     assert(answer.contains("Question: what is the warranty period"))
     // chat log appended per call
     engine.chat(bob, "warranty?").toOption.get
-    assert(spark.read.parquet(chatDir).count() == 2)
+    assert(ChatLog.read(spark, chatDir).count() == 2)
 
     // delete: alice's filename; bob's same-named file survives
     val deleted = engine.delete(alice, "guide.txt").toOption.get
@@ -82,31 +83,104 @@ class EngineSpec extends SparkSpec {
     assert(engine.count() > 0)
   }
 
-  test("chat log flows through the streaming sink; an engine restart replays nothing") {
-    import graft.streaming.ChatLog
+  test("the chat log holds every turn at once and across an engine restart, none twice") {
     val storeDir = tmpDir("engine").toString + "/chunks"
     val chatDir = tmpDir("engine").toString + "/chat"
     var clock = 1700000000L
     val e1 = new Engine(spark, storeDir, chatDir, "s3cret", () => clock)
     val t1 = e1.login("replay@x.com")
     e1.chat(t1, "first turn").toOption.get
+    assert(ChatLog.read(spark, chatDir).count() == 1, "a turn is readable when chat returns")
     clock += 1
     e1.chat(t1, "second turn").toOption.get
-    // the canonical log is the relay's OUTPUT, not the landing dir
     assert(ChatLog.read(spark, chatDir).count() == 2)
-    assert(spark.streams.active.exists(_.name == ChatLog.relayName(chatDir)))
+    assert(spark.streams.active.isEmpty, "chat must start no stream")
     e1.shutdown()
-    assert(!spark.streams.active.exists(_.name == ChatLog.relayName(chatDir)))
 
-    // a new engine over the same dirs resumes from the checkpoint: the two
-    // committed landing files are NOT re-relayed, the new turn is
+    // a new engine over the same dirs appends; nothing is replayed
     val e2 = new Engine(spark, storeDir, chatDir, "s3cret", () => clock + 1)
     val t2 = e2.login("replay@x.com")
     e2.chat(t2, "third turn").toOption.get
+    assert(spark.streams.active.isEmpty)
     val log = ChatLog.read(spark, chatDir)
     assert(log.count() == 3, "restart must neither duplicate nor drop turns")
     assert(log.select("question").distinct().count() == 3)
     e2.shutdown()
+  }
+
+  test("a relay-era log reads back complete") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.functions.{col, timestamp_micros, unix_micros}
+    val chatDir = tmpDir("engine").toString + "/chat"
+    val landing = new Path(ChatLog.landingDir(chatDir))
+    val fs = landing.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def tsTypes(): Set[String] = fs.listStatus(landing).map(_.getPath)
+      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet")).map { p =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, spark.sparkContext.hadoopConfiguration))
+        try r.getFooter.getFileMetaData.getSchema.getType(Seq("ts"): _*).asPrimitiveType.getPrimitiveTypeName.name
+        finally r.close()
+      }.toSet
+    // turns as relay-era engines landed them: one Spark write job each
+    val old = Seq(("old one", 1700000000123456L), ("old two", 1700000001654321L))
+    old.foreach { case (q, us) =>
+      Seq((us, "a@x.com", q, "ans")).toDF("ts_us", "user", "question", "answer")
+        .select(timestamp_micros(col("ts_us")).as("ts"), col("user"), col("question"), col("answer"))
+        .write.mode("append").parquet(landing.toString)
+    }
+    assert(tsTypes() == Set("INT96"), "Spark's default parquet timestamp is INT96")
+    // the relay ran once over them, leaving its output and checkpoint on disk
+    val relay = ChatLog.relay(spark, chatDir)
+    try relay.processAllAvailable() finally { relay.stop(); relay.awaitTermination() }
+    assert(fs.exists(new Path(chatDir)) && fs.exists(new Path(ChatLog.checkpointDir(chatDir))))
+
+    val fresh = Seq(("new one", 1700000002000001L), ("new two", 1700000003999999L))
+    fresh.foreach { case (q, us) => ChatLog.append(spark, chatDir, "a@x.com", q, "ans", us) }
+    assert(tsTypes() == Set("INT96", "INT64"))
+    val got = ChatLog.read(spark, chatDir)
+      .select(col("question"), unix_micros(col("ts"))).as[(String, Long)].collect()
+    assert(got.sorted.toSeq == (old ++ fresh).sorted, "every turn once, with its exact ts")
+  }
+
+  test("concurrent chats on two threads into one log lose and duplicate nothing") {
+    val storeDir = tmpDir("engine").toString + "/chunks"
+    val chatDir = tmpDir("engine").toString + "/chat"
+    val engine = new Engine(spark, storeDir, chatDir, "s3cret", () => 1700000000L)
+    val perThread = 4
+    val questions = (0 until 2).map(t => (0 until perThread).map(i => s"thread $t turn $i"))
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = questions.zipWithIndex.map { case (qs, t) =>
+      val token = engine.login(s"t$t@x.com")
+      new Thread(() =>
+        try qs.foreach(q => engine.chat(token, q).toOption.get)
+        catch { case e: Throwable => failures.add(e): Unit })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(failures.isEmpty, failures.toString)
+    assert(spark.streams.active.isEmpty)
+    val logged = ChatLog.read(spark, chatDir).select("question").as[String].collect()
+    assert(logged.sorted.toSeq == questions.flatten.sorted)
+  }
+
+  test("an upload's append re-lists no tenant directory") {
+    import org.apache.spark.JobCount
+    val storeDir = tmpDir("engine").toString + "/chunks"
+    val chatDir = tmpDir("engine").toString + "/chat"
+    val engine = new Engine(spark, storeDir, chatDir, "s3cret", () => 1700000000L)
+    val t = engine.login("big@x.com")
+    // 36 files: past the 32-path parallel-listing threshold, so every
+    // listing of the tenant's directory is a Spark job
+    def doc(i: Int) = bytes(s"document number $i " + ("pad " * 20))
+    engine.upload(t, (1 to 36).map(i => s"/up/f$i.txt" -> doc(i))).toOption.get
+    val (statuses, listings) = JobCount.of(spark.sparkContext, _.startsWith("Listing leaf files")) {
+      engine.upload(t, Seq("/up/new.txt" -> doc(37), "/up/again.txt" -> doc(5))).toOption.get
+        .select("path", "status").as[(String, String)].collect().toMap
+    }
+    assert(statuses == Map("/up/new.txt" -> "ok", "/up/again.txt" -> "duplicate"))
+    assert(listings == 1, s"the tenant open lists once; the upload listed $listings times")
+    assert(engine.count() == 37)
   }
 
   test("a tenant with no files gets the empty-context prompt while others hold data") {

@@ -8,16 +8,20 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * carries a tag unique to the call (SparkContext.addJobTag), and a
   * listener counts the tagged job starts once the listener bus has
   * delivered them. Jobs of other threads (a stream's micro-batches) are
-  * not counted. Lives in this package for the job-tag property key and
-  * the listener-bus drain. */
+  * not counted. `described` narrows the count to jobs whose description
+  * it accepts (Spark's file listing describes its jobs "Listing leaf
+  * files and directories …"). Lives in this package for the job-tag and
+  * job-description property keys and the listener-bus drain. */
 object JobCount {
-  def of[A](sc: SparkContext)(f: => A): (A, Int) = {
+  def of[A](sc: SparkContext, described: String => Boolean = _ => true)(f: => A): (A, Int) = {
     val tag = s"jobcount-${java.util.UUID.randomUUID()}"
     val jobs = new AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).flatMap(p => Option(p.getProperty(SparkContext.SPARK_JOB_TAGS)))
-            .exists(_.split(',').contains(tag))) jobs.incrementAndGet()
+            .exists(_.split(',').contains(tag)) &&
+          described(Option(e.properties.getProperty(SparkContext.SPARK_JOB_DESCRIPTION)).getOrElse("")))
+          jobs.incrementAndGet()
     }
     sc.addSparkListener(listener)
     sc.addJobTag(tag)
