@@ -1,7 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.auth.Jwt
 import graft.ingest.IngestPipeline
@@ -37,42 +40,52 @@ final class Engine(spark: SparkSession, storeDir: String, chatLogDir: String,
   /** POST /upload — ingest a batch of (path, content) uploads under the
     * token's identity; accepted chunks land in the store, and the
     * per-file outcome report (the reference's indexed/reason JSON,
-    * app.py:378-391) is returned. */
+    * app.py:378-391) is returned as local rows, so reading it runs no job.
+    *
+    * The request's bytes are already on the driver (the reference, too,
+    * handles an upload in one process, file by file), so the per-file
+    * work stays there: the batch is a `LocalRelation`, and hashing and
+    * [[IngestPipeline.classify]] over it are Projects that Spark's
+    * `ConvertToLocalRelation` evaluates on the driver, with the same
+    * expressions as bulk ingest. The driver holds the request's files
+    * and their chunk texts, so its memory is bounded by the request's
+    * bytes and by [[Engine.MaxFilesPerUpload]]. An upload runs two Spark
+    * jobs: the dedup probe of the caller's directory (none for a tenant
+    * with no files) and the store write, which embeds (none when no file
+    * is accepted). Opening a tenant with more than 32 files adds Spark's
+    * listing job. */
   def upload(token: String, files: Seq[(String, Array[Byte])]): Either[Jwt.AuthError, DataFrame] =
     authed(token) { user =>
       import spark.implicits._
-      // the outcome report below is collect()ed to the driver — safe only
-      // because it is one row PER UPLOADED FILE, never per chunk/row, and
-      // the route enforces the same bound an HTTP multipart endpoint would
-      // (the reference accepts request-sized batches, app.py:378). Bulk
-      // corpus loads go through IngestPipeline/StreamingIngest directly,
-      // which never collect.
+      // Bulk corpus loads go through IngestPipeline/StreamingIngest
+      // directly, which keep every row on the cluster.
       require(files.size <= Engine.MaxFilesPerUpload,
         s"upload batch of ${files.size} files exceeds ${Engine.MaxFilesPerUpload}; " +
           "use StreamingIngest for bulk loads")
-      val batch = files.toDF("path", "content").withColumn("user", lit(user))
-      // The dedup gate's store side, collected up front: the batch's
-      // hashes probe only the caller's directory (the key is (user,
-      // file_hash) with user fixed to the caller), and at most one row per
-      // uploaded file comes back. As local rows, the gate holds no scan
-      // of the store, so the append below neither re-lists the tenant's
-      // directory to refresh the cached ingest nor lets the dedup join see
-      // this batch's own freshly written chunks.
-      val hashes = batch.select(IngestPipeline.fileHash).as[String].collect().distinct
-      val stored = ChunkStore.openUser(spark, storeDir, user).map(_
-        .where(col("file_hash").isin(hashes.toIndexedSeq: _*))
-        .select("file_hash").distinct().as[String].collect().toSeq
-        .toDF("file_hash").withColumn("user", lit(user)))
-      val result = IngestPipeline.ingest(spark, batch, stored)
-      try {
-        val rows = result.outcomes.collect()
-        // any accepted chunks? answered from the collected report — no
-        // extra cluster job just to probe emptiness
-        if (rows.exists(_.getAs[String]("status") == IngestPipeline.Status.Ok))
-          ChunkStore.append(result.chunks, storeDir)
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq), result.outcomes.schema)
-      } finally result.release()
+      val batch = files.map { case (p, c) => (p, c, user) }.toDF("path", "content", "user")
+      val keys = batch.select(col("path"), IngestPipeline.fileHash).as[(String, String)].collect()
+      // The dedup gate's store side: the batch's hashes probe only the
+      // caller's directory (the key is (user, file_hash) with user fixed
+      // to the caller). One job, no shuffle: each partition returns its
+      // distinct matches, at most one per uploaded file.
+      val hashes = keys.map(_._2).distinct
+      val stored = ChunkStore.openUser(spark, storeDir, user).fold(Set.empty[String])(
+        _.where(col("file_hash").isin(hashes.toIndexedSeq: _*)).select("file_hash").as[String]
+          .mapPartitions(_.distinct).collect().toSet)
+      val isDup = IngestPipeline.dupFlags(keys.toIndexedSeq, stored)
+      val flagged = files.indices.map { i =>
+        (files(i)._1, files(i)._2, user, keys(i)._2, isDup(i))
+      }.toDF("path", "content", "user", "file_hash", "is_dup")
+      // parse once: the classified rows are materialized on the driver,
+      // and both the report and the chunk frame are read from them
+      val classified = IngestPipeline.classify(flagged)
+      val rows = classified.collect().toIndexedSeq
+      if (rows.exists(_.getAs[String]("status") == IngestPipeline.Status.Ok))
+        ChunkStore.append(IngestPipeline.chunksOf(
+          spark.createDataFrame(rows.asJava, classified.schema)), storeDir)
+      val n = IngestPipeline.OutcomeColumns.size
+      spark.createDataFrame(rows.map(r => Row.fromSeq(r.toSeq.take(n))).asJava,
+        StructType(classified.schema.take(n)))
     }
 
   /** POST /chat — retrieve top-13 for the question WITHIN the caller's
@@ -106,9 +119,9 @@ final class Engine(spark: SparkSession, storeDir: String, chatLogDir: String,
 }
 
 object Engine {
-  /** Upper bound on files per [[Engine.upload]] call — keeps the one-row-
-    * per-file outcome collect() a bounded driver allocation (at ~200 bytes
-    * a row this is <1 MiB). Request-sized, matching the reference's HTTP
-    * multipart route; bulk loads bypass the facade. */
+  /** Upper bound on files per [[Engine.upload]] call — the upload
+    * classifies its files on the driver, so the batch must stay
+    * request-sized, matching the reference's HTTP multipart route; bulk
+    * loads bypass the facade. */
   val MaxFilesPerUpload = 4096
 }

@@ -5,20 +5,28 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Embedder
 
 /** Multi-format ingest dataflow — the Spark-native form of the reference's
   * `ingest_document` (/root/reference/helper/multiple_document_upload.py:68-176):
   *
-  *   binary scan → ext validate → parse → chunk(1000/200) → blank filter →
-  *   sha256 → dedup anti-join vs store → metadata stamp → embed → chunk rows
+  *   binary scan → sha256 → dedup gate vs batch and store → ext validate →
+  *   parse → chunk(1000/200) → blank filter → metadata stamp → embed →
+  *   chunk rows
   *
-  * Every per-file reject branch of the reference survives as a row-level
-  * status (`IngestPipeline.Status`), so one distributed pass classifies an
-  * arbitrarily large upload batch — no per-file driver loop. At 100 TB the
-  * stages are all narrow (per-file) except the dedup anti-join, which
-  * shuffles only (file_hash → path) pairs.
+  * Two stages. [[gate]] is the dedup gate (a window over the batch plus a
+  * join with the store); it is the only stage that shuffles, and only
+  * (user, file_hash, path) keys. [[classify]] is the per-file stage: every
+  * per-file reject branch of the reference survives as a row-level status
+  * (`IngestPipeline.Status`), computed by Projects alone, so one pass
+  * classifies an arbitrarily large batch with no per-file driver loop.
+  * [[ingest]] is `classify(gate(files, store))`, the path for bulk loads,
+  * `StreamingIngest` and the declared queries. A request-sized upload
+  * (`Engine.upload`) instead flags duplicates on the driver with
+  * [[dupFlags]], the gate's rule for one tenant, and runs [[classify]]
+  * over its `LocalRelation`, which Spark evaluates on the driver.
   */
 object IngestPipeline {
 
@@ -89,30 +97,67 @@ object IngestPipeline {
   }
 
 
-  /** Run the full ingest dataflow.
+  /** The dedup rule for one tenant's batch, as the gate's window and join
+    * apply it: among the batch's files with one `file_hash`, the first
+    * path in path order proceeds and the rest are duplicates (the
+    * reference gets this by processing files one by one); a file whose
+    * hash the tenant already stored is a duplicate. Every file counts,
+    * including one that later ends unsupported or blank, and a status
+    * decided before dedup wins over `duplicate` (see [[classify]]).
     *
-    * @param files  DataFrame with `path: string, user: string, content: binary`
-    * @param store  the dedup gate's store side: any frame with `user` and
-    *               `file_hash` columns — the existing chunk store, or rows
-    *               already collected from it; pass None on first load (the
-    *               reference's `vector_db is None` branch at :140)
-    * @param chunker chunk splitter (reference config 1000/200)
-    * @param cacheParsed cache the parse stage (both outputs consume it);
-    *                    pass false when only ONE of chunks/outcomes will be
-    *                    read exactly once — no cache to leak, no release()
-    *                    obligation
-    * @return (chunks ready to append, per-file outcome report)
-    */
-  def ingest(
-      spark: SparkSession,
-      files: DataFrame,
-      store: Option[DataFrame],
-      chunker: Chunker = Chunker.reference,
-      parsers: Map[String, Parser] = defaultParsers,
-      embedDim: Int = Embedder.DefaultDim,
-      cacheParsed: Boolean = true): IngestBatch = {
-    import spark.implicits._
+    * This is the driver-side form for a request-sized batch: `keys` are
+    * the batch's `(path, file_hash)` pairs in row order, `stored` the
+    * hashes the tenant already holds; the result is each row's `is_dup`. */
+  def dupFlags(keys: Seq[(String, String)], stored: Set[String]): Seq[Boolean] = {
+    // path order is Spark's string order (UTF-8 bytes), not String's UTF-16
+    val winner = keys.indices.groupBy(i => keys(i)._2).map { case (h, rows) =>
+      h -> rows.minBy(i => UTF8String.fromString(keys(i)._1))
+    }
+    keys.indices.map(i => winner(keys(i)._2) != i || stored(keys(i)._2))
+  }
 
+  /** The dedup gate ([[dupFlags]]'s rule over any number of tenants and
+    * files): stamps `file_hash` and `is_dup` on `(path, user, content)`
+    * rows. Scoped per tenant: the reference's check is global
+    * (where={"file_hash": h}) because its retrieval is global; with
+    * tenant-scoped retrieval (X5) a global gate would silently swallow a
+    * tenant's upload because ANOTHER tenant stored the same bytes. The
+    * batch side is a window over (user, file_hash); the store side a left
+    * join on (user, file_hash) — no broadcast hint, AQE picks the strategy
+    * (the store-side hash set is unbounded at scale).
+    *
+    * @param store any frame with `user` and `file_hash` columns — the
+    *              existing chunk store, or rows already collected from
+    *              it; None on first load (the reference's
+    *              `vector_db is None` branch at :140)
+    */
+  def gate(files: DataFrame, store: Option[DataFrame]): DataFrame = {
+    val batchW = Window.partitionBy(col("user"), col("file_hash")).orderBy(col("path"))
+    val withBatchDup = files.withColumn("file_hash", fileHash)
+      .withColumn("batch_dup", row_number().over(batchW) > 1)
+    val withDup = store.map(_.select(col("user"), col("file_hash")).distinct()) match {
+      case Some(d) =>
+        withBatchDup.join(d.withColumn("in_store", lit(true)), Seq("user", "file_hash"), "left")
+          .withColumn("is_dup", col("batch_dup") || coalesce(col("in_store"), lit(false)))
+          .drop("in_store")
+      case None => withBatchDup.withColumn("is_dup", col("batch_dup"))
+    }
+    withDup.drop("batch_dup")
+  }
+
+  /** The per-file outcome report's columns, in order: [[classify]] emits
+    * them first, then `docs`. */
+  val OutcomeColumns: Seq[String] =
+    Seq("path", "source", "user", "type", "file_hash", "status", "reason", "n_chunks")
+
+  /** The per-file stage: `(path, user, content, file_hash, is_dup)` rows →
+    * one classified row per file, [[OutcomeColumns]] plus `docs` (the
+    * file's chunk texts). Every operator is a per-row Project, so over a
+    * request's `LocalRelation` Spark's `ConvertToLocalRelation` evaluates
+    * the whole stage on the driver with these same expressions and no job.
+    */
+  def classify(flagged: DataFrame, chunker: Chunker = Chunker.reference,
+      parsers: Map[String, Parser] = defaultParsers): DataFrame = {
     val ch = chunker
     val ps = parsers
     val parseChunk = udf { (ext: String, content: Array[Byte]) =>
@@ -125,41 +170,17 @@ object IngestPipeline {
             nonEmpty.flatMap(ch.split).filter(_.trim.nonEmpty))
       }
     }
-
-    // filename/ext stamping — lower() + last-dot suffix, as the reference
-    // computes them (multiple_document_upload.py:77,153-156)
-    val named = files
+    flagged
+      // filename/ext stamping — lower() + last-dot suffix, as the reference
+      // computes them (multiple_document_upload.py:77,153-156)
       .withColumn("source", lower(element_at(split(col("path"), "/"), -1)))
       .withColumn("type", element_at(split(col("source"), "\\."), -1))
-      .withColumn("file_hash", fileHash)
-
-    val supported = named.withColumn("supported", col("type").isInCollection(AllowedExts))
-
-    // Dedup gate, scoped per tenant: the reference's check is global
-    // (where={"file_hash": h}) because its retrieval is global; with
-    // tenant-scoped retrieval (X5) a global gate would silently swallow a
-    // tenant's upload because ANOTHER tenant stored the same bytes.
-    // Two layers:
-    //  1. intra-batch: the first path per (user, hash) proceeds, the rest
-    //     are duplicates (the reference gets this by processing files
-    //     sequentially);
-    //  2. vs store: left join on (user, hash) — no broadcast hint, AQE
-    //     picks the strategy (the store-side hash set is unbounded at scale).
-    val batchW = Window.partitionBy(col("user"), col("file_hash")).orderBy(col("path"))
-    val withBatchDup = supported.withColumn("batch_dup", row_number().over(batchW) > 1)
-    val withDup = store.map(_.select(col("user"), col("file_hash")).distinct()) match {
-      case Some(d) =>
-        withBatchDup.join(d.withColumn("in_store", lit(true)), Seq("user", "file_hash"), "left")
-          .withColumn("is_dup", col("batch_dup") || coalesce(col("in_store"), lit(false)))
-      case None => withBatchDup.withColumn("is_dup", col("batch_dup"))
-    }
-
-    // status precedence mirrors the reference's stage order
-    // (multiple_document_upload.py:80→149): ext → load → content → chunks →
-    // dedup LAST — a blank duplicate is "no content", not "duplicate"
-    val parsed = withDup
+      .withColumn("supported", col("type").isInCollection(AllowedExts))
       .withColumn("parsed",
         when(col("supported"), parseChunk(col("type"), col("content"))))
+      // status precedence mirrors the reference's stage order
+      // (multiple_document_upload.py:80→149): ext → load → content → chunks →
+      // dedup LAST — a blank duplicate is "no content", not "duplicate"
       .withColumn("status",
         when(!col("supported"), Status.UnsupportedType)
           .when(col("parsed.err").isNotNull, Status.ParseError)
@@ -167,19 +188,21 @@ object IngestPipeline {
           .when(size(col("parsed.docs")) === 0, Status.NoChunks)
           .when(col("is_dup"), Status.Duplicate)
           .otherwise(Status.Ok))
-      .drop("content")
-    val parsedMaybeCached = if (cacheParsed) parsed.cache() else parsed
+      .select(col("path"), col("source"), col("user"), col("type"), col("file_hash"),
+        col("status"), col("parsed.err").as("reason"),
+        coalesce(size(col("parsed.docs")), lit(0)).as("n_chunks"),
+        col("parsed.docs").as("docs"))
+  }
 
-    val outcomes = parsedMaybeCached.select(
-      col("path"), col("source"), col("user"), col("type"), col("file_hash"),
-      col("status"), col("parsed.err").as("reason"),
-      coalesce(size(col("parsed.docs")), lit(0)).as("n_chunks"))
-
+  /** Appendable chunk rows (schema from [[ChunkRow]]) of [[classify]]'s
+    * `ok` rows. Embedding runs here, in the consuming job's partitions. */
+  def chunksOf(classified: DataFrame, embedDim: Int = Embedder.DefaultDim): DataFrame = {
+    import classified.sparkSession.implicits._
     val dim = embedDim
-    val chunkRows = parsedMaybeCached
+    classified
       .filter(col("status") === Status.Ok)
       .select(col("source"), col("user"), col("type"), col("file_hash"),
-        posexplode(col("parsed.docs")).as(Seq("chunk_seq", "text")))
+        posexplode(col("docs")).as(Seq("chunk_seq", "text")))
       .select(
         // unique, deterministic chunk id: (tenant, content hash, position) —
         // user is part of the key because two tenants may store identical
@@ -196,8 +219,31 @@ object IngestPipeline {
           c.chunk_seq, c.text, model(c.text)))
       }
       .toDF()
+  }
 
-    IngestBatch(chunkRows, outcomes, parsedMaybeCached)
+  /** Run the full ingest dataflow: `classify(gate(files, store))`, with
+    * the report and the chunk rows both read from the classified rows.
+    *
+    * @param files  DataFrame with `path: string, user: string, content: binary`
+    * @param store  the dedup gate's store side (see [[gate]])
+    * @param chunker chunk splitter (reference config 1000/200)
+    * @param cacheParsed cache the classified rows (both outputs consume
+    *                    them); pass false when only ONE of chunks/outcomes
+    *                    will be read exactly once — no cache to leak, no
+    *                    release() obligation
+    * @return (chunks ready to append, per-file outcome report)
+    */
+  def ingest(
+      spark: SparkSession,
+      files: DataFrame,
+      store: Option[DataFrame],
+      chunker: Chunker = Chunker.reference,
+      parsers: Map[String, Parser] = defaultParsers,
+      embedDim: Int = Embedder.DefaultDim,
+      cacheParsed: Boolean = true): IngestBatch = {
+    val classified = classify(gate(files, store), chunker, parsers)
+    val kept = if (cacheParsed) classified.cache() else classified
+    IngestBatch(chunksOf(kept, embedDim), kept.select(OutcomeColumns.map(col): _*), kept)
   }
 }
 

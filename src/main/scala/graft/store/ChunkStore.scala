@@ -37,8 +37,19 @@ object ChunkStore {
 
   /** Append chunk rows (schema from ChunkRow) to the store. First write
     * creates the store — the reference's create-or-append branch at
-    * multiple_document_upload.py:161-168 is `mode("append")` semantics for
-    * free.
+    * multiple_document_upload.py:161-168.
+    *
+    * Each call writes into a staging directory of its own beside the
+    * store (`<store>.staging/<uuid>`), then renames its part files into
+    * the store's `user=…/source=…[/bucket=…]/` directories and deletes
+    * the staging directory. Spark's writer into the store itself would
+    * stage every job in one shared `<store>/_temporary/0`, where one
+    * job's commit deletes a concurrent job's staged files, so concurrent
+    * appends (two uploads at once) would lose data. Part-file names carry
+    * the write job's id, so publishes never collide. As with Spark's own
+    * job commit, the publish is one rename per file, not one atomic step:
+    * a crash mid-publish leaves the rest of the batch in its staging
+    * directory, outside the store.
     *
     * `skewBuckets > 1` adds a `bucket` partition level under source
     * (hash of chunk_id, so a chunk lands in the same bucket on every
@@ -47,14 +58,31 @@ object ChunkStore {
     * would fork the directory schema. */
   def append(chunks: DataFrame, path: String, skewBuckets: Int = 1): Unit = {
     require(skewBuckets >= 1, s"skewBuckets must be >= 1, got $skewBuckets")
-    requireLayoutMatches(chunks.sparkSession, path, bucketed = skewBuckets > 1)
-    if (skewBuckets == 1)
-      chunks.write.mode("append").partitionBy("user", "source").parquet(path)
-    else
-      chunks
-        .withColumn("bucket",
-          pmod(xxhash64(col("chunk_id")), lit(skewBuckets.toLong)).cast("int"))
-        .write.mode("append").partitionBy("user", "source", "bucket").parquet(path)
+    val spark = chunks.sparkSession
+    requireLayoutMatches(spark, path, bucketed = skewBuckets > 1)
+    val (rows, partCols) =
+      if (skewBuckets == 1) (chunks, Seq("user", "source"))
+      else (chunks.withColumn("bucket",
+        pmod(xxhash64(col("chunk_id")), lit(skewBuckets.toLong)).cast("int")),
+        Seq("user", "source", "bucket"))
+    val store = new Path(path)
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new Path(new Path(store.getParent, store.getName + ".staging"),
+      java.util.UUID.randomUUID().toString)
+    def publish(from: Path, to: Path): Unit = fs.listStatus(from).foreach { st =>
+      val dest = new Path(to, st.getPath.getName)
+      if (st.isDirectory) { fs.mkdirs(dest); publish(st.getPath, dest) }
+      else if (st.getPath.getName.endsWith(".parquet") && !fs.rename(st.getPath, dest))
+        throw new java.io.IOException(s"append: could not publish ${st.getPath} to $dest")
+    }
+    try {
+      rows.write.partitionBy(partCols: _*).parquet(staging.toString)
+      fs.mkdirs(store)
+      publish(staging, store)
+    } finally fs.delete(staging, true)
+    // what Spark's write into the store path did: cached frames over the
+    // store see the new files
+    spark.catalog.refreshByPath(path)
   }
 
   /** Fail a mismatched append LOUDLY at write time: mixing bucketed and

@@ -183,6 +183,108 @@ class EngineSpec extends SparkSpec {
     assert(engine.count() == 37)
   }
 
+  test("an upload runs the dedup probe and the write as its only Spark jobs") {
+    import org.apache.spark.JobCount
+    val storeDir = tmpDir("engine").toString + "/chunks"
+    val chatDir = tmpDir("engine").toString + "/chat"
+    val engine = new Engine(spark, storeDir, chatDir, "s3cret", () => 1700000000L)
+    val t = engine.login("six@x.com")
+    def doc(i: Int) = bytes(s"document number $i " + ("pad " * 20))
+    val sc = spark.sparkContext
+    // a new tenant: nothing to probe, one write
+    val (first, firstJobs) = JobCount.of(sc)(engine.upload(t, Seq("/up/f1.txt" -> doc(1))).toOption.get)
+    assert(firstJobs == 1, s"a new tenant's upload ran $firstJobs jobs")
+    val (firstStatus, reportJobs) = JobCount.of(sc)(first.select("status").as[String].collect().toSeq)
+    assert(firstStatus == Seq("ok"))
+    assert(reportJobs == 0, s"collecting the report ran $reportJobs jobs")
+    engine.upload(t, (2 to 6).map(i => s"/up/f$i.txt" -> doc(i))).toOption.get
+    // a 6-file tenant: the probe and the write
+    val (mixed, mixedJobs) = JobCount.of(sc) {
+      engine.upload(t, Seq("/up/new.txt" -> doc(7), "/up/again.txt" -> doc(3),
+        "/up/blank.txt" -> bytes(" \n\t "), "/up/raw.zip" -> bytes("zipzip"))).toOption.get
+    }
+    assert(mixedJobs == 2, s"a 6-file tenant's upload ran $mixedJobs jobs")
+    assert(mixed.select("path", "status").as[(String, String)].collect().toMap == Map(
+      "/up/new.txt" -> "ok", "/up/again.txt" -> "duplicate",
+      "/up/blank.txt" -> "no_content", "/up/raw.zip" -> "unsupported_type"))
+    // nothing accepted: the probe alone
+    val (dups, dupJobs) = JobCount.of(sc)(engine.upload(t, Seq("/up/copy.txt" -> doc(1))).toOption.get)
+    assert(dupJobs == 1, s"an all-duplicate upload ran $dupJobs jobs")
+    assert(dups.select("status").as[String].collect().toSeq == Seq("duplicate"))
+  }
+
+  test("an upload reports and stores exactly what IngestPipeline.ingest and ChunkStore.append give") {
+    import org.apache.spark.sql.functions.col
+    import graft.ingest.IngestPipeline
+    val root = tmpDir("engine").toString
+    val engine = new Engine(spark, root + "/chunks", root + "/chat", "s3cret", () => 1700000000L)
+    val user = "every@x.com"
+    val t = engine.login(user)
+    val stored = "/up/kept.txt" -> bytes("a file stored before the batch " + ("pad " * 30))
+    val long = (1 to 400).map(i => s"word$i").mkString(" ")
+    val batch = Seq(
+      "/up/new.txt" -> bytes(long),                            // ok, several chunks
+      "/up/again.txt" -> stored._2,                            // duplicate of a stored file
+      "/up/z_copy.txt" -> bytes(long),                         // duplicate within the batch
+      "/up/blank.txt" -> bytes(" \n\t "),                      // no_content
+      "/up/blank_copy.txt" -> bytes(" \n\t "),                 // a blank duplicate is no_content
+      "/up/a.zip" -> bytes("zipped bytes " + ("pad " * 30)),   // unsupported_type ...
+      "/up/b.txt" -> bytes("zipped bytes " + ("pad " * 30)),   // ... whose bytes still win the hash
+      "/up/slides.pdf" -> bytes("not a pdf at all"),           // parse_error
+      "/up/Notes.MD" -> bytes("# notes\n\nmarkdown body " + ("pad " * 30)))
+    engine.upload(t, Seq(stored)).toOption.get
+    val report = engine.upload(t, batch).toOption.get
+
+    val refDir = root + "/reference"
+    def rows(fs: Seq[(String, Array[Byte])]) =
+      fs.map { case (p, c) => (p, user, c) }.toDF("path", "user", "content")
+    val first = IngestPipeline.ingest(spark, rows(Seq(stored)), None)
+    ChunkStore.append(first.chunks, refDir)
+    first.release()
+    val want = IngestPipeline.ingest(spark, rows(batch), Some(ChunkStore.load(spark, refDir)))
+    val wantReport = want.outcomes.collect()
+    ChunkStore.append(want.chunks, refDir)
+    want.release()
+
+    assert(report.schema == want.outcomes.schema)
+    assert(report.collect().sortBy(_.getString(0)).toSeq == wantReport.sortBy(_.getString(0)).toSeq)
+    assert(wantReport.map(_.getAs[String]("status")).toSet == Set(
+      "ok", "duplicate", "no_content", "unsupported_type", "parse_error"))
+    assert(report.where(col("path") === "/up/blank_copy.txt").select("status").as[String].head() ==
+      "no_content")
+    def chunks(dir: String) = ChunkStore.openUser(spark, dir, user).get
+      .select("chunk_id", "text", "embedding").as[(Long, String, Array[Float])].collect()
+      .map { case (id, text, e) => (id, text, e.toSeq) }.sortBy(_._1).toSeq
+    val got = chunks(root + "/chunks")
+    assert(got.size > 3)
+    assert(got == chunks(refDir))
+  }
+
+  test("concurrent uploads on two threads into one store lose no file") {
+    val storeDir = tmpDir("engine").toString + "/chunks"
+    val chatDir = tmpDir("engine").toString + "/chat"
+    val engine = new Engine(spark, storeDir, chatDir, "s3cret", () => 1700000000L)
+    val perThread = 4
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val statuses = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = (0 until 2).map { t =>
+      val token = engine.login(s"t$t@x.com")
+      new Thread(() =>
+        try (0 until perThread).foreach { i =>
+          val up = engine.upload(token,
+            Seq(s"/up/t${t}_$i.txt" -> bytes(s"thread $t file $i " + ("pad " * 20)))).toOption.get
+          up.select("status").as[String].collect().foreach(statuses.add)
+        } catch { case e: Throwable => failures.add(e): Unit })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(failures.isEmpty, failures.toString)
+    assert(statuses.toArray.toSeq == Seq.fill(2 * perThread)("ok"))
+    val files = ChunkStore.load(spark, storeDir).select("user", "source").distinct().count()
+    assert(files == 2 * perThread, s"stored $files of ${2 * perThread} files")
+    assert(engine.count() == 2 * perThread)
+  }
+
   test("a tenant with no files gets the empty-context prompt while others hold data") {
     val storeDir = tmpDir("engine").toString + "/chunks"
     val chatDir = tmpDir("engine").toString + "/chat"
