@@ -49,11 +49,12 @@ final class Engine(spark: SparkSession, storeDir: String, chatLogDir: String,
     * `ConvertToLocalRelation` evaluates on the driver, with the same
     * expressions as bulk ingest. The driver holds the request's files
     * and their chunk texts, so its memory is bounded by the request's
-    * bytes and by [[Engine.MaxFilesPerUpload]]. An upload runs two Spark
-    * jobs: the dedup probe of the caller's directory (none for a tenant
-    * with no files) and the store write, which embeds (none when no file
-    * is accepted). Opening a tenant with more than 32 files adds Spark's
-    * listing job. */
+    * bytes and by [[Engine.MaxFilesPerUpload]]. The accepted files'
+    * chunks are embedded and written on the driver too
+    * ([[IngestPipeline.chunkRows]], [[ChunkStore.appendRows]]), so an
+    * upload runs one Spark job: the dedup probe of the caller's directory
+    * (none for a tenant with no files). Opening a tenant with more than 32
+    * files adds Spark's listing job. */
   def upload(token: String, files: Seq[(String, Array[Byte])]): Either[Jwt.AuthError, DataFrame] =
     authed(token) { user =>
       import spark.implicits._
@@ -77,12 +78,11 @@ final class Engine(spark: SparkSession, storeDir: String, chatLogDir: String,
         (files(i)._1, files(i)._2, user, keys(i)._2, isDup(i))
       }.toDF("path", "content", "user", "file_hash", "is_dup")
       // parse once: the classified rows are materialized on the driver,
-      // and both the report and the chunk frame are read from them
+      // and both the report and the chunk rows are read from them
       val classified = IngestPipeline.classify(flagged)
       val rows = classified.collect().toIndexedSeq
       if (rows.exists(_.getAs[String]("status") == IngestPipeline.Status.Ok))
-        ChunkStore.append(IngestPipeline.chunksOf(
-          spark.createDataFrame(rows.asJava, classified.schema)), storeDir)
+        ChunkStore.appendRows(spark, IngestPipeline.chunkRows(spark, rows), storeDir)
       val n = IngestPipeline.OutcomeColumns.size
       spark.createDataFrame(rows.map(r => Row.fromSeq(r.toSeq.take(n))).asJava,
         StructType(classified.schema.take(n)))
@@ -110,7 +110,8 @@ final class Engine(spark: SparkSession, storeDir: String, chatLogDir: String,
   def shutdown(): Unit = ()
 
   /** POST /delete-file — drop every chunk of the caller's `filename`;
-    * returns the deleted count (0 = the reference's "No vectors found"). */
+    * returns the deleted count (0 = the reference's "No vectors found"),
+    * summed from the file's parquet footers: no Spark job runs. */
   def delete(token: String, filename: String): Either[Jwt.AuthError, Long] =
     authed(token)(user => ChunkStore.deleteBySource(spark, storeDir, user, filename))
 

@@ -2,7 +2,7 @@ package graft.ingest
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,8 +25,9 @@ import graft.functions.Embedder
   * [[ingest]] is `classify(gate(files, store))`, the path for bulk loads,
   * `StreamingIngest` and the declared queries. A request-sized upload
   * (`Engine.upload`) instead flags duplicates on the driver with
-  * [[dupFlags]], the gate's rule for one tenant, and runs [[classify]]
-  * over its `LocalRelation`, which Spark evaluates on the driver.
+  * [[dupFlags]], the gate's rule for one tenant, runs [[classify]] over
+  * its `LocalRelation`, which Spark evaluates on the driver, and takes its
+  * chunk rows from [[chunkRows]], the driver-side form of [[chunksOf]].
   */
 object IngestPipeline {
 
@@ -194,6 +195,12 @@ object IngestPipeline {
         col("parsed.docs").as("docs"))
   }
 
+  /** A chunk's `chunk_id`: unique and deterministic over (tenant, content
+    * hash, position). `user` is part of the key because two tenants may
+    * store identical bytes (tenant-scoped dedup) and their chunks must not
+    * collide. */
+  val chunkId: Column = xxhash64(col("user"), col("file_hash"), col("chunk_seq")).as("chunk_id")
+
   /** Appendable chunk rows (schema from [[ChunkRow]]) of [[classify]]'s
     * `ok` rows. Embedding runs here, in the consuming job's partitions. */
   def chunksOf(classified: DataFrame, embedDim: Int = Embedder.DefaultDim): DataFrame = {
@@ -203,12 +210,7 @@ object IngestPipeline {
       .filter(col("status") === Status.Ok)
       .select(col("source"), col("user"), col("type"), col("file_hash"),
         posexplode(col("docs")).as(Seq("chunk_seq", "text")))
-      .select(
-        // unique, deterministic chunk id: (tenant, content hash, position) —
-        // user is part of the key because two tenants may store identical
-        // bytes (tenant-scoped dedup) and their chunks must not collide
-        xxhash64(col("user"), col("file_hash"), col("chunk_seq")).as("chunk_id"),
-        col("source"), col("user"), col("type"), col("file_hash"),
+      .select(chunkId, col("source"), col("user"), col("type"), col("file_hash"),
         col("chunk_seq"), col("text"))
       .as[ChunkRowNoVec]
       // partition-level map: the production seam where an ONNX session is
@@ -219,6 +221,31 @@ object IngestPipeline {
           c.chunk_seq, c.text, model(c.text)))
       }
       .toDF()
+  }
+
+  /** [[chunksOf]] for classified rows already collected on the driver (a
+    * request-sized upload): the same chunk rows, ordered by `(user,
+    * source)` so each file's directory gets one run. `chunk_id` is
+    * [[chunkId]] over a `LocalRelation`, which Spark evaluates on the
+    * driver with no job; the embedding model is loaded once for the batch
+    * and applied as the rows are consumed. */
+  def chunkRows(spark: SparkSession, classified: Seq[Row],
+      embedDim: Int = Embedder.DefaultDim): Iterator[ChunkRow] = {
+    import spark.implicits._
+    val chunks = classified.filter(_.getAs[String]("status") == Status.Ok)
+      .sortBy(r => (r.getAs[String]("user"), r.getAs[String]("source")))
+      .flatMap { r =>
+        r.getAs[collection.Seq[String]]("docs").zipWithIndex.map { case (text, seq) =>
+          ChunkRow(0L, r.getAs("source"), r.getAs("user"), r.getAs("type"),
+            r.getAs("file_hash"), seq, text, null)
+        }
+      }
+    val ids = chunks.map(c => (c.user, c.file_hash, c.chunk_seq))
+      .toDF("user", "file_hash", "chunk_seq").select(chunkId).as[Long].collect()
+    val model = Embedder.StandIn.load(embedDim)
+    chunks.iterator.zip(ids.iterator).map { case (c, id) =>
+      c.copy(chunk_id = id, embedding = model(c.text))
+    }
   }
 
   /** Run the full ingest dataflow: `classify(gate(files, store))`, with

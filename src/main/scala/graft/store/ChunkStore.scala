@@ -1,9 +1,19 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
+import java.util.UUID
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.MessageType
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -31,25 +41,19 @@ import graft.ingest.ChunkRow
   * Every read uses the fixed [[schema]], so no read runs a parquet
   * footer-inference job. The facade's routes open one tenant's directory
   * ([[openUser]]) and delete one (user, source) directory, so their cost
-  * follows that tenant's data, never the whole store's listing.
+  * follows that tenant's data, never the whole store's listing. Two
+  * writers share one commit rule (stage, then rename in): [[append]], a
+  * Spark job, for streaming and bulk loads, and [[appendRows]], which
+  * writes a request's rows on the driver. A delete counts its rows from
+  * the parquet footers, so neither an upload's write nor a delete runs a
+  * Spark job.
   */
 object ChunkStore {
 
-  /** Append chunk rows (schema from ChunkRow) to the store. First write
-    * creates the store — the reference's create-or-append branch at
-    * multiple_document_upload.py:161-168.
-    *
-    * Each call writes into a staging directory of its own beside the
-    * store (`<store>.staging/<uuid>`), then renames its part files into
-    * the store's `user=…/source=…[/bucket=…]/` directories and deletes
-    * the staging directory. Spark's writer into the store itself would
-    * stage every job in one shared `<store>/_temporary/0`, where one
-    * job's commit deletes a concurrent job's staged files, so concurrent
-    * appends (two uploads at once) would lose data. Part-file names carry
-    * the write job's id, so publishes never collide. As with Spark's own
-    * job commit, the publish is one rename per file, not one atomic step:
-    * a crash mid-publish leaves the rest of the batch in its staging
-    * directory, outside the store.
+  /** Append chunk rows (schema from ChunkRow) to the store with a Spark
+    * write job. First write creates the store — the reference's
+    * create-or-append branch at multiple_document_upload.py:161-168.
+    * Committed like every write into the store (see [[staged]]).
     *
     * `skewBuckets > 1` adds a `bucket` partition level under source
     * (hash of chunk_id, so a chunk lands in the same bucket on every
@@ -58,17 +62,78 @@ object ChunkStore {
     * would fork the directory schema. */
   def append(chunks: DataFrame, path: String, skewBuckets: Int = 1): Unit = {
     require(skewBuckets >= 1, s"skewBuckets must be >= 1, got $skewBuckets")
-    val spark = chunks.sparkSession
-    requireLayoutMatches(spark, path, bucketed = skewBuckets > 1)
     val (rows, partCols) =
       if (skewBuckets == 1) (chunks, Seq("user", "source"))
       else (chunks.withColumn("bucket",
         pmod(xxhash64(col("chunk_id")), lit(skewBuckets.toLong)).cast("int")),
         Seq("user", "source", "bucket"))
+    staged(chunks.sparkSession, path, bucketed = skewBuckets > 1) { staging =>
+      rows.write.partitionBy(partCols: _*).parquet(staging.toString)
+    }
+  }
+
+  /** Append request-sized chunk rows by writing them on the driver, with
+    * no Spark job: each run of rows with one `(user, source)` becomes one
+    * parquet file in that unbucketed `user=…/source=…/` directory, so
+    * rows arrive grouped as [[graft.ingest.IngestPipeline.chunkRows]]
+    * orders them. The file schema is Spark's own conversion of
+    * [[schema]]'s data columns and the codec is the session's
+    * `spark.sql.parquet.compression.codec`, so the files read back as the
+    * ones [[append]] writes. Committed like every write into the store
+    * (see [[staged]]); the rows are consumed while the files are written. */
+  def appendRows(spark: SparkSession, rows: Iterator[ChunkRow], path: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val codec = CompressionCodecName.valueOf(
+      new ParquetOptions(Map.empty[String, String], spark.sessionState.conf).compressionCodecClassName)
+    staged(spark, path, bucketed = false) { staging =>
+      val it = rows.buffered
+      while (it.hasNext) {
+        val (user, source) = (it.head.user, it.head.source)
+        val file = new Path(staging, s"user=${escapePathName(user)}/" +
+          s"source=${escapePathName(source)}/part-${UUID.randomUUID()}${codec.getExtension}.parquet")
+        val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
+          .withConf(conf).withType(fileSchema).withCompressionCodec(codec).build()
+        try while (it.hasNext && it.head.user == user && it.head.source == source)
+          writer.write(group(it.next()))
+        finally writer.close()
+      }
+    }
+  }
+
+  /** A chunk row's data columns as a parquet record; null fields are
+    * omitted (read back as null). */
+  private def group(r: ChunkRow): Group = {
+    val g = new SimpleGroup(fileSchema)
+    g.add("chunk_id", r.chunk_id)
+    g.add("chunk_seq", r.chunk_seq)
+    Seq("type" -> r.`type`, "file_hash" -> r.file_hash, "text" -> r.text)
+      .foreach { case (field, v) => if (v != null) g.add(field, v) }
+    if (r.embedding != null) {
+      val list = g.addGroup("embedding")
+      r.embedding.foreach(x => list.addGroup(0).add(0, x))
+    }
+    g
+  }
+
+  /** The store's one commit rule. `write` fills a staging directory of
+    * its own beside the store (`<store>.staging/<uuid>`) with `user=…/
+    * source=…[/bucket=…]/` directories; their parquet files are then
+    * renamed into the store and the staging directory is deleted, also
+    * when `write` fails. Spark's writer into the store itself would stage
+    * every job in one shared `<store>/_temporary/0`, where one job's
+    * commit deletes a concurrent job's staged files, so concurrent appends
+    * (two uploads at once) would lose data. File names carry a unique id,
+    * so publishes never collide. As with Spark's own job commit, the
+    * publish is one rename per file, not one atomic step: a crash
+    * mid-publish leaves the rest of the batch in its staging directory,
+    * outside the store. Cached frames over the store are refreshed. */
+  private def staged(spark: SparkSession, path: String, bucketed: Boolean)(
+      write: Path => Unit): Unit = {
+    requireLayoutMatches(spark, path, bucketed)
     val store = new Path(path)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new Path(new Path(store.getParent, store.getName + ".staging"),
-      java.util.UUID.randomUUID().toString)
+      UUID.randomUUID().toString)
     def publish(from: Path, to: Path): Unit = fs.listStatus(from).foreach { st =>
       val dest = new Path(to, st.getPath.getName)
       if (st.isDirectory) { fs.mkdirs(dest); publish(st.getPath, dest) }
@@ -76,7 +141,7 @@ object ChunkStore {
         throw new java.io.IOException(s"append: could not publish ${st.getPath} to $dest")
     }
     try {
-      rows.write.partitionBy(partCols: _*).parquet(staging.toString)
+      write(staging)
       fs.mkdirs(store)
       publish(staging, store)
     } finally fs.delete(staging, true)
@@ -135,6 +200,12 @@ object ChunkStore {
     * `user, source[, bucket]`. */
   val schema: StructType = Encoders.product[ChunkRow].schema
 
+  /** The parquet schema of [[appendRows]]'s files: Spark's own conversion
+    * of [[schema]]'s data columns, in its default (non-legacy) layout, so
+    * `embedding` is a standard 3-level list. */
+  private val fileSchema: MessageType = new SparkToParquetSchemaConverter()
+    .convert(StructType(schema.filterNot(f => f.name == "user" || f.name == "source")))
+
   /** The whole store (every tenant). Lists every partition directory. */
   def load(spark: SparkSession, path: String): DataFrame = {
     recover(spark, path)
@@ -153,16 +224,22 @@ object ChunkStore {
   private def read(spark: SparkSession, path: String, dir: Path): DataFrame =
     spark.read.schema(schema).option("basePath", path).parquet(dir.toString)
 
-  /** True when `dir` holds a parquet file anywhere below it. Short-circuits
+  /** The data files below `dir` as Spark's reader sees them: names that
+    * start with `_` or `.` (`_SUCCESS`, `_temporary`, checksums) are skipped,
+    * files and directories alike. A lazy `listStatus` walk, so a caller
+    * that stops early lists no further: `listFiles`/`listLocatedStatus`
+    * would read each entry's permission, which Hadoop's local file system
+    * without its native library does by forking a process per entry. */
+  private def dataFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] =
+    fs.listStatus(dir).iterator
+      .filter { st => val n = st.getPath.getName; !n.startsWith("_") && !n.startsWith(".") }
+      .flatMap(st => if (st.isDirectory) dataFiles(fs, st.getPath) else Iterator.single(st))
+
+  /** True when `dir` holds a data file anywhere below it. Short-circuits
     * on the first one found. */
   private def hasDataFile(spark: SparkSession, dir: Path): Boolean = {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return false
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) return true
-    }
-    false
+    fs.exists(dir) && dataFiles(fs, dir).hasNext
   }
 
   /** True when the store has no data: missing directory OR a directory
@@ -248,11 +325,8 @@ object ChunkStore {
   /** Number of parquet data files currently backing the store. */
   def dataFileCount(spark: SparkSession, path: String): Long = {
     if (isEmpty(spark, path)) return 0L
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(new Path(path), true)
-    var n = 0L
-    while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-    n
+    val store = new Path(path)
+    dataFiles(store.getFileSystem(spark.sparkContext.hadoopConfiguration), store).size.toLong
   }
 
   /** Delete every chunk of `source` (lowercased filename) owned by `user` —
@@ -262,16 +336,22 @@ object ChunkStore {
     * same-named file of another tenant must survive. Partition values are
     * Hive-escaped exactly as Spark wrote them (a literal `source=<raw>`
     * path would miss any filename containing %, #, = …). Only that one
-    * directory is checked and counted. Returns the number of deleted rows
-    * (0 = the reference's "No vectors found"). */
+    * directory is checked and counted, and the count is the sum of its
+    * data files' parquet footer row counts: no data page is read and no
+    * Spark job runs. Returns the number of deleted rows (0 = the
+    * reference's "No vectors found"). */
   def deleteBySource(spark: SparkSession, path: String, user: String, source: String): Long = {
     recover(spark, path)
+    val conf = spark.sparkContext.hadoopConfiguration
     val srcDir = new Path(path,
       s"user=${escapePathName(user)}/source=${escapePathName(source.toLowerCase)}")
-    if (!hasDataFile(spark, srcDir)) return 0L
-    // a map-only count of the zero-column scan: one job, no shuffle stage
-    val n = read(spark, path, srcDir).select().rdd.count()
-    if (n > 0) srcDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(srcDir, true)
+    val fs = srcDir.getFileSystem(conf)
+    if (!fs.exists(srcDir)) return 0L
+    val n = dataFiles(fs, srcDir).map { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+    if (n > 0) fs.delete(srcDir, true)
     n
   }
 }

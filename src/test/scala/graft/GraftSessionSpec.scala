@@ -10,7 +10,8 @@ import graft.plans.TopKPerGroup
   * one place: the suites' shared session carries `GraftSession`'s conf
   * and injected planner strategy, and no main source builds a session
   * of its own, reads a streaming env knob or a JVM system property,
-  * appends a rule to a built session, or flushes a stream. */
+  * appends a rule to a built session, flushes a stream, or lists files
+  * through a located-status listing. */
 class GraftSessionSpec extends SparkSpec {
 
   test("the shared test session carries the GraftSession conf and extensions") {
@@ -84,6 +85,21 @@ class GraftSessionSpec extends SparkSpec {
       p <- mainSources
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
       if !isComment(line) && flush.findFirstIn(line).isDefined
+    } yield s"$p:${i + 1}"
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("no main source lists Hadoop files with their located status") {
+    // FileSystem.listFiles(path, recursive) and listLocatedStatus build a
+    // LocatedFileStatus per entry, which reads its permission: Hadoop's
+    // local file system without its native library forks a process per
+    // entry for that. Walk with listStatus, as Spark's own listing does.
+    // java.io.File.listFiles(), with no argument, stays allowed.
+    val located = """\blistLocatedStatus\b|\blistFiles\s*\((?!\s*\))""".r
+    val offenders = for {
+      p <- mainSources
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if !isComment(line) && located.findFirstIn(line).isDefined
     } yield s"$p:${i + 1}"
     assert(offenders.isEmpty, offenders.mkString(", "))
   }

@@ -183,7 +183,7 @@ class EngineSpec extends SparkSpec {
     assert(engine.count() == 37)
   }
 
-  test("an upload runs the dedup probe and the write as its only Spark jobs") {
+  test("an upload runs the dedup probe as its only Spark job") {
     import org.apache.spark.JobCount
     val storeDir = tmpDir("engine").toString + "/chunks"
     val chatDir = tmpDir("engine").toString + "/chat"
@@ -191,23 +191,23 @@ class EngineSpec extends SparkSpec {
     val t = engine.login("six@x.com")
     def doc(i: Int) = bytes(s"document number $i " + ("pad " * 20))
     val sc = spark.sparkContext
-    // a new tenant: nothing to probe, one write
+    // a new tenant: nothing to probe, and the write runs on the driver
     val (first, firstJobs) = JobCount.of(sc)(engine.upload(t, Seq("/up/f1.txt" -> doc(1))).toOption.get)
-    assert(firstJobs == 1, s"a new tenant's upload ran $firstJobs jobs")
+    assert(firstJobs == 0, s"a new tenant's upload ran $firstJobs jobs")
     val (firstStatus, reportJobs) = JobCount.of(sc)(first.select("status").as[String].collect().toSeq)
     assert(firstStatus == Seq("ok"))
     assert(reportJobs == 0, s"collecting the report ran $reportJobs jobs")
     engine.upload(t, (2 to 6).map(i => s"/up/f$i.txt" -> doc(i))).toOption.get
-    // a 6-file tenant: the probe and the write
+    // a 6-file tenant: the probe alone
     val (mixed, mixedJobs) = JobCount.of(sc) {
       engine.upload(t, Seq("/up/new.txt" -> doc(7), "/up/again.txt" -> doc(3),
         "/up/blank.txt" -> bytes(" \n\t "), "/up/raw.zip" -> bytes("zipzip"))).toOption.get
     }
-    assert(mixedJobs == 2, s"a 6-file tenant's upload ran $mixedJobs jobs")
+    assert(mixedJobs == 1, s"a 6-file tenant's upload ran $mixedJobs jobs")
     assert(mixed.select("path", "status").as[(String, String)].collect().toMap == Map(
       "/up/new.txt" -> "ok", "/up/again.txt" -> "duplicate",
       "/up/blank.txt" -> "no_content", "/up/raw.zip" -> "unsupported_type"))
-    // nothing accepted: the probe alone
+    // nothing accepted: still the probe alone
     val (dups, dupJobs) = JobCount.of(sc)(engine.upload(t, Seq("/up/copy.txt" -> doc(1))).toOption.get)
     assert(dupJobs == 1, s"an all-duplicate upload ran $dupJobs jobs")
     assert(dups.select("status").as[String].collect().toSeq == Seq("duplicate"))

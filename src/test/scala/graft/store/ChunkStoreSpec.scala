@@ -208,7 +208,7 @@ class ChunkStoreSpec extends SparkSpec {
     assert(own.columns.takeRight(2).toSeq == Seq("user", "source"))
   }
 
-  test("a tenant open runs no Spark job and a delete runs one (no listing or schema job)") {
+  test("a tenant open and a delete run no Spark job") {
     val dir = tmpDir("store").toString + "/chunks"
     // 20 files for the tenant: below the 32-path parallel-listing threshold
     (1 to 20).foreach { i =>
@@ -222,12 +222,118 @@ class ChunkStoreSpec extends SparkSpec {
     val (deleted, deleteJobs) =
       JobCount.of(sc)(ChunkStore.deleteBySource(spark, dir, "a@x.com", "f7.txt"))
     assert(deleted == 1L)
-    assert(deleteJobs == 1, s"deleteBySource ran $deleteJobs Spark jobs")
+    assert(deleteJobs == 0, s"deleteBySource ran $deleteJobs Spark jobs")
     // the counter sees the job a schema-inferring open of the same
     // directory runs — the job the pinned schema removes
     val userDir = new Path(dir, s"user=${escapePathName("a@x.com")}").toString
     val (_, inferJobs) =
       JobCount.of(sc)(spark.read.option("basePath", dir).parquet(userDir))
     assert(inferJobs >= 1, "schema inference ran no job: the counter is blind")
+  }
+
+  /** Classified rows of a mixed batch: two tenants, a multi-chunk file, a
+    * name needing Hive escaping, and two files sharing one source. */
+  private def classifiedBatch() = {
+    val long = (1 to 400).map(i => s"word$i").mkString(" ")
+    Seq(
+      ("/up/a.txt", "a@x.com", long),
+      ("/up/Notes.MD", "a@x.com", "# notes\n\nmarkdown body " + ("pad " * 30)),
+      ("/up/100%done.txt", "a@x.com", "tricky partition name"),
+      ("/up/two.txt", "b@y.com", "short doc"),
+      ("/other/two.txt", "b@y.com", "another short doc under the same name"),
+      ("/up/raw.zip", "b@y.com", "not stored"))
+      .map { case (p, u, t) => (p, u, t.getBytes(StandardCharsets.UTF_8)) }
+      .toDF("path", "user", "content")
+      .transform(df => IngestPipeline.classify(IngestPipeline.gate(df, None)))
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.select("chunk_id", "user", "source", "type", "file_hash", "chunk_seq", "text", "embedding")
+      .as[(Long, String, String, String, String, Int, String, Array[Float])].collect()
+      .map(r => r.copy(_8 = r._8.toSeq)).sortBy(r => (r._1, r._2)).toSeq
+
+  test("driver-written rows read back as Spark-written ones") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val root = tmpDir("store").toString
+    val (bySpark, byDriver) = (root + "/spark", root + "/driver")
+    val classified = classifiedBatch()
+    ChunkStore.append(IngestPipeline.chunksOf(classified), bySpark)
+    val collected = classified.collect().toSeq
+    val (_, jobs) = JobCount.of(spark.sparkContext)(
+      ChunkStore.appendRows(spark, IngestPipeline.chunkRows(spark, collected), byDriver))
+    assert(jobs == 0, s"the driver write ran $jobs Spark jobs")
+
+    val want = rowsOf(ChunkStore.load(spark, bySpark))
+    assert(want.map(_._3).toSet == Set("a.txt", "notes.md", "100%done.txt", "two.txt"))
+    assert(rowsOf(ChunkStore.load(spark, byDriver)) == want)
+    assert(ChunkStore.count(spark, byDriver) == want.size)
+    Seq("a@x.com", "b@y.com").foreach { u =>
+      assert(rowsOf(ChunkStore.openUser(spark, byDriver, u).get) ==
+        rowsOf(ChunkStore.openUser(spark, bySpark, u).get))
+    }
+    // one file per (user, source), the two same-named files included
+    assert(ChunkStore.dataFileCount(spark, byDriver) == 4L)
+    // the same file schema, and the same schema under inference
+    val conf = spark.sparkContext.hadoopConfiguration
+    def fileSchema(dir: String) = {
+      val f = new Path(dir, s"user=${escapePathName("a@x.com")}/source=a.txt")
+      val st = f.getFileSystem(conf).listStatus(f).filter(_.getPath.getName.endsWith(".parquet")).head
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try r.getFooter.getFileMetaData.getSchema finally r.close()
+    }
+    assert(fileSchema(byDriver) == fileSchema(bySpark))
+    def inferred(dir: String) = spark.read.option("basePath", dir).parquet(dir).schema
+    assert(inferred(byDriver) == inferred(bySpark))
+    // deleteBySource's footer count equals what a Spark scan counts
+    assert(ChunkStore.deleteBySource(spark, byDriver, "b@y.com", "TWO.txt") == 2L)
+    assert(ChunkStore.deleteBySource(spark, bySpark, "b@y.com", "two.txt") == 2L)
+    assert(rowsOf(ChunkStore.load(spark, byDriver)) == rowsOf(ChunkStore.load(spark, bySpark)))
+
+    // compaction rewrites driver-written files into the same rows
+    val before = rowsOf(ChunkStore.load(spark, byDriver))
+    assert(ChunkStore.compact(spark, byDriver) == before.size)
+    assert(rowsOf(ChunkStore.load(spark, byDriver)) == before)
+
+    // StreamingIngest's chunk-level dedup sees driver-written chunk ids:
+    // a replay of the stored files plus one new file appends the new one only
+    val landing = tmpDir("store-landing").toString
+    Seq(("/up/a.txt", "a@x.com", (1 to 400).map(i => s"word$i").mkString(" ")),
+      ("/up/fresh.txt", "a@x.com", "a fresh streamed document"))
+      .map { case (p, u, t) => (p, u, t.getBytes(StandardCharsets.UTF_8)) }
+      .toDF("path", "user", "content").write.mode("append").parquet(landing)
+    Seq(byDriver, bySpark).foreach { dir =>
+      graft.streaming.StreamingIngest.start(spark, landing, dir, s"$dir.ck").awaitTermination()
+    }
+    val streamed = rowsOf(ChunkStore.load(spark, byDriver))
+    assert(streamed.size == before.size + 1)
+    assert(streamed == rowsOf(ChunkStore.load(spark, bySpark)))
+    val sources = ChunkStore.load(spark, byDriver).select("source").distinct().as[String]
+    assert(sources.collect().sorted.toSeq == Seq("100%done.txt", "a.txt", "fresh.txt", "notes.md"))
+  }
+
+  test("a driver write that fails mid-upload leaves the store as it was") {
+    val dir = tmpDir("store").toString + "/chunks"
+    ChunkStore.append(ingestOne("/up/kept.txt", "a@x.com", "a file stored before").chunks, dir)
+    val before = rowsOf(ChunkStore.load(spark, dir))
+    val filesBefore = ChunkStore.dataFileCount(spark, dir)
+    val rows = IngestPipeline.chunkRows(spark, classifiedBatch().collect().toSeq).toSeq
+    val firstRun = rows.takeWhile(r => (r.user, r.source) == (rows.head.user, rows.head.source))
+    // the writer fails inside the second file, after the first file closed
+    val failing = rows.iterator.take(firstRun.size + 1) ++
+      Iterator.fill(1)(throw new java.io.IOException("injected write failure"))
+    val e = intercept[java.io.IOException](ChunkStore.appendRows(spark, failing, dir))
+    assert(e.getMessage == "injected write failure")
+    assert(rowsOf(ChunkStore.load(spark, dir)) == before)
+    assert(ChunkStore.dataFileCount(spark, dir) == filesBefore)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new Path(dir,
+      s"user=${escapePathName(rows.head.user)}/source=${escapePathName(rows.head.source)}")))
+    val staging = new Path(dir + ".staging")
+    assert(!fs.exists(staging) || fs.listStatus(staging).isEmpty, "a staging directory was left behind")
+    // the store takes the same rows once the writer works
+    ChunkStore.appendRows(spark, rows.iterator, dir)
+    assert(ChunkStore.count(spark, dir) == before.size + rows.size)
   }
 }
