@@ -3,8 +3,6 @@ package graft.api
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.auth.Jwt
 import graft.ingest.IngestPipeline
@@ -20,10 +18,11 @@ import graft.streaming.ChatLog
   * method takes the bearer token and binds the verified identity into
   * the plan exactly where the reference binds `g.email`.
   *
-  * Upload and chat open only the caller's store directory
-  * ([[ChunkStore.openUser]]) and delete touches only the caller's
-  * (user, source) directory, all read with the store's pinned schema —
-  * a route's cost follows the caller's data, not the whole store.
+  * Upload reads only the parquet footers of the caller's store directory
+  * ([[ChunkStore.storedHashes]]), chat opens only that directory
+  * ([[ChunkStore.openUser]], with the store's pinned schema) and delete
+  * touches only the caller's (user, source) directory — a route's cost
+  * follows the caller's data, not the whole store.
   *
   * `now` is injected (epoch seconds) so token issue/expiry and chat-log
   * timestamps are deterministic under test.
@@ -43,49 +42,37 @@ final class Engine(spark: SparkSession, storeDir: String, chatLogDir: String,
     * app.py:378-391) is returned as local rows, so reading it runs no job.
     *
     * The request's bytes are already on the driver (the reference, too,
-    * handles an upload in one process, file by file), so the per-file
-    * work stays there: the batch is a `LocalRelation`, and hashing and
-    * [[IngestPipeline.classify]] over it are Projects that Spark's
-    * `ConvertToLocalRelation` evaluates on the driver, with the same
-    * expressions as bulk ingest. The driver holds the request's files
-    * and their chunk texts, so its memory is bounded by the request's
-    * bytes and by [[Engine.MaxFilesPerUpload]]. The accepted files'
-    * chunks are embedded and written on the driver too
-    * ([[IngestPipeline.chunkRows]], [[ChunkStore.appendRows]]), so an
-    * upload runs one Spark job: the dedup probe of the caller's directory
-    * (none for a tenant with no files). Opening a tenant with more than 32
-    * files adds Spark's listing job. */
+    * handles an upload in one process, file by file), so the whole route
+    * runs there with no Spark job and no SQL execution: each file's hash
+    * ([[IngestPipeline.fileHashOf]]), the dedup probe of the caller's
+    * directory ([[ChunkStore.storedHashes]], which reads parquet footers),
+    * the gate's rule for one tenant ([[IngestPipeline.dupFlags]]), the
+    * per-file stage bulk ingest maps over its rows
+    * ([[IngestPipeline.classifyFile]]), and the embedding and write of the
+    * accepted chunks ([[IngestPipeline.chunkRows]],
+    * [[ChunkStore.appendRows]]). The driver holds the request's files and
+    * their chunk texts, so its memory is bounded by the request's bytes
+    * and by [[Engine.MaxFilesPerUpload]]; the probe reads one footer per
+    * file of the caller's directory. */
   def upload(token: String, files: Seq[(String, Array[Byte])]): Either[Jwt.AuthError, DataFrame] =
     authed(token) { user =>
-      import spark.implicits._
       // Bulk corpus loads go through IngestPipeline/StreamingIngest
       // directly, which keep every row on the cluster.
       require(files.size <= Engine.MaxFilesPerUpload,
         s"upload batch of ${files.size} files exceeds ${Engine.MaxFilesPerUpload}; " +
           "use StreamingIngest for bulk loads")
-      val batch = files.map { case (p, c) => (p, c, user) }.toDF("path", "content", "user")
-      val keys = batch.select(col("path"), IngestPipeline.fileHash).as[(String, String)].collect()
-      // The dedup gate's store side: the batch's hashes probe only the
-      // caller's directory (the key is (user, file_hash) with user fixed
-      // to the caller). One job, no shuffle: each partition returns its
-      // distinct matches, at most one per uploaded file.
-      val hashes = keys.map(_._2).distinct
-      val stored = ChunkStore.openUser(spark, storeDir, user).fold(Set.empty[String])(
-        _.where(col("file_hash").isin(hashes.toIndexedSeq: _*)).select("file_hash").as[String]
-          .mapPartitions(_.distinct).collect().toSet)
-      val isDup = IngestPipeline.dupFlags(keys.toIndexedSeq, stored)
-      val flagged = files.indices.map { i =>
-        (files(i)._1, files(i)._2, user, keys(i)._2, isDup(i))
-      }.toDF("path", "content", "user", "file_hash", "is_dup")
-      // parse once: the classified rows are materialized on the driver,
-      // and both the report and the chunk rows are read from them
-      val classified = IngestPipeline.classify(flagged)
-      val rows = classified.collect().toIndexedSeq
+      val hashes = files.map { case (_, content) => IngestPipeline.fileHashOf(content) }
+      // the dedup gate's store side: the key is (user, file_hash) with
+      // user fixed to the caller, so only the caller's directory is read
+      val stored = ChunkStore.storedHashes(spark, storeDir, user, hashes.toSet)
+      val isDup = IngestPipeline.dupFlags(files.map(_._1).zip(hashes), stored)
+      val rows = files.indices.map { i =>
+        IngestPipeline.classifyFile(files(i)._1, user, files(i)._2, hashes(i), isDup(i))
+      }
       if (rows.exists(_.getAs[String]("status") == IngestPipeline.Status.Ok))
         ChunkStore.appendRows(spark, IngestPipeline.chunkRows(spark, rows), storeDir)
-      val n = IngestPipeline.OutcomeColumns.size
-      spark.createDataFrame(rows.map(r => Row.fromSeq(r.toSeq.take(n))).asJava,
-        StructType(classified.schema.take(n)))
+      spark.createDataFrame(rows.map(r => Row.fromSeq(r.toSeq.init)).asJava,
+        IngestPipeline.OutcomeSchema)
     }
 
   /** POST /chat — retrieve top-13 for the question WITHIN the caller's

@@ -2,9 +2,13 @@ package graft.ingest
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.commons.codec.digest.DigestUtils
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema, Literal, Lower, XxHash64}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Embedder
@@ -18,16 +22,16 @@ import graft.functions.Embedder
   *
   * Two stages. [[gate]] is the dedup gate (a window over the batch plus a
   * join with the store); it is the only stage that shuffles, and only
-  * (user, file_hash, path) keys. [[classify]] is the per-file stage: every
-  * per-file reject branch of the reference survives as a row-level status
-  * (`IngestPipeline.Status`), computed by Projects alone, so one pass
-  * classifies an arbitrarily large batch with no per-file driver loop.
+  * (user, file_hash, path) keys. The per-file stage is one Scala function,
+  * [[classifyFile]]: every per-file reject branch of the reference survives
+  * as a row-level status (`IngestPipeline.Status`). [[classify]] maps it
+  * over a frame, so one narrow pass classifies an arbitrarily large batch.
   * [[ingest]] is `classify(gate(files, store))`, the path for bulk loads,
   * `StreamingIngest` and the declared queries. A request-sized upload
-  * (`Engine.upload`) instead flags duplicates on the driver with
-  * [[dupFlags]], the gate's rule for one tenant, runs [[classify]] over
-  * its `LocalRelation`, which Spark evaluates on the driver, and takes its
-  * chunk rows from [[chunkRows]], the driver-side form of [[chunksOf]].
+  * (`Engine.upload`) runs the same steps on the driver with no Spark plan:
+  * [[fileHashOf]] per file, [[dupFlags]] (the gate's rule for one tenant),
+  * [[classifyFile]] per file, and [[chunkRows]], the driver-side form of
+  * [[chunksOf]].
   */
 object IngestPipeline {
 
@@ -63,6 +67,10 @@ object IngestPipeline {
   /** A file's dedup key (multiple_document_upload.py:139): SHA-256 hex of
     * its `content` bytes. */
   val fileHash: Column = sha2(col("content"), 256)
+
+  /** [[fileHash]] of one file's bytes, on the driver: Spark's `sha2(_, 256)`
+    * evaluates this same call. */
+  def fileHashOf(content: Array[Byte]): String = DigestUtils.sha256Hex(content)
 
   /** Default per-format parsers. CSV mirrors the reference's loader
     * semantics (one document per row, "header: value" lines); HTML strips
@@ -146,53 +154,61 @@ object IngestPipeline {
     withDup.drop("batch_dup")
   }
 
-  /** The per-file outcome report's columns, in order: [[classify]] emits
-    * them first, then `docs`. */
-  val OutcomeColumns: Seq[String] =
-    Seq("path", "source", "user", "type", "file_hash", "status", "reason", "n_chunks")
+  /** [[classify]]'s output schema: the per-file outcome report's columns,
+    * then `docs` (the file's chunk texts; null for an unsupported type). */
+  val ClassifiedSchema: StructType = new StructType()
+    .add("path", StringType).add("source", StringType).add("user", StringType)
+    .add("type", StringType).add("file_hash", StringType)
+    .add("status", StringType, nullable = false).add("reason", StringType)
+    .add("n_chunks", IntegerType, nullable = false)
+    .add("docs", ArrayType(StringType))
 
-  /** The per-file stage: `(path, user, content, file_hash, is_dup)` rows →
-    * one classified row per file, [[OutcomeColumns]] plus `docs` (the
-    * file's chunk texts). Every operator is a per-row Project, so over a
-    * request's `LocalRelation` Spark's `ConvertToLocalRelation` evaluates
-    * the whole stage on the driver with these same expressions and no job.
-    */
+  /** The per-file outcome report: [[ClassifiedSchema]] without `docs`. */
+  val OutcomeSchema: StructType = StructType(ClassifiedSchema.init)
+
+  /** The outcome report's columns, in order: [[classify]] emits them
+    * first, then `docs`. */
+  val OutcomeColumns: Seq[String] = OutcomeSchema.fieldNames.toSeq
+
+  /** The per-file stage for one file with its dedup key and flag: a row of
+    * [[ClassifiedSchema]]. The upload route calls it on the driver and
+    * [[classify]] maps it over a frame, so both run this same code. */
+  def classifyFile(path: String, user: String, content: Array[Byte], fileHash: String,
+      isDup: Boolean, chunker: Chunker = Chunker.reference,
+      parsers: Map[String, Parser] = defaultParsers): Row = {
+    // filename/ext stamping — lower() + last-dot suffix, as the reference
+    // computes them (multiple_document_upload.py:77,153-156). The splits
+    // keep trailing empty strings, as Spark's split() does, and the
+    // lowercasing is Spark's lower() itself
+    val source = Lower(Literal(path.split("/", -1).last)).eval().toString
+    val ext = source.split("\\.", -1).last
+    // status precedence mirrors the reference's stage order
+    // (multiple_document_upload.py:80→149): ext → load → content → chunks →
+    // dedup LAST — a blank duplicate is "no content", not "duplicate"
+    val (status, reason, docs) =
+      if (!AllowedExts(ext)) (Status.UnsupportedType, null, null)
+      else parsers(ext)(content) match {
+        case Left(err) => (Status.ParseError, err, Seq.empty[String])
+        case Right(parsed) =>
+          val nonEmpty = parsed.filter(d => d != null && d.trim.nonEmpty)
+          val chunks = nonEmpty.flatMap(chunker.split).filter(_.trim.nonEmpty)
+          if (nonEmpty.isEmpty) (Status.NoContent, null, chunks)
+          else if (chunks.isEmpty) (Status.NoChunks, null, chunks)
+          else (if (isDup) Status.Duplicate else Status.Ok, null, chunks)
+      }
+    new GenericRowWithSchema(Array(path, source, user, ext, fileHash, status, reason,
+      if (docs == null) 0 else docs.size, docs), ClassifiedSchema)
+  }
+
+  /** The per-file stage over a frame: `(path, user, content, file_hash,
+    * is_dup)` rows → one [[ClassifiedSchema]] row per file, by
+    * [[classifyFile]]. A narrow map, so it runs in the rows' partitions. */
   def classify(flagged: DataFrame, chunker: Chunker = Chunker.reference,
       parsers: Map[String, Parser] = defaultParsers): DataFrame = {
-    val ch = chunker
-    val ps = parsers
-    val parseChunk = udf { (ext: String, content: Array[Byte]) =>
-      ps(ext)(content) match {
-        case Left(err) => ParseOut(err, hadContent = false, Seq.empty)
-        case Right(docs) =>
-          val nonEmpty = docs.filter(d => d != null && d.trim.nonEmpty)
-          if (nonEmpty.isEmpty) ParseOut(null, hadContent = false, Seq.empty)
-          else ParseOut(null, hadContent = true,
-            nonEmpty.flatMap(ch.split).filter(_.trim.nonEmpty))
-      }
-    }
-    flagged
-      // filename/ext stamping — lower() + last-dot suffix, as the reference
-      // computes them (multiple_document_upload.py:77,153-156)
-      .withColumn("source", lower(element_at(split(col("path"), "/"), -1)))
-      .withColumn("type", element_at(split(col("source"), "\\."), -1))
-      .withColumn("supported", col("type").isInCollection(AllowedExts))
-      .withColumn("parsed",
-        when(col("supported"), parseChunk(col("type"), col("content"))))
-      // status precedence mirrors the reference's stage order
-      // (multiple_document_upload.py:80→149): ext → load → content → chunks →
-      // dedup LAST — a blank duplicate is "no content", not "duplicate"
-      .withColumn("status",
-        when(!col("supported"), Status.UnsupportedType)
-          .when(col("parsed.err").isNotNull, Status.ParseError)
-          .when(!col("parsed.hadContent"), Status.NoContent)
-          .when(size(col("parsed.docs")) === 0, Status.NoChunks)
-          .when(col("is_dup"), Status.Duplicate)
-          .otherwise(Status.Ok))
-      .select(col("path"), col("source"), col("user"), col("type"), col("file_hash"),
-        col("status"), col("parsed.err").as("reason"),
-        coalesce(size(col("parsed.docs")), lit(0)).as("n_chunks"),
-        col("parsed.docs").as("docs"))
+    val (ch, ps) = (chunker, parsers)
+    flagged.map(r => classifyFile(r.getAs[String]("path"), r.getAs[String]("user"),
+      r.getAs[Array[Byte]]("content"), r.getAs[String]("file_hash"), r.getAs[Boolean]("is_dup"),
+      ch, ps))(Encoders.row(ClassifiedSchema))
   }
 
   /** A chunk's `chunk_id`: unique and deterministic over (tenant, content
@@ -223,29 +239,30 @@ object IngestPipeline {
       .toDF()
   }
 
-  /** [[chunksOf]] for classified rows already collected on the driver (a
+  /** [[chunkId]] of one chunk, on the driver: the same Catalyst
+    * expression evaluated on literals, so no plan is built. */
+  private def chunkIdOf(user: String, fileHash: String, seq: Int): Long =
+    new XxHash64(Seq(Literal.create(user, StringType), Literal.create(fileHash, StringType),
+      Literal(seq))).eval().asInstanceOf[Long]
+
+  /** [[chunksOf]] for classified rows already on the driver (a
     * request-sized upload): the same chunk rows, ordered by `(user,
-    * source)` so each file's directory gets one run. `chunk_id` is
-    * [[chunkId]] over a `LocalRelation`, which Spark evaluates on the
-    * driver with no job; the embedding model is loaded once for the batch
-    * and applied as the rows are consumed. */
+    * source)` so each file's directory gets one run. No Spark plan is
+    * built or run, so `spark` is not used; `chunk_id` comes from
+    * [[chunkIdOf]]. The embedding model is loaded once for the batch and
+    * applied as the rows are consumed. */
   def chunkRows(spark: SparkSession, classified: Seq[Row],
       embedDim: Int = Embedder.DefaultDim): Iterator[ChunkRow] = {
-    import spark.implicits._
-    val chunks = classified.filter(_.getAs[String]("status") == Status.Ok)
+    val model = Embedder.StandIn.load(embedDim)
+    classified.filter(_.getAs[String]("status") == Status.Ok)
       .sortBy(r => (r.getAs[String]("user"), r.getAs[String]("source")))
-      .flatMap { r =>
-        r.getAs[collection.Seq[String]]("docs").zipWithIndex.map { case (text, seq) =>
-          ChunkRow(0L, r.getAs("source"), r.getAs("user"), r.getAs("type"),
-            r.getAs("file_hash"), seq, text, null)
+      .iterator.flatMap { r =>
+        val (user, hash) = (r.getAs[String]("user"), r.getAs[String]("file_hash"))
+        r.getAs[collection.Seq[String]]("docs").iterator.zipWithIndex.map { case (text, seq) =>
+          ChunkRow(chunkIdOf(user, hash, seq), r.getAs("source"), user, r.getAs("type"), hash,
+            seq, text, model(text))
         }
       }
-    val ids = chunks.map(c => (c.user, c.file_hash, c.chunk_seq))
-      .toDF("user", "file_hash", "chunk_seq").select(chunkId).as[Long].collect()
-    val model = Embedder.StandIn.load(embedDim)
-    chunks.iterator.zip(ids.iterator).map { case (c, id) =>
-      c.copy(chunk_id = id, embedding = model(c.text))
-    }
   }
 
   /** Run the full ingest dataflow: `classify(gate(files, store))`, with
@@ -273,10 +290,6 @@ object IngestPipeline {
     IngestBatch(chunksOf(kept, embedDim), kept.select(OutcomeColumns.map(col): _*), kept)
   }
 }
-
-/** UDF output of the parse+chunk stage (top-level so Catalyst codegen can
-  * construct/inspect it). */
-case class ParseOut(err: String, hadContent: Boolean, docs: Seq[String])
 
 case class ChunkRowNoVec(chunk_id: Long, source: String, user: String, `type`: String,
     file_hash: String, chunk_seq: Int, text: String)

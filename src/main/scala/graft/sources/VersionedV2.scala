@@ -6,7 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, MessageTypeParser}
@@ -14,6 +16,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.Types
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -30,6 +33,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.store.Versioned
 
@@ -115,6 +119,26 @@ object VersionedV2 {
     scans(df.queryExecution.executedPlan).map(_.keptFiles).sum
   }
 
+  /** The Hadoop configuration a scan's readers share: broadcast once per
+    * scan, as Spark's own file sources do, so no reader builds (and
+    * parses) a configuration of its own. */
+  private[sources] def readerConf(): Broadcast[SerializableConfiguration] = {
+    val sc = SparkSession.active.sparkContext
+    sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+  }
+
+  /** Open a parquet file with `conf` and read options built from it:
+    * parquet's default read options would build and parse a fresh Hadoop
+    * configuration for every file. */
+  private[sources] def openParquet(file: String, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf),
+      HadoopReadOptions.builder(conf).build())
+
+  private[sources] def footerOf(file: String, conf: Configuration): ParquetMetadata = {
+    val r = openParquet(file, conf)
+    try r.getFooter finally r.close()
+  }
+
   private[sources] def pathAndVersion(
       options: CaseInsensitiveStringMap): (String, Option[Int]) = {
     val path = Option(options.get("path")).getOrElse(
@@ -140,9 +164,8 @@ object VersionedV2 {
     val fs = Versioned.files(path, version)
     require(fs.nonEmpty,
       s"graft-versioned: $path has no committed data and no recorded schema")
-    val in = HadoopInputFile.fromPath(new Path(fs.head), new Configuration())
-    val r = ParquetFileReader.open(in)
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
+    footerOf(fs.head, SparkSession.active.sparkContext.hadoopConfiguration)
+      .getFileMetaData.getSchema
   }
 
   private[sources] def sparkSchema(msg: MessageType): StructType =
@@ -828,16 +851,19 @@ private[sources] class VersionedAggScan(files: Seq[String],
   override def planInputPartitions(): Array[InputPartition] =
     files.map(f => VersionedAggPartition(f, specs, schema): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new VersionedAggReader(p.asInstanceOf[VersionedAggPartition])
-    }
+    new VersionedAggReaderFactory(VersionedV2.readerConf())
+}
+
+private[sources] class VersionedAggReaderFactory(conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new VersionedAggReader(p.asInstanceOf[VersionedAggPartition], conf.value.value)
 }
 
 private[sources] case class VersionedAggPartition(file: String,
     specs: Seq[VersionedAggSpec], schema: StructType) extends InputPartition
 
-private[sources] class VersionedAggReader(p: VersionedAggPartition)
+private[sources] class VersionedAggReader(p: VersionedAggPartition, conf: Configuration)
     extends PartitionReader[InternalRow] {
   private var done = false
 
@@ -845,9 +871,7 @@ private[sources] class VersionedAggReader(p: VersionedAggPartition)
 
   override def get(): InternalRow = {
     done = true
-    val footer = ParquetFileReader.readFooter(new Configuration(),
-      new Path(p.file),
-      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+    val footer = VersionedV2.footerOf(p.file, conf)
     val blocks = footer.getBlocks.asScala.toSeq
     def colStats(c: String) = blocks.flatMap(_.getColumns.asScala
       .find(_.getPath.toDotString == c)
@@ -974,7 +998,7 @@ private[sources] class VersionedScan(total: Int, files0: Seq[String],
     files.map(f => VersionedFilePartition(f, projectedMsg, required,
       emitEmptyRows, dvByFile.getOrElse(f, Seq.empty)): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new VersionedReaderFactory
+    new VersionedReaderFactory(VersionedV2.readerConf())
 }
 
 private[sources] case class VersionedFilePartition(file: String,
@@ -1059,12 +1083,13 @@ private[sources] class VersionedMicroBatchStream(path: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new VersionedReaderFactory
+    new VersionedReaderFactory(VersionedV2.readerConf())
   override def commit(end: SOffset): Unit = ()
   override def stop(): Unit = ()
 }
 
-private[sources] class VersionedReaderFactory extends PartitionReaderFactory {
+private[sources] class VersionedReaderFactory(conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[VersionedFilePartition]
     // empty projection (COUNT(*) after column pruning, no residual filter
@@ -1075,7 +1100,7 @@ private[sources] class VersionedReaderFactory extends PartitionReaderFactory {
     require(p.emitEmptyRows,
       s"graft-versioned: ${p.file} has a non-empty projection; it must " +
         "take the columnar reader")
-    new VersionedCountReader(p.file, p.dvFiles)
+    new VersionedCountReader(p.file, p.dvFiles, conf.value.value)
   }
 
   /** Columnar decode for the connector's full projection surface — the
@@ -1094,7 +1119,8 @@ private[sources] class VersionedReaderFactory extends PartitionReaderFactory {
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new VersionedColumnarReader(partition.asInstanceOf[VersionedFilePartition])
+    new VersionedColumnarReader(partition.asInstanceOf[VersionedFilePartition],
+      conf.value.value)
 }
 
 /** Zero-IO COUNT(*) partition: emits exactly the footer's rowCount empty
@@ -1105,12 +1131,10 @@ private[sources] class VersionedReaderFactory extends PartitionReaderFactory {
   * empty projection admits no residual row filter (filters force their
   * columns into the read schema). */
 private[sources] class VersionedCountReader(file: String,
-    dvFiles: Seq[String] = Seq.empty)
+    dvFiles: Seq[String], conf: Configuration)
     extends PartitionReader[InternalRow] {
   private var remaining: Long = {
-    val footer = ParquetFileReader.readFooter(new Configuration(),
-      new Path(file),
-      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+    val footer = VersionedV2.footerOf(file, conf)
     // deletion vectors subtract exactly (positions are distinct and
     // in-range by construction; readDvPositions unions overlaps)
     footer.getBlocks.asScala.map(_.getRowCount).sum -
@@ -1142,8 +1166,8 @@ private[sources] class VersionedCountReader(file: String,
   * vector, present columns decode under the FILE's own column
   * descriptors. Vectors are reused across batches (reset, not
   * realloc). */
-private[sources] class VersionedColumnarReader(p: VersionedFilePartition)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+private[sources] class VersionedColumnarReader(p: VersionedFilePartition,
+    conf: Configuration) extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.parquet.column.ColumnReader
   import org.apache.parquet.column.impl.ColumnReadStoreImpl
   import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
@@ -1152,9 +1176,7 @@ private[sources] class VersionedColumnarReader(p: VersionedFilePartition)
 
   private val Cap = 4096
 
-  private val reader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p.file),
-      new Configuration()))
+  private val reader = VersionedV2.openParquet(p.file, conf)
   private val fileMsg = reader.getFooter.getFileMetaData.getSchema
   private val createdBy = reader.getFooter.getFileMetaData.getCreatedBy
   private val fileFields: Set[String] =

@@ -2,13 +2,21 @@ package graft.store
 
 import java.util.UUID
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.MessageType
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
@@ -44,8 +52,9 @@ import graft.ingest.ChunkRow
   * follows that tenant's data, never the whole store's listing. Two
   * writers share one commit rule (stage, then rename in): [[append]], a
   * Spark job, for streaming and bulk loads, and [[appendRows]], which
-  * writes a request's rows on the driver. A delete counts its rows from
-  * the parquet footers, so neither an upload's write nor a delete runs a
+  * writes a request's rows on the driver. An upload's dedup probe
+  * ([[storedHashes]]) and a delete's row count ([[deleteBySource]]) read
+  * parquet footers on the driver, so no upload and no delete runs a
   * Spark job.
   */
 object ChunkStore {
@@ -224,6 +233,86 @@ object ChunkStore {
   private def read(spark: SparkSession, path: String, dir: Path): DataFrame =
     spark.read.schema(schema).option("basePath", path).parquet(dir.toString)
 
+  /** The hashes among `hashes` that `user`'s rows hold in `file_hash`:
+    * the dedup gate's store side for one tenant, answered from parquet
+    * footers on the driver with no Spark job. It reads the files
+    * [[openUser]] would scan (recover, then [[dataFiles]] of the tenant's
+    * directory) and gives what `openUser(…).where(file_hash IN hashes)`
+    * returns. Per row group, from its `file_hash` statistics: a group
+    * whose [min, max] holds no wanted hash is skipped; a group holding one
+    * hash (min = max, no nulls: every file [[appendRows]] writes) answers
+    * from the statistics alone; any other group (Spark-written bulk,
+    * compacted or skew-bucketed files hold many hashes) has its
+    * `file_hash` column read. */
+  def storedHashes(spark: SparkSession, path: String, user: String,
+      hashes: Set[String]): Set[String] = {
+    recover(spark, path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path, s"user=${escapePathName(user)}")
+    val fs = dir.getFileSystem(conf)
+    if (hashes.isEmpty || !fs.exists(dir)) return Set.empty
+    footers(conf, dataFiles(fs, dir))(hashesIn(_, hashes)).flatten.toSet
+  }
+
+  /** The wanted hashes one file's `file_hash` column holds. */
+  private def hashesIn(reader: ParquetFileReader, wanted: Set[String]): Iterable[String] = {
+    val fileSchema = reader.getFooter.getFileMetaData.getSchema
+    if (!fileSchema.containsField("file_hash")) return Nil
+    val projected = new MessageType(fileSchema.getName,
+      fileSchema.getType(fileSchema.getFieldIndex("file_hash")))
+    reader.setRequestedSchema(projected)
+    val column = projected.getColumns.get(0)
+    val createdBy = reader.getFooter.getFileMetaData.getCreatedBy
+    val probes = wanted.toSeq.map(Binary.fromString)
+    reader.getRowGroups.asScala.toSeq.zipWithIndex.flatMap { case (group, i) =>
+      val chunk = group.getColumns.asScala.find(_.getPath.toDotString == "file_hash").get
+      val s = chunk.getStatistics.asInstanceOf[Statistics[Binary]]
+      val nulls = if (s != null && s.isNumNullsSet) s.getNumNulls else -1L
+      // min/max are set only when the group holds a non-null value
+      val bounded = s != null && s.hasNonNullValue
+      if (nulls == chunk.getValueCount) Nil
+      else if (bounded && probes.forall(h => s.compareMinToValue(h) > 0 || s.compareMaxToValue(h) < 0))
+        Nil
+      else if (bounded && nulls == 0 && s.compareMinToValue(s.genericGetMax) == 0)
+        Seq(s.genericGetMin.toStringUsingUTF8).filter(wanted)
+      else {
+        val values = new ColumnReadStoreImpl(reader.readRowGroup(i), IgnoreRecords, projected, createdBy)
+          .getColumnReader(column)
+        val found = mutable.Set.empty[String]
+        var left = values.getTotalValueCount
+        while (left > 0) {
+          if (values.getCurrentDefinitionLevel == column.getMaxDefinitionLevel) {
+            val h = values.getBinary.toStringUsingUTF8
+            if (wanted(h)) found += h
+          }
+          values.consume()
+          left -= 1
+        }
+        found
+      }
+    }
+  }
+
+  /** The record converter a column reader asks for; values are pulled
+    * through the reader's own getters, so it does nothing. */
+  private object IgnoreRecords extends GroupConverter {
+    override def getConverter(i: Int): Converter = new PrimitiveConverter {}
+    override def start(): Unit = ()
+    override def end(): Unit = ()
+  }
+
+  /** `f` over each of `files` opened as parquet, lazily, with one set of
+    * read options for the call: parquet's default options would build and
+    * parse a fresh Hadoop configuration for every file. */
+  private def footers[A](conf: Configuration, files: Iterator[FileStatus])(
+      f: ParquetFileReader => A): Iterator[A] = {
+    val options = HadoopReadOptions.builder(conf).build()
+    files.map { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), options)
+      try f(reader) finally reader.close()
+    }
+  }
+
   /** The data files below `dir` as Spark's reader sees them: names that
     * start with `_` or `.` (`_SUCCESS`, `_temporary`, checksums) are skipped,
     * files and directories alike. A lazy `listStatus` walk, so a caller
@@ -347,10 +436,7 @@ object ChunkStore {
       s"user=${escapePathName(user)}/source=${escapePathName(source.toLowerCase)}")
     val fs = srcDir.getFileSystem(conf)
     if (!fs.exists(srcDir)) return 0L
-    val n = dataFiles(fs, srcDir).map { st =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      try reader.getRecordCount finally reader.close()
-    }.sum
+    val n = footers(conf, dataFiles(fs, srcDir))(_.getRecordCount).sum
     if (n > 0) fs.delete(srcDir, true)
     n
   }

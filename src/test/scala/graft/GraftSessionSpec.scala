@@ -10,8 +10,9 @@ import graft.plans.TopKPerGroup
   * one place: the suites' shared session carries `GraftSession`'s conf
   * and injected planner strategy, and no main source builds a session
   * of its own, reads a streaming env knob or a JVM system property,
-  * appends a rule to a built session, flushes a stream, or lists files
-  * through a located-status listing. */
+  * appends a rule to a built session, flushes a stream, lists files
+  * through a located-status listing, or opens a parquet file with a
+  * Hadoop configuration of its own. */
 class GraftSessionSpec extends SparkSpec {
 
   test("the shared test session carries the GraftSession conf and extensions") {
@@ -101,6 +102,58 @@ class GraftSessionSpec extends SparkSpec {
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
       if !isComment(line) && located.findFirstIn(line).isDefined
     } yield s"$p:${i + 1}"
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  /** Where `source` opens a parquet file with parquet's default read
+    * options (a one-argument `ParquetFileReader.open`) or reads a footer
+    * with a fresh configuration (`readFooter(new Configuration()…`): both
+    * build and parse a Hadoop configuration per file. Returns the 1-based
+    * lines of the offending calls; a call may span lines. */
+  private def ownConfigurationOpens(source: String): Seq[Int] = {
+    val lines = source.split("\n", -1)
+    def lineOf(offset: Int) = source.substring(0, offset).count(_ == '\n') + 1
+    // the argument count of the call whose "(" is at `open`
+    def arity(open: Int): Int = {
+      var (depth, commas, i) = (0, 0, open)
+      var empty = true
+      while (i < source.length && !(depth == 1 && source(i) == ')')) {
+        source(i) match {
+          case '(' => depth += 1
+          case ')' => depth -= 1
+          case ',' if depth == 1 => commas += 1
+          case c if depth >= 1 && !c.isWhitespace && i != open => empty = false
+          case _ =>
+        }
+        i += 1
+      }
+      if (empty) 0 else commas + 1
+    }
+    val oneArgOpen = """\bParquetFileReader\s*\.\s*open\s*\(""".r.findAllMatchIn(source)
+      .filter(m => arity(m.end - 1) == 1).map(_.start)
+    val freshFooter = """\breadFooter\s*\(\s*new\s+Configuration\s*\(""".r.findAllMatchIn(source)
+      .map(_.start)
+    (oneArgOpen ++ freshFooter).map(lineOf).filterNot(l => isComment(lines(l - 1))).toSeq.sorted
+  }
+
+  test("no main source opens a parquet file with a configuration of its own") {
+    // parquet's default read options build a fresh Hadoop Configuration,
+    // which parses its XML resources: about 8 ms a file against 0.2 ms
+    // with options built once from a shared configuration
+    val offendingForms = Seq(
+      "val r = ParquetFileReader.open(in)",
+      "ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))",
+      "ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p.file),\n  new Configuration()))",
+      "val footer = ParquetFileReader.readFooter(new Configuration(),\n  new Path(p.file), NO_FILTER)")
+    offendingForms.foreach(site => assert(ownConfigurationOpens(site) == Seq(1), site))
+    assert(ownConfigurationOpens(
+      "ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),\n  HadoopReadOptions.builder(conf).build())")
+      .isEmpty)
+    assert(ownConfigurationOpens("ParquetFileReader.readFooter(conf, path, NO_FILTER)").isEmpty)
+    val offenders = for {
+      p <- mainSources
+      line <- ownConfigurationOpens(new String(Files.readAllBytes(p), "UTF-8"))
+    } yield s"$p:$line"
     assert(offenders.isEmpty, offenders.mkString(", "))
   }
 }

@@ -179,38 +179,88 @@ class EngineSpec extends SparkSpec {
         .select("path", "status").as[(String, String)].collect().toMap
     }
     assert(statuses == Map("/up/new.txt" -> "ok", "/up/again.txt" -> "duplicate"))
-    assert(listings == 1, s"the tenant open lists once; the upload listed $listings times")
+    assert(listings == 0, s"the probe walks the tenant on the driver; the upload listed $listings times")
     assert(engine.count() == 37)
   }
 
-  test("an upload runs the dedup probe as its only Spark job") {
+  test("an upload runs no Spark job or SQL execution") {
     import org.apache.spark.JobCount
     val storeDir = tmpDir("engine").toString + "/chunks"
     val chatDir = tmpDir("engine").toString + "/chat"
     val engine = new Engine(spark, storeDir, chatDir, "s3cret", () => 1700000000L)
-    val t = engine.login("six@x.com")
     def doc(i: Int) = bytes(s"document number $i " + ("pad " * 20))
-    val sc = spark.sparkContext
-    // a new tenant: nothing to probe, and the write runs on the driver
-    val (first, firstJobs) = JobCount.of(sc)(engine.upload(t, Seq("/up/f1.txt" -> doc(1))).toOption.get)
-    assert(firstJobs == 0, s"a new tenant's upload ran $firstJobs jobs")
-    val (firstStatus, reportJobs) = JobCount.of(sc)(first.select("status").as[String].collect().toSeq)
-    assert(firstStatus == Seq("ok"))
-    assert(reportJobs == 0, s"collecting the report ran $reportJobs jobs")
-    engine.upload(t, (2 to 6).map(i => s"/up/f$i.txt" -> doc(i))).toOption.get
-    // a 6-file tenant: the probe alone
-    val (mixed, mixedJobs) = JobCount.of(sc) {
-      engine.upload(t, Seq("/up/new.txt" -> doc(7), "/up/again.txt" -> doc(3),
-        "/up/blank.txt" -> bytes(" \n\t "), "/up/raw.zip" -> bytes("zipzip"))).toOption.get
+    def upload(t: String, files: Seq[(String, Array[Byte])], what: String) = {
+      val (report, jobs, executions) = JobCount.withExecutions(spark)(engine.upload(t, files).toOption.get)
+      assert(jobs == 0, s"$what ran $jobs jobs")
+      assert(executions == 0, s"$what ran $executions SQL executions")
+      report.select("path", "status").as[(String, String)].collect().toMap
     }
-    assert(mixedJobs == 1, s"a 6-file tenant's upload ran $mixedJobs jobs")
-    assert(mixed.select("path", "status").as[(String, String)].collect().toMap == Map(
-      "/up/new.txt" -> "ok", "/up/again.txt" -> "duplicate",
-      "/up/blank.txt" -> "no_content", "/up/raw.zip" -> "unsupported_type"))
-    // nothing accepted: still the probe alone
-    val (dups, dupJobs) = JobCount.of(sc)(engine.upload(t, Seq("/up/copy.txt" -> doc(1))).toOption.get)
-    assert(dupJobs == 1, s"an all-duplicate upload ran $dupJobs jobs")
-    assert(dups.select("status").as[String].collect().toSeq == Seq("duplicate"))
+    val mixed = Seq("/up/new.txt" -> doc(100), "/up/again.txt" -> doc(3),
+      "/up/blank.txt" -> bytes(" \n\t "), "/up/raw.zip" -> bytes("zipzip"))
+    val mixedWant = Map("/up/new.txt" -> "ok", "/up/again.txt" -> "duplicate",
+      "/up/blank.txt" -> "no_content", "/up/raw.zip" -> "unsupported_type")
+
+    val six = engine.login("six@x.com")
+    // a new tenant: nothing to probe
+    val (first, _, _) = JobCount.withExecutions(spark)(engine.upload(six, Seq("/up/f1.txt" -> doc(1))).toOption.get)
+    // the counter sees executions: collecting the report is one, with no job
+    val (firstStatus, reportJobs, reportExecutions) =
+      JobCount.withExecutions(spark)(first.select("status").as[String].collect().toSeq)
+    assert(firstStatus == Seq("ok"))
+    assert(reportJobs == 0 && reportExecutions == 1,
+      s"collecting the report ran $reportJobs jobs and $reportExecutions executions")
+    assert(upload(six, (2 to 6).map(i => s"/up/f$i.txt" -> doc(i)), "a new tenant's upload")
+      .values.toSet == Set("ok"))
+    assert(upload(six, mixed, "a 6-file tenant's upload") == mixedWant)
+    // nothing accepted
+    assert(upload(six, Seq("/up/copy.txt" -> doc(1)), "an all-duplicate upload") ==
+      Map("/up/copy.txt" -> "duplicate"))
+
+    // 36 files: past the 32-path threshold at which Spark's listing of the
+    // tenant's directory becomes a job of its own
+    val big = engine.login("big@x.com")
+    assert(upload(big, (1 to 36).map(i => s"/up/f$i.txt" -> doc(i)), "a new tenant's upload")
+      .values.toSet == Set("ok"))
+    assert(upload(big, mixed, "a 36-file tenant's upload") == mixedWant)
+    assert(upload(big, Seq("/up/copy.txt" -> doc(36)), "an all-duplicate upload") ==
+      Map("/up/copy.txt" -> "duplicate"))
+    assert(engine.count() == 6 + 1 + 36 + 1)
+  }
+
+  /** Upload `name` under a directory, check its source against the bulk
+    * path's expression evaluated by Spark, then chat over it and delete
+    * it by its original spelling. */
+  private def roundTrip(name: String): Unit = {
+    import org.apache.spark.sql.functions.{col, element_at, lower, split}
+    val storeDir = tmpDir("engine").toString + "/chunks"
+    val chatDir = tmpDir("engine").toString + "/chat"
+    val engine = new Engine(spark, storeDir, chatDir, "s3cret", () => 1700000000L)
+    val user = "names@x.com"
+    val t = engine.login(user)
+    val path = "/up/Some=Dir%/" + name
+    val up = engine.upload(t, Seq(path -> bytes("the quokka warranty lasts seven years " + ("pad " * 40))))
+      .toOption.get.select("source", "status").as[(String, String)].head()
+    val want = Seq(path).toDF("path").select(lower(element_at(split(col("path"), "/"), -1)))
+      .as[String].head()
+    assert(up == (want, "ok"))
+    assert(ChunkStore.openUser(spark, storeDir, user).get.select("source").distinct()
+      .as[String].collect().toSeq == Seq(want))
+    assert(engine.chat(t, "how long is the quokka warranty?").toOption.get.contains("seven years"))
+    assert(engine.delete(t, name).toOption.get > 0)
+    assert(engine.count() == 0)
+  }
+
+  test("a filename with mixed case, % and = round-trips upload, chat and delete") {
+    roundTrip("Mixed CASE 100%=Done.TXT")
+  }
+
+  test("a filename with non-ASCII letters round-trips upload, chat and delete") {
+    val name = "Ünïcode ÇA Straße 100%=Déjà Vu.TXT"
+    // the source is a directory name: a JVM whose file-name charset cannot
+    // encode it (an ASCII locale) cannot store it as written
+    val nameCharset = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+    assume(nameCharset.newEncoder().canEncode(name), s"file names are encoded as $nameCharset")
+    roundTrip(name)
   }
 
   test("an upload reports and stores exactly what IngestPipeline.ingest and ChunkStore.append give") {

@@ -3,6 +3,9 @@ package org.apache.spark
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Counts the Spark jobs one call submits: every job its thread starts
   * carries a tag unique to the call (SparkContext.addJobTag), and a
@@ -33,5 +36,26 @@ object JobCount {
       sc.removeJobTag(tag)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** [[of]]'s job count, plus the SQL executions (a query's collect,
+    * count or write, with or without a job) that `spark` reports to a
+    * QueryExecutionListener while `f` runs. Executions are not filtered
+    * by thread: run `f` while no other thread queries the session. */
+  def withExecutions[A](spark: SparkSession)(f: => A): (A, Int, Int) = {
+    val executions = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    // deliver earlier executions' events before the listener joins
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+    spark.listenerManager.register(listener)
+    try {
+      val (a, jobs) = of(spark.sparkContext)(f)
+      (a, jobs, executions.get)
+    } finally spark.listenerManager.unregister(listener)
   }
 }
